@@ -11,9 +11,7 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
-      .getOrElse(32)
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     val names = SparkEntry.queries.keys.toSeq.sorted
     // Cache discipline: measure each query at steady state WITH its own
     // persisted intermediates warm, but never let caches leak across

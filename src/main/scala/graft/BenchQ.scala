@@ -1,7 +1,7 @@
 package graft
 object BenchQ {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(32)
+    val spark = GraftSession.local()
     val sf = args.lift(1).getOrElse("/root/testdata/sf0.1")
     (1 to 3).foreach { rep =>
       val t0 = System.nanoTime()

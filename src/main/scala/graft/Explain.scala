@@ -43,7 +43,7 @@ object Explain {
           .getOrCreate()
         s.sparkContext.setLogLevel("ERROR")
         s
-      } else GraftSession.local(32)
+      } else GraftSession.local()
     names.foreach { name =>
       println(s"\n========== $name ==========")
       try {

@@ -156,8 +156,7 @@ object GenData {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("data/sf1")
     val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = GraftSession.local(
-      sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).getOrElse(32))
+    val spark = GraftSession.local()
     Files.createDirectories(Paths.get(out))
     generate(spark, src, out)
     spark.stop()

@@ -18,8 +18,18 @@ import org.apache.spark.sql.SparkSession
   * - shuffle partitions default to the core count (overridable): right
   *   for one-node runs; clusters size it to executors × cores, with AQE
   *   coalescing from there.
+  * - `spark.hadoop.fs.file.impl=graft.io.NioLocalFileSystem`: without
+  *   the native Hadoop library, Hadoop's local filesystem forks a
+  *   `chmod` process for every part file, `.crc` file and directory a
+  *   write creates; this one sets the same permission bits in-process
+  *   and still writes and checks `.crc` files. It applies to `file:`
+  *   paths only.
   */
 object GraftSession {
+
+  /** The `file:` filesystem setting of engine sessions (see above). */
+  val localFileSystem: (String, String) =
+    "spark.hadoop.fs.file.impl" -> classOf[graft.io.NioLocalFileSystem].getName
 
   /** Builder preconfigured for this engine; call `.master(...)` /
     * further `.config(...)` then `.getOrCreate()`. */
@@ -42,6 +52,7 @@ object GraftSession {
       // shuffles still fan out to the advisory size.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
         "false")
+      .config(Map(localFileSystem))
       .withExtensions(new graft.functions.GraftExtensions)
   }
 
@@ -65,8 +76,13 @@ object GraftSession {
     System.gc()
   }
 
+  /** Cores for a local session: `SPARK_GRAFT_CPUS` when set, else the
+    * processors this JVM may use. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .flatMap(_.toIntOption).getOrElse(Runtime.getRuntime.availableProcessors())
+
   /** Local session sized like the driver harness (local[n], UI off). */
-  def local(cores: Int = 32): SparkSession = {
+  def local(cores: Int = defaultCores): SparkSession = {
     val s = builder(Some(cores))
       .master(s"local[$cores]")
       .config("spark.ui.enabled", "false")

@@ -15,8 +15,7 @@ object JobProbe {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q182_suffix_array")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = GraftSession.local(
-      sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).getOrElse(32))
+    val spark = GraftSession.local()
     val fn = SparkEntry.queries(name)
     // two warm passes: JIT + codegen caches
     fn(spark, sfDir).count()

@@ -21,7 +21,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(8)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.defaultCores.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -151,8 +151,7 @@ object ServeAtScale {
     val outJson =
       if (args.length > 1) args(1) else "target/serve_at_scale.json"
     val buckets = if (args.length > 2) args(2).toInt else 32
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local()
     val servingDir =
       s"/tmp/graft_serve/${new java.io.File(sfDir).getName}"
     val m = run(spark, sfDir, servingDir, buckets)

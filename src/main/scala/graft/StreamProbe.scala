@@ -17,8 +17,7 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = GraftSession.local(
-      sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).getOrElse(32))
+    val spark = GraftSession.local()
 
     def drain(tag: String, df: DataFrame, mode: String,
         noData: Boolean): Unit = {

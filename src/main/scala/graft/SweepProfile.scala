@@ -14,7 +14,7 @@ import org.apache.spark.storage.StorageLevel
 object SweepProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("data/sf1")
-    val spark = GraftSession.local(32)
+    val spark = GraftSession.local()
     import spark.implicits._
 
     def timed[T](label: String)(f: => T): T = {

@@ -10,8 +10,7 @@ object TimeOne {
   def main(args: Array[String]): Unit = {
     val names = args.headOption.getOrElse("q01_agg_pricing").split(',')
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = GraftSession.local(
-      sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).getOrElse(32))
+    val spark = GraftSession.local()
     for (name <- names) {
       val fn = SparkEntry.queries(name)
       def rep(): Double = {

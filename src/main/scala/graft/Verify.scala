@@ -61,9 +61,7 @@ object Verify {
     // iteration on a few queries without replaying the whole suite.
     // The driver always passes exactly two args (full run).
     val only = args.drop(2).headOption.map(_.split(',').toSeq)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
-      .getOrElse(32)
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.exists(name.startsWith))

@@ -28,10 +28,11 @@ final case class Revision(
   *
   * Spark shape: one zstd stream is not splittable, so one bundle file =
   * one task (matching the reference's process-per-file parallelism,
-  * build_all.py:125-129). `binaryFiles` hands each task a lazy
-  * `PortableDataStream`; decode is a streaming iterator — constant
-  * memory regardless of bundle size, which is what lets this run over
-  * thousands of multi-GB bundles on a cluster.
+  * build_all.py:125-129). [[read]] goes through the `mwrev` DataSource
+  * V2 ([[MwRevDataSource]]), which plans one input partition per
+  * bundle; decode is a streaming iterator — constant memory regardless
+  * of bundle size, which is what lets this run over thousands of
+  * multi-GB bundles on a cluster.
   */
 object MwRevZst {
 
@@ -43,12 +44,17 @@ object MwRevZst {
     * into a "successful" scan. Tests and ops dashboards read this. */
   val truncatedBundles = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** The revisions of every bundle matching `path` (a glob, or a
+    * directory of `.mwrev.zst` files), one task per bundle. */
   def read(spark: SparkSession, path: String): Dataset[Revision] = {
     import spark.implicits._
-    spark.sparkContext
-      .binaryFiles(path)
-      .flatMap { case (file, pds) => parse(pds.open(), file) }
-      .toDS()
+    spark.read.format("mwrev").load(path).select(
+      $"page_id".as("pageId"),
+      $"namespace_id".as("namespaceId"),
+      $"revision_id".as("revisionId"),
+      $"parent_revision_id".as("parentRevisionId"),
+      $"revision_timestamp".as("revisionTimestamp"),
+      $"revision_text".as("revisionText")).as[Revision]
   }
 
   /** Streaming parse of one decompressed bundle. `source` labels the

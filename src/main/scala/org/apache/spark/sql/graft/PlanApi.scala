@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
@@ -34,7 +36,10 @@ object PlanApi {
     * single-directory corpus uses). The scale signal for sizing
     * state-store partitions to the DRAIN, not to a constant: listing is
     * one directory stat per source, which the stream's own start pays
-    * anyway. None when the plan has no file source or listing fails. */
+    * anyway. None when the plan has no file source or listing fails,
+    * for any reason: a malformed path (`IllegalArgumentException` from
+    * `Path`) as much as an I/O error. The caller then keeps its default
+    * fan-out, so sizing never fails a drain. */
   def streamingSourceBytes(df: DataFrame): Option[Long] = {
     import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
     val hconf = df.sparkSession.sessionState.newHadoopConf()
@@ -44,7 +49,9 @@ object PlanApi {
           val glob = sr.dataSource.options.get("pathGlobFilter")
           val matcher = glob.map(g => java.nio.file.FileSystems.getDefault
             .getPathMatcher("glob:" + g))
-          Some(sr.dataSource.paths.map { p =>
+          // `readStream.load(path)` passes its path as an option.
+          val paths = sr.dataSource.paths ++ sr.dataSource.options.get("path")
+          Some(paths.map { p =>
             val path = new org.apache.hadoop.fs.Path(p)
             val fs = path.getFileSystem(hconf)
             fs.listStatus(path).iterator
@@ -52,7 +59,7 @@ object PlanApi {
                 java.nio.file.Paths.get(st.getPath.getName))))
               .map(_.getLen).sum
           }.sum)
-        } catch { case _: java.io.IOException => None }
+        } catch { case NonFatal(_) => None }
     }
     if (sizes.isEmpty || sizes.exists(_.isEmpty)) None
     else Some(sizes.flatten.sum)

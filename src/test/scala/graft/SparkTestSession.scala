@@ -29,6 +29,7 @@ object SparkTestSession {
       .config("spark.sql.shuffle.partitions", defaultShufflePartitions)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
+      .config(Map(GraftSession.localFileSystem))
       .withExtensions(new graft.functions.GraftExtensions)
       .appName("graft-test-shared")
       .getOrCreate()

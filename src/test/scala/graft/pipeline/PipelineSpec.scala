@@ -381,13 +381,18 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getAs[Long]("revision_id") == 1001L)
     assert(r.getAs[String]("revision_timestamp") == "2020-01-01 00:00:00")
     assert(r.getAs[String]("revision_text").contains("<ref name=a>"))
-    // Parity with the mapPartitions source.
-    val v1 = MwRevZst.read(spark, s"$bundleDir/*.mwrev.zst")
-      .select("revisionId", "pageId").collect()
-      .map(x => (x.getLong(0), x.getInt(1))).toSet
-    val v2 = df.select("revision_id", "page_id").collect()
-      .map(x => (x.getLong(0), x.getInt(1))).toSet
-    assert(v1 == v2)
+    // MwRevZst.read runs on this source: one partition (one task) per
+    // bundle file, however small the bundles are.
+    val dir = Files.createTempDirectory("mwrev-bundles").toFile
+    for (i <- 1 to 3) {
+      val out = new FileOutputStream(new java.io.File(dir, s"b$i.mwrev.zst"))
+      out.write(zstBytes(bundleText.replace("rev_id=", s"rev_id=$i")))
+      out.close()
+    }
+    val revs = MwRevZst.read(spark, s"$dir/*.mwrev.zst")
+    assert(revs.rdd.getNumPartitions == 3)
+    assert(revs.collect().map(_.revisionId).sorted.toSeq ==
+      (1 to 3).flatMap(i => Seq(1001, 1002, 1003, 2001).map(r => s"$i$r".toLong)))
   }
 
   test("DataSource V2: column pruning skips text accumulation") {
