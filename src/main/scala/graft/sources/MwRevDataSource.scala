@@ -4,6 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.sql.catalyst.InternalRow
@@ -47,6 +48,23 @@ object MwRevDataSource {
     StructField("parent_revision_id", LongType),
     StructField("revision_timestamp", StringType),
     StructField("revision_text", StringType)))
+
+  /** The bundle files `path` names, sorted: the files a glob matches,
+    * with each matched directory replaced by its `.mwrev.zst` files.
+    * Empty when nothing matches (a streaming source may start before
+    * its first bundle arrives). */
+  def bundleFiles(path: String, conf: Configuration): Seq[String] = {
+    val p = new Path(path)
+    val fs = FileSystem.get(p.toUri, conf)
+    val statuses = Option(fs.globStatus(p))
+      .map(_.toSeq).getOrElse(Seq.empty)
+    statuses.flatMap { st =>
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).toSeq
+          .filter(s => s.isFile && s.getPath.getName.endsWith(".mwrev.zst"))
+      else Seq(st)
+    }.map(_.getPath.toString).sorted
+  }
 }
 
 private class MwRevTable(properties: Map[String, String])
@@ -95,18 +113,8 @@ private class MwRevScan(
 
   override def toBatch: Batch = this
 
-  private[sources] def listFiles(): Seq[String] = {
-    val p = new Path(path)
-    val fs = FileSystem.get(p.toUri, conf.value)
-    val statuses = Option(fs.globStatus(p))
-      .map(_.toSeq).getOrElse(Seq.empty)
-    statuses.flatMap { st =>
-      if (st.isDirectory)
-        fs.listStatus(st.getPath).toSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".mwrev.zst"))
-      else Seq(st)
-    }.map(_.getPath.toString).sorted
-  }
+  private[sources] def listFiles(): Seq[String] =
+    MwRevDataSource.bundleFiles(path, conf.value)
 
   override def planInputPartitions(): Array[InputPartition] =
     listFiles().map(f => MwRevPartition(f): InputPartition).toArray

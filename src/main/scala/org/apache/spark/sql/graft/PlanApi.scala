@@ -49,9 +49,7 @@ object PlanApi {
           val glob = sr.dataSource.options.get("pathGlobFilter")
           val matcher = glob.map(g => java.nio.file.FileSystems.getDefault
             .getPathMatcher("glob:" + g))
-          // `readStream.load(path)` passes its path as an option.
-          val paths = sr.dataSource.paths ++ sr.dataSource.options.get("path")
-          Some(paths.map { p =>
+          Some(sr.dataSource.paths.map { p =>
             val path = new org.apache.hadoop.fs.Path(p)
             val fs = path.getFileSystem(hconf)
             fs.listStatus(path).iterator

@@ -309,6 +309,28 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!new java.io.File(s"$out/_staged_refs").exists())
   }
 
+  test("a bundle glob that matches nothing fails the build, not the tables") {
+    val out = Files.createTempDirectory("graft-build").toFile.getAbsolutePath
+    CitationPipeline.build(spark, s"$bundleDir/*.mwrev.zst", out)
+    val before = spark.read.parquet(s"$out/revisions").count()
+    val empty = Files.createTempDirectory("no-bundles").toFile.getAbsolutePath
+    Seq(s"$empty/*.mwrev.zst", empty, s"$empty/missing").foreach { path =>
+      intercept[IllegalArgumentException](MwRevZst.read(spark, path))
+    }
+    intercept[IllegalArgumentException] {
+      CitationPipeline.build(spark, s"$empty/*.mwrev.zst", out)
+    }
+    // the published tables are the last good build's
+    assert(spark.read.parquet(s"$out/revisions").count() == before)
+    // the streaming source may still start on an empty directory
+    val q = spark.readStream.format("mwrev").load(empty)
+      .writeStream.outputMode("append").format("memory")
+      .queryName("mwrev_empty_stream")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(spark.table("mwrev_empty_stream").count() == 0)
+  }
+
   test("pipeline output: serving join J2/J9 is Exchange-free " +
     "(bucket contract, not just the BucketingSpec demo)") {
     val out =
@@ -381,18 +403,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getAs[Long]("revision_id") == 1001L)
     assert(r.getAs[String]("revision_timestamp") == "2020-01-01 00:00:00")
     assert(r.getAs[String]("revision_text").contains("<ref name=a>"))
-    // MwRevZst.read runs on this source: one partition (one task) per
-    // bundle file, however small the bundles are.
-    val dir = Files.createTempDirectory("mwrev-bundles").toFile
-    for (i <- 1 to 3) {
-      val out = new FileOutputStream(new java.io.File(dir, s"b$i.mwrev.zst"))
-      out.write(zstBytes(bundleText.replace("rev_id=", s"rev_id=$i")))
-      out.close()
-    }
-    val revs = MwRevZst.read(spark, s"$dir/*.mwrev.zst")
-    assert(revs.rdd.getNumPartitions == 3)
-    assert(revs.collect().map(_.revisionId).sorted.toSeq ==
-      (1 to 3).flatMap(i => Seq(1001, 1002, 1003, 2001).map(r => s"$i$r".toLong)))
+    // Parity with the mapPartitions source.
+    val v1 = MwRevZst.read(spark, s"$bundleDir/*.mwrev.zst")
+      .select("revisionId", "pageId").collect()
+      .map(x => (x.getLong(0), x.getInt(1))).toSet
+    val v2 = df.select("revision_id", "page_id").collect()
+      .map(x => (x.getLong(0), x.getInt(1))).toSet
+    assert(v1 == v2)
   }
 
   test("DataSource V2: column pruning skips text accumulation") {

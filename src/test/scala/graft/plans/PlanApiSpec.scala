@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.DataSource
@@ -18,15 +16,6 @@ class PlanApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = graft.SparkTestSession.cleanup()
 
   private val schema = StructType(Seq(StructField("x", LongType)))
-
-  test("streamingSourceBytes sums the source's glob-filtered files") {
-    val dir = Files.createTempDirectory("plan-api").toFile
-    Files.write(new java.io.File(dir, "events.parquet").toPath, new Array[Byte](100))
-    Files.write(new java.io.File(dir, "other.parquet").toPath, new Array[Byte](7))
-    val df = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir.getAbsolutePath)
-    assert(PlanApi.streamingSourceBytes(df).contains(100L))
-  }
 
   test("streamingSourceBytes is None for a malformed source path") {
     // `readStream` itself would reject the path, so the relation is built
