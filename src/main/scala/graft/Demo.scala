@@ -5,7 +5,6 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
 import com.github.luben.zstd.ZstdOutputStream
-import org.apache.spark.sql.SparkSession
 
 import graft.pipeline.{CitationPipeline, Resolve}
 import graft.queries.CitationQueries
@@ -20,13 +19,7 @@ import graft.queries.CitationQueries
 object Demo {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     // The FIXTURES.md §B bundle: 2 pages, 4 revisions, a shared ref, an

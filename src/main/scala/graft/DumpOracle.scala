@@ -10,13 +10,17 @@ import java.nio.file.{Files, Paths}
   * /tmp/verify_out/oracle_sql.json; this closes that gap).
   *
   * Usage: runMain graft.DumpOracle [outPath=target/oracle_sql.json] [sfDir]
-  * Keys are emitted under BOTH `name` and `name.parquet`, exactly like
-  * graft.Verify, so either consumer contract holds. The optional sfDir
+  * `json` is also what graft.Verify writes. The optional sfDir
   * points the staged-table oracles (q46/q47/q74) at that scale's
   * staging root — the staged parquet itself must already exist (a
   * Bench or Verify run over the same dir writes it).
   */
 object DumpOracle {
+  /** Every oracle under BOTH the bare query name and the result-directory
+    * name ("<name>.parquet"): the driver keys its lookup by directory
+    * name, local tooling by bare name. Dual keys satisfy either contract
+    * (round-1 driver run missed all 79 oracles on exactly this
+    * mismatch). */
   def json: String = SparkEntry.oracleSql
     .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }
     .toSeq.sortBy(_._1)

@@ -72,16 +72,7 @@ object Verify {
       // builders persist, harness boundaries release.
       GraftSession.releaseQueryCaches(spark)
     }
-    // Emit every oracle under BOTH the bare query name and the
-    // result-directory name ("<name>.parquet"): the driver keys its
-    // lookup by directory name, local tooling by bare name. Dual keys
-    // satisfy either contract (round-1 driver run missed all 79 oracles
-    // on exactly this mismatch).
-    val json = SparkEntry.oracleSql
-      .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }
-      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), DumpOracle.json)
     spark.stop()
   }
 }

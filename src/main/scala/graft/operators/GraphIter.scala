@@ -6,9 +6,8 @@ import org.apache.spark.storage.StorageLevel
 
 /** Shared round-driver for the engine's iterative graph/rank loops
   * (PageRank q119, personalized PageRank q256, BFS q187, label
-  * propagation q194, k-core peel q199, and the ScaleProbe round
-  * probes). One place owns the three disciplines every such loop
-  * needs at depth:
+  * propagation q194, k-core peel q199). One place owns the three
+  * disciplines every such loop needs at depth:
   *
   *  1. **Lineage truncation.** Every `checkpointEvery`-th round is
   *     eagerly `localCheckpoint`-ed, replacing the accumulated plan

@@ -50,8 +50,8 @@ object GraphOps {
     // resize = false (r12): the FIXED-round variant chains all rounds
     // into ONE caller action — the resize below spent two extra driver
     // actions (count + re-persist count, ~1.0 s of q139's 2.5 s wall
-    // in JobProbe: two 1-task jobs plus their planning gaps) to shave
-    // near-empty tasks off stages that all live inside that single
+    // measured per job: two 1-task jobs plus their planning gaps) to
+    // shave near-empty tasks off stages that all live inside that single
     // job. The convergence loop is the opposite trade: it re-scans the
     // cache once per probed round as its own job, so the small-graph
     // task floor dominates there and the resize stays (it also needs

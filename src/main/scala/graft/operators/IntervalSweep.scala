@@ -47,12 +47,8 @@ object IntervalSweep {
 
   /** Per-partition endpoint sweep over rows (u, s, e, rng, isNew)
     * sorted by (rng, s, u), emitting one primitive (packed u1·2^32+u2,
-    * overlap_ns) tuple per qualifying island pair. Shared by
-    * `overlapPairs` and the SweepProfile stage profiler so the profiled
-    * algorithm is BY CONSTRUCTION the shipped one (the profiler used to
-    * carry an inline copy, which had already drifted by dropping the
-    * 2^31 packed-key guard). */
-  def sweepPartition(rows: Iterator[org.apache.spark.sql.Row],
+    * overlap_ns) tuple per qualifying island pair. */
+  private def sweepPartition(rows: Iterator[org.apache.spark.sql.Row],
       probeMod: Long): Iterator[(Long, Long)] = {
     // Per-range sweep state; a hash-partition may hold several
     // ranges — state resets when rng changes (rows sorted by rng).
@@ -124,9 +120,8 @@ object IntervalSweep {
 
   /** Per-reduce-partition primitive fold of (packed pair, overlap)
     * emissions into (packed pair, n_overlaps, overlap_ns) — the
-    * LongMap keeps keys unboxed and each cell two longs. Shared with
-    * SweepProfile for the same no-drift reason as `sweepPartition`. */
-  def foldPairPartition(it: Iterator[org.apache.spark.sql.Row])
+    * LongMap keeps keys unboxed and each cell two longs. */
+  private def foldPairPartition(it: Iterator[org.apache.spark.sql.Row])
       : Iterator[(Long, Long, Long)] = {
     val acc = new scala.collection.mutable.LongMap[Array[Long]]()
     while (it.hasNext) {

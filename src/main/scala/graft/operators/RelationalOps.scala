@@ -379,8 +379,7 @@ object RelationalOps {
       // scans + a broadcast combine with the SAME bit-identical
       // output. Skew-salting MECHANICS (the explode-replicate build +
       // shuffle_hash pair join, for joins whose per-pair payload can't
-      // factorize) stay demonstrated in ScaleProbe's salted probes and
-      // q57's salted aggregation.
+      // factorize) stay demonstrated in q57's salted aggregation.
       val left = table(s, d, "lineitem")
         .filter(col("l_returnflag") === "R")
         .groupBy(pmod(col("l_partkey"), lit(50)).as("k"))

@@ -1283,8 +1283,8 @@ object TextOps {
     // per document group exactly like this deterministic doc_id slice.
     "q182_suffix_array" -> ((s, d) => {
       // fixed 10-doc slice at every sf (q46-style): the driver gate
-      // checks exactness; the corpus-scaling behavior of this shape is
-      // ScaleProbe's "suffix_array" probe, where content is scaled 8x
+      // checks exactness; the slice keeps the per-character rounds
+      // bounded while the corpus grows
       val docs = table(s, d, "documents")
         .filter(col("doc_id") < 500 &&
           pmod(col("doc_id"), lit(50)) === 0 && length(col("text")) > 0)

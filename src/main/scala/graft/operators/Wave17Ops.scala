@@ -34,8 +34,9 @@ object Wave17Ops {
     // property that makes rendezvous the right assignment for 100 TB
     // shard growth, demonstrated against mod-hash's near-total reshuffle.
     // The explode is |docs| × 20 tiny rows with map-side max_by combine.
-    // (PlanSweep: the two SinglePartition exchanges are the 1-row global
-    // aggregates merging 32 map-side partials — bounded by design.)
+    // (The two SinglePartition exchanges in the executed plan are the
+    // 1-row global aggregates merging the map-side partials — bounded by
+    // design.)
     "q207_shard_rebalance" -> ((s, d) => {
       val docs = table(s, d, "documents").select("doc_id")
       val h = conv(substring(md5(col("doc_id").cast("string")), 1, 13),

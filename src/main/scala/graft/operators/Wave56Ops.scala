@@ -30,7 +30,7 @@ object Wave56Ops {
     // an equi join on user_id with the time window as the join
     // residual — Spark plans the anti as one shuffle on user_id with
     // per-user merge, never a cartesian (user histories bound the
-    // pair work; PlanSweep's no-BNLJ gate covers it). The same shape
+    // pair work, and the executed plan has no BNLJ). The same shape
     // expresses any "A not followed by B within d" CEP rule. Output:
     // per event-time day, views, abandoned views, and the abandonment
     // rate in floored ppm.

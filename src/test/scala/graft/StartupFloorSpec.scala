@@ -5,6 +5,9 @@ import java.net.URI
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.PosixFilePermissions
 
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumException, FileSystem, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -15,7 +18,9 @@ import graft.io.NioLocalFileSystem
 
 /** The two start-up and write costs the engine's JVMs leave out: the
   * MLlib family on the class path, and a `chmod` fork per file that
-  * Hadoop's local filesystem writes. */
+  * Hadoop's local filesystem writes. Also that every main builds its
+  * session through `GraftSession`, the factory that sets the filesystem
+  * and the engine's other settings. */
 class StartupFloorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkTestSession.spark
@@ -108,5 +113,17 @@ class StartupFloorSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (c <- Seq("org.apache.spark.ml.Estimator",
         "org.apache.spark.sql.ml.InternalFunctionRegistration", "breeze.linalg.DenseVector"))
       intercept[ClassNotFoundException](Class.forName(c))
+  }
+
+  test("only GraftSession builds a SparkSession in the main sources") {
+    // Every main opens its session through GraftSession.local, so the
+    // engine's settings hold for every plan a main prints or runs.
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), root.toAbsolutePath)
+    val callers = Using.resource(Files.walk(root))(_.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        Files.readString(p).contains("SparkSession.builder()"))
+      .map(_.getFileName.toString).toSet)
+    assert(callers == Set("GraftSession.scala"))
   }
 }

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Scale-regression gate on the committed sf0.1->sf1 ratio table.
 
-Round 7's lesson: ScaleProbe's synthetic 8x ceiling passed the
+Round 7's lesson: a synthetic 8x operator probe's ceiling passed the
 `matching_scan` shape while the same plan blew 24x at sf1 — wall-clock
 at a real 10x corpus catches what bounded probes miss. So the per-query
 sf1 ratio table is itself a committed regression input: re-run at each

@@ -3,7 +3,7 @@
 sf1): reads the per-query maps, emits a markdown table sorted by ratio
 desc plus a summary, and flags queries whose growth exceeds the linear
 ceiling (data grew `factor`×, so time growing past `ceiling`× signals a
-superlinear stage — the same rule ScaleProbe applies at 8×).
+superlinear stage).
 
 Usage:
   python3 tools/scale_ratio.py small.json big.json [factor=10] [out.md]
@@ -29,7 +29,7 @@ def main():
     small_p, big_p = sys.argv[1], sys.argv[2]
     factor = float(sys.argv[3]) if len(sys.argv) > 3 else 10.0
     out_p = sys.argv[4] if len(sys.argv) > 4 else None
-    ceiling = factor * 1.2  # linear + 20% headroom (ScaleProbe's rule at 8x)
+    ceiling = factor * 1.2  # linear + 20% headroom
     small, big = qmap(small_p), qmap(big_p)
     common = sorted(set(small) & set(big))
     rows = []
