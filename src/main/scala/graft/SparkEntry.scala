@@ -17,75 +17,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RelationalOps.queries("q01_agg_pricing")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalOps.queries ++ TextOps.queries ++ VectorOps.queries ++
-      GraphOps.queries ++ MultimodalOps.queries ++ WikitextOps.queries ++
-      AnalyticsOps.queries ++ AuditOps.queries ++ Wave8Ops.queries ++
-      Wave13Ops.queries ++ Wave14Ops.queries ++ Wave15Ops.queries ++
-      Wave16Ops.queries ++ Wave17Ops.queries ++ Wave18Ops.queries ++
-      Wave19Ops.queries ++ Wave20Ops.queries ++ Wave21Ops.queries ++
-      Wave22Ops.queries ++ Wave23Ops.queries ++ Wave24Ops.queries ++
-      Wave25Ops.queries ++ Wave26Ops.queries ++ Wave27Ops.queries ++
-      Wave28Ops.queries ++ Wave29Ops.queries ++ Wave30Ops.queries ++
-      Wave31Ops.queries ++ Wave32Ops.queries ++ Wave33Ops.queries ++
-      Wave34Ops.queries ++ Wave35Ops.queries ++ Wave36Ops.queries ++
-      Wave37Ops.queries ++ Wave38Ops.queries ++ Wave39Ops.queries ++
-      Wave40Ops.queries ++ Wave41Ops.queries ++ Wave42Ops.queries ++
-      Wave43Ops.queries ++ Wave44Ops.queries ++ Wave45Ops.queries ++
-      Wave46Ops.queries ++ Wave47Ops.queries ++ Wave48Ops.queries ++
-      Wave49Ops.queries ++ Wave50Ops.queries ++ Wave51Ops.queries ++
-      Wave52Ops.queries ++ Wave53Ops.queries ++ Wave54Ops.queries ++
-      Wave55Ops.queries ++ Wave56Ops.queries ++ Wave57Ops.queries ++
-      Wave58Ops.queries ++ Wave59Ops.queries ++ Wave60Ops.queries ++
-      Wave61Ops.queries ++ Wave62Ops.queries ++ Wave63Ops.queries ++
-      Wave64Ops.queries ++ Wave65Ops.queries ++ Wave66Ops.queries ++
-      Wave67Ops.queries ++ Wave68Ops.queries ++ Wave69Ops.queries ++
-      Wave70Ops.queries ++ Wave71Ops.queries ++ Wave72Ops.queries ++
-      Wave73Ops.queries ++ Wave74Ops.queries ++ Wave75Ops.queries ++
-      Wave76Ops.queries ++ Wave77Ops.queries ++ Wave78Ops.queries ++
-      Wave79Ops.queries ++ Wave80Ops.queries ++ Wave81Ops.queries ++
-      Wave82Ops.queries ++ Wave83Ops.queries ++ Wave84Ops.queries ++
-      Wave85Ops.queries ++ Wave86Ops.queries ++ Wave87Ops.queries ++
-      Wave88Ops.queries ++ Wave89Ops.queries ++ Wave90Ops.queries ++
-      Wave91Ops.queries ++ Wave92Ops.queries ++ Wave93Ops.queries ++
-      Wave94Ops.queries ++ Wave95Ops.queries ++ Wave96Ops.queries ++
-      Wave97Ops.queries ++ Wave98Ops.queries ++ Wave99Ops.queries ++
-      Wave100Ops.queries ++
-      graft.streaming.StreamingOps.queries
+  /** Every query module, each named once. */
+  private val modules: Seq[QueryModule] = Seq(
+    RelationalOps, TextOps, DedupOps, VectorOps, GraphOps, MultimodalOps,
+    WikitextOps, AnalyticsOps, AuditOps, EvalOps, ExperimentOps, StatsOps,
+    LayoutOps, graft.streaming.StreamingOps)
 
+  /** Built once; fails at start-up if two modules register one name. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    QueryModule.registry(modules.map(_.queries))
+
+  /** Rebuilt on every call: `WikitextOps.oracle` follows the staged-table
+    * root, which `WikitextOps.staged` and `pointOracleAt` move at run time. */
   def oracleSql: Map[String, String] =
-    RelationalOps.oracle ++ TextOps.oracle ++ VectorOps.oracle ++
-      GraphOps.oracle ++ MultimodalOps.oracle ++ WikitextOps.oracle ++
-      AnalyticsOps.oracle ++ AuditOps.oracle ++ Wave8Ops.oracle ++
-      Wave13Ops.oracle ++ Wave14Ops.oracle ++ Wave15Ops.oracle ++
-      Wave16Ops.oracle ++ Wave17Ops.oracle ++ Wave18Ops.oracle ++
-      Wave19Ops.oracle ++ Wave20Ops.oracle ++ Wave21Ops.oracle ++
-      Wave22Ops.oracle ++ Wave23Ops.oracle ++ Wave24Ops.oracle ++
-      Wave25Ops.oracle ++ Wave26Ops.oracle ++ Wave27Ops.oracle ++
-      Wave28Ops.oracle ++ Wave29Ops.oracle ++ Wave30Ops.oracle ++
-      Wave31Ops.oracle ++ Wave32Ops.oracle ++ Wave33Ops.oracle ++
-      Wave34Ops.oracle ++ Wave35Ops.oracle ++ Wave36Ops.oracle ++
-      Wave37Ops.oracle ++ Wave38Ops.oracle ++ Wave39Ops.oracle ++
-      Wave40Ops.oracle ++ Wave41Ops.oracle ++ Wave42Ops.oracle ++
-      Wave43Ops.oracle ++ Wave44Ops.oracle ++ Wave45Ops.oracle ++
-      Wave46Ops.oracle ++ Wave47Ops.oracle ++ Wave48Ops.oracle ++
-      Wave49Ops.oracle ++ Wave50Ops.oracle ++ Wave51Ops.oracle ++
-      Wave52Ops.oracle ++ Wave53Ops.oracle ++ Wave54Ops.oracle ++
-      Wave55Ops.oracle ++ Wave56Ops.oracle ++ Wave57Ops.oracle ++
-      Wave58Ops.oracle ++ Wave59Ops.oracle ++ Wave60Ops.oracle ++
-      Wave61Ops.oracle ++ Wave62Ops.oracle ++ Wave63Ops.oracle ++
-      Wave64Ops.oracle ++ Wave65Ops.oracle ++ Wave66Ops.oracle ++
-      Wave67Ops.oracle ++ Wave68Ops.oracle ++ Wave69Ops.oracle ++
-      Wave70Ops.oracle ++ Wave71Ops.oracle ++ Wave72Ops.oracle ++
-      Wave73Ops.oracle ++ Wave74Ops.oracle ++ Wave75Ops.oracle ++
-      Wave76Ops.oracle ++ Wave77Ops.oracle ++ Wave78Ops.oracle ++
-      Wave79Ops.oracle ++ Wave80Ops.oracle ++ Wave81Ops.oracle ++
-      Wave82Ops.oracle ++ Wave83Ops.oracle ++ Wave84Ops.oracle ++
-      Wave85Ops.oracle ++ Wave86Ops.oracle ++ Wave87Ops.oracle ++
-      Wave88Ops.oracle ++ Wave89Ops.oracle ++ Wave90Ops.oracle ++
-      Wave91Ops.oracle ++ Wave92Ops.oracle ++ Wave93Ops.oracle ++
-      Wave94Ops.oracle ++ Wave95Ops.oracle ++ Wave96Ops.oracle ++
-      Wave97Ops.oracle ++ Wave98Ops.oracle ++ Wave99Ops.oracle ++
-      Wave100Ops.oracle ++
-      graft.streaming.StreamingOps.oracle
+    QueryModule.registry(modules.map(_.oracle))
 }

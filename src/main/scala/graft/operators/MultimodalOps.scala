@@ -17,9 +17,7 @@ import graft.Tables.table
   * payload bytes. The Spark-side contract (binary column + struct
   * metadata + mapPartitions batch processing) is real and tested.
   */
-object MultimodalOps {
-
-  type Q = (SparkSession, String) => DataFrame
+object MultimodalOps extends QueryModule {
 
   /** Assets table synthesized from documents: payload = utf-8 bytes. */
   def assets(s: SparkSession, d: String): DataFrame =

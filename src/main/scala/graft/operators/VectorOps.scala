@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables.table
 
@@ -17,10 +17,7 @@ import graft.Tables.table
   * side, so at cluster scale it's a map-only pass over the big table
   * followed by a TakeOrdered — no shuffle of the embedding data.
   */
-object VectorOps {
-
-  type Q = (SparkSession, String) => DataFrame
-
+object VectorOps extends QueryModule {
   /** Sequential double dot product of two float arrays via the native
     * codegen'd ArrayDot expression (graft.functions) — bit-identical to
     * the `aggregate(zip_with(...))` formulation it replaces, minus the
@@ -30,11 +27,19 @@ object VectorOps {
 
   private def norm(a: String): Column = sqrt(dot(a, a))
 
-  /** Queries using `dot`/`norm` must run on a session with array_dot
-    * registered; registration is idempotent. */
-  private def withFns(s: SparkSession): SparkSession = {
-    graft.functions.GraftFunctions.register(s); s
-  }
+  private val Ks = Seq(2, 4, 6, 8, 10)
+
+  /** Plane j's 64 signs; sign(i,j) = +1 iff md5("i:j")[0] < '8' (the
+    * q112 hash-seeded plane recipe — same constants land as literals in
+    * the DuckDB oracle). */
+  private def planeSigns(j: Int): Seq[Float] =
+    (0 until 64).map(i =>
+      if (md5Hex(s"$i:$j").charAt(0) < '8') 1.0f else -1.0f)
+
+  private def fdot(a: Column, b: Column): Column =
+    call_function("array_dot", a, b)
+
+  private val NPlanes = 12 // enough bits for ~512k-vector corpora
 
   val queries: Map[String, Q] = lshQueries ++ Map(
     // ---- int8 embedding quantization -----------------------------------
@@ -397,8 +402,325 @@ object VectorOps {
             (norm("img_vec") * norm("cap_vec")), 6))
         .filter(col("clip_score") >= 0.05)
         .select(col("vec_id"), col("label"), col("clip_score"))
-    })
-  )
+    }),
+
+    // ---- q209: per-group centroids + pairwise centroid products --------
+    // q209 per-group embedding centroids + pairwise centroid products:
+    // element-wise vector aggregation as a relational shape (explode →
+    // (group, dim) partial sums → dim-keyed pair join), all integer
+    // milli-units so cross-engine hashes are exact.
+    // Element-wise vector aggregation as a relational shape: explode the
+    // 64-dim vectors to (label, dim, milli-value), partial-sum per
+    // (label, dim) — the shuffle carries |labels|·dims longs, not
+    // vectors — then ONE dim-keyed join builds every pairwise centroid
+    // dot product. Output is exact integers (summed milli-units): dot
+    // and the two norm² values, from which cosine(centroid_a,
+    // centroid_b) = dot/(n_a·n_b) ÷ (|sv_a|/n_a · |sv_b|/n_b) follows —
+    // emitted unreduced so the gate hashes exact values, not last-ulp
+    // doubles. The source-drift complement of q104's per-vector
+    // outliers and q109's token-space drift.
+    "q209_centroid_products" -> ((s, d) => {
+      val e = table(s, d, "embeddings")
+        .select(col("label"), posexplode(col("embedding")))
+        .select(col("label"), col("pos").as("i"),
+          floor(col("col").cast("double") * 1000).cast("long").as("v"))
+      val cent = e.groupBy("label", "i")
+        .agg(sum("v").as("sv"), count(lit(1)).as("n"))
+      val norms = cent.groupBy("label")
+        .agg(sum(col("sv") * col("sv")).as("norm2"), min("n").as("n"))
+      val a = cent.select(col("label").as("label_a"), col("i"),
+        col("sv").as("sv_a"))
+      val b = cent.select(col("label").as("label_b"), col("i"),
+        col("sv").as("sv_b"))
+      a.join(b, Seq("i"))
+        .filter(col("label_a") < col("label_b"))
+        .groupBy("label_a", "label_b")
+        .agg(sum(col("sv_a") * col("sv_b")).as("dot_milli2"))
+        .join(norms.select(col("label").as("label_a"),
+          col("norm2").as("norm2_a"), col("n").as("n_a")), "label_a")
+        .join(norms.select(col("label").as("label_b"),
+          col("norm2").as("norm2_b"), col("n").as("n_b")), "label_b")
+        .select("label_a", "label_b", "dot_milli2",
+          "norm2_a", "norm2_b", "n_a", "n_b")
+    }),
+
+    // ---- q264: embedding centroid drift between snapshot halves --------
+    // q264 embedding drift: per-label centroid direction agreement
+    // between the two vec_id-parity halves of the corpus — the
+    // "did my embedding distribution move" monitor between two
+    // snapshots, exact integer sums with one rounded-double cosine.
+    // q209's per-dimension integer-sum idiom, split by vec_id parity
+    // instead of across labels: per (label, half, dim) milli-unit
+    // sums, one dim-keyed self-join, and the centroid direction
+    // agreement cos = dot/√(n0²·n1²) as the single rounded double
+    // (identical IEEE ops both engines — the norms-product sqrt runs
+    // in DOUBLE because its integer value can exceed 2^63). A healthy
+    // pipeline shows cos ≈ 1 per label; a drop flags drift in that
+    // label's embedding distribution.
+    "q264_embedding_drift" -> ((s, d) => {
+      val e = table(s, d, "embeddings")
+        .select(col("label").cast("long").as("label"),
+          (col("vec_id") % 2).cast("long").as("half"),
+          posexplode(col("embedding")))
+        .select(col("label"), col("half"), col("pos").as("i"),
+          floor(col("col").cast("double") * 1000).cast("long").as("v"))
+      val cent = e.groupBy("label", "half", "i")
+        .agg(sum("v").as("sv"), count(lit(1)).as("n"))
+      val h0 = cent.filter(col("half") === 0)
+        .select(col("label"), col("i"), col("sv").as("s0"),
+          col("n").as("n0"))
+      val h1 = cent.filter(col("half") === 1)
+        .select(col("label"), col("i"), col("sv").as("s1"),
+          col("n").as("n1"))
+      h0.join(h1, Seq("label", "i"))
+        .groupBy("label")
+        .agg(min("n0").as("n0"), min("n1").as("n1"),
+          sum(expr("s0 * s1")).as("dot_milli2"),
+          sum(expr("s0 * s0")).as("norm2_0"),
+          sum(expr("s1 * s1")).as("norm2_1"))
+        .select(col("label"), col("n0"), col("n1"), col("dot_milli2"),
+          round(col("dot_milli2").cast("double") /
+            sqrt(col("norm2_0").cast("double") *
+              col("norm2_1").cast("double")), 6).as("cos_r"))
+    }),
+
+    // The k-selection sweep — the decision step ABOVE
+    // the IVF/k-means machinery (q85/q86 build and search a fixed k=10
+    // index; this picks k).
+    //
+    // For k ∈ {2,4,6,8,10}: deterministic seed centroids (per-(label
+    // mod k) cell means — the same seeded-init family the IVF build
+    // uses), one assignment pass, and the total within-cluster squared
+    // distance (inertia) in exact micro units. The knee is found with
+    // the chord rule (Kneedle's discrete form): the k maximizing the
+    // |cross product| distance from the line joining the curve's
+    // endpoints — pure integer arithmetic, so both engines agree on the
+    // chosen k exactly.
+
+    // ---- q308: elbow sweep over k --------------------------------------
+    // Each k costs one broadcast-centroid scoring pass over the
+    // embeddings (the q282/q85 map-only shape: P·n scored rows never
+    // shuffle; argmin is a combinable min-of-struct) plus a scalar
+    // inertia sum — 5 linear passes total, no quadratic stage.
+    // d² = round(v·v − 2v·c + c·c, 6) is the established
+    // sequential-double recipe; the ·1e6 + 0.5 floor turns the
+    // 6-dp-rounded value into an exact integer in both engines, so
+    // inertia sums are order-independent i64 arithmetic.
+    "q308_kselect_sweep" -> ((s, d) => {
+      val e = table(s, d, "embeddings").select(col("vec_id"),
+        col("label").cast("long").as("label"),
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // r11: the sweep is STACKED on k instead of 5 separate branches —
+      // one exploded pass computes every k's centroid cells (each
+      // (row, dim) lands in 5 (k, label % k, pos) groups; the per-group
+      // value multiset, and so round(avg, 6), is identical to the
+      // per-k formulation's) and ONE broadcast-scored pass over e does
+      // all 5 assignments with (vec_id, k)-keyed argmin. Total scored
+      // rows are unchanged (n·Σk either way); what drops is 10 passes
+      // over the cached embeddings and ~15 exchanges down to 2 scans +
+      // 4 exchanges — the same plan a production sweep over dozens of
+      // candidate k's needs, where per-k branches would mean a
+      // planning/scheduling blowup.
+      val kArr = array(Ks.map(lit): _*)
+      val cents = e
+        .select(explode(kArr).as("k"), col("label"), col("v"))
+        .select(col("k"), (col("label") % col("k")).as("cid"),
+          posexplode(col("v")).as(Seq("pos", "x")))
+        .groupBy("k", "cid", "pos").agg(round(avg("x"), 6).as("c"))
+        .groupBy("k", "cid")
+        .agg(expr(
+          "transform(sort_array(collect_list(struct(pos, c))), p -> p.c)")
+          .as("cvec"))
+      val perK = e.crossJoin(broadcast(cents))
+        .withColumn("d2", round(
+          dotD("v", "v") - lit(2) * dotD("v", "cvec")
+            + dotD("cvec", "cvec"), 6))
+        .groupBy("vec_id", "k")
+        .agg(min(struct(col("d2"), col("cid"))).as("m"))
+        .select(col("k"),
+          expr("CAST(floor(m.d2 * 1000000 + 0.5) AS BIGINT)").as("dm"))
+        .groupBy("k").agg(sum("dm").as("inertia_micro"))
+        .select(col("k").cast("long").as("k"), col("inertia_micro"))
+      // Chord rule on the 5-point curve: score(k) ∝ |ΔI_total·(k−k0)
+      // − Δk_total·(I−I0)| — integers end to end; ties pick smaller k.
+      val ends = perK.agg(
+        min(struct(col("k"), col("inertia_micro"))).as("lo"),
+        max(struct(col("k"), col("inertia_micro"))).as("hi"))
+        .select(col("lo.k").as("k0"),
+          col("lo.inertia_micro").as("i0"),
+          col("hi.k").as("k1"), col("hi.inertia_micro").as("i1"))
+      val scored = perK.crossJoin(broadcast(ends))
+        .withColumn("knee_score", abs(
+          (col("i1") - col("i0")) * (col("k") - col("k0")) -
+            (col("k1") - col("k0")) * (col("inertia_micro") - col("i0"))))
+      val best = scored
+        .agg(max(struct(col("knee_score").as("ks"),
+          (-col("k")).as("nk"))).as("b"))
+        .select((-col("b.nk")).as("bk"))
+      scored.crossJoin(broadcast(best))
+        .select(col("k"), col("inertia_micro"), col("knee_score"),
+          (col("k") === col("bk")).as("is_knee"))
+    }),
+
+    // Feed-health monitors — a category/schema drift
+    // audit over a temporal split of the event feed, and an
+    // embedding-space outlier scan (distance to own-label centroid, the
+    // inverse of q147's SemDeDup nearness). Both are one-pass shapes:
+    // the drift audit reduces to a |event_type|-row frame, the outlier
+    // scan to a P-row centroid broadcast plus a map-only score and a
+    // TakeOrdered top-k — no corpus-sized window anywhere.
+
+    // ---- q320: embedding outliers by own-centroid distance -------------
+    // Per-label centroids (P×dim broadcast frame, q282's build); each
+    // vector's exact squared distance to ITS OWN label centroid
+    // v·v − 2 v·c + c·c (sequential-double, round-6 pinned); global
+    // top-20 by (distance desc, vec_id) via TakeOrdered — the
+    // scalable top-k, no corpus-sized window. These are the points a
+    // curation pass would eyeball as mislabeled or junk.
+    "q320_embedding_outlier_scan" -> ((s, d) => {
+      val e = table(s, d, "embeddings").select(col("vec_id"),
+        col("label").cast("long").as("label"),
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      val cents = e
+        .select(col("label").as("clabel"),
+          posexplode(col("v")).as(Seq("pos", "x")))
+        .groupBy("clabel", "pos").agg(round(avg("x"), 6).as("c"))
+        .groupBy("clabel")
+        .agg(expr(
+          "transform(sort_array(collect_list(struct(pos, c))), p -> p.c)")
+          .as("cvec"))
+      e.join(broadcast(cents), col("label") === col("clabel"))
+        .withColumn("dist2", round(
+          dotD("v", "v") - lit(2) * dotD("v", "cvec")
+            + dotD("cvec", "cvec"), 6))
+        .orderBy(col("dist2").desc, col("vec_id"))
+        .limit(20)
+        .select(col("vec_id"), col("label"), col("dist2"))
+    }),
+
+    // Model-feature diagnostics — per-dimension Fisher
+    // separability of the embedding space (which coordinates actually
+    // separate the labels) and the Qini-style uplift-by-decile curve
+    // (does the treatment effect concentrate in a scoreable segment).
+    // Embedding floats are QUANTIZED to exact micro integers at the
+    // boundary so every moment is an order-independent integer sum —
+    // the discipline that makes float analytics cross-engine exact.
+
+    // ---- q371: Fisher separability per embedding dimension --------------
+    // x_q = ⌊x·1e6⌋ per (vector, dim); per (dim, label): n, Σx, Σx²
+    // (DECIMAL); Fisher ratio = between-class SS over within-class SS
+    // in ppm, all from the label-moment frame (64 dims × 10 labels).
+    // The top dims are where a cheap slice-based router would look.
+    "q371_fisher_separability" -> ((s, d) => {
+      val q = table(s, d, "embeddings")
+        .select(col("label").cast("long").as("lbl"),
+          posexplode(expr(
+            "transform(embedding, x -> CAST(floor(x * 1000000) AS BIGINT))"))
+            .as(Seq("dim", "xq")))
+      val lm = q.groupBy("dim", "lbl")
+        .agg(count(lit(1)).as("n"), sum("xq").as("sx"),
+          sum(expr("CAST(xq AS DECIMAL(38,0)) * xq")).as("sxx"))
+      // between-class SS avoids per-label division by lifting to the
+      // common denominator: Σ_l (sx_l·nn − n_l·sxt)² div (n_l·nn²)
+      val joined = lm.join(
+        lm.groupBy("dim").agg(sum("n").as("nn"), sum("sx").as("sxt")),
+        "dim")
+      joined
+        .withColumn("between_term", expr(
+          """(CAST(sx AS DECIMAL(38,0)) * nn
+             - CAST(n AS DECIMAL(38,0)) * sxt)
+             * (CAST(sx AS DECIMAL(38,0)) * nn
+             - CAST(n AS DECIMAL(38,0)) * sxt)
+             div (CAST(n AS DECIMAL(38,0)) * nn * nn)"""))
+        .withColumn("within_term", expr(
+          """CAST(sxx AS DECIMAL(38,0))
+             - CAST(sx AS DECIMAL(38,0)) * sx div n"""))
+        .groupBy("dim")
+        .agg(max("nn").as("n_vectors"),
+          expr("""CAST(sum(between_term) * 1000000
+              div greatest(CAST(1 AS DECIMAL(38,0)), sum(within_term))
+              AS BIGINT)""").as("fisher_ppm"))
+        .select(col("dim").cast("long").as("dim"), col("n_vectors"),
+          col("fisher_ppm"))
+    }),
+
+    // ---- q386: 5-NN majority-vote label-error scan (adaptive LSH) ------
+    // q386 kNN label-error scan: confident-learning-style audit (own
+    // label vs 5-NN majority) with ADAPTIVE sign-LSH blocking — the
+    // code length grows with the corpus (bits = bitlength((n-1) div
+    // 125)), keeping expected bucket size ~constant, so the
+    // within-bucket pair stage stays LINEAR in corpus size where a
+    // fixed code would go quadratic.
+    // Code length adapts to the corpus: bits = bitlength((n-1) div 125)
+    // (>= 4), so expected bucket size stays ~125 vectors and the
+    // within-bucket pair stage is O(n·125) at ANY corpus size — the
+    // fixed-code variant would re-derive the all-pairs blowup as the
+    // corpus grows. Neighbors = same sign-LSH bucket; per anchor the
+    // top-5 by cosine (rounded, the q40 parity discipline) vote; an
+    // anchor whose own label differs from a >=3-vote majority is a
+    // label-error suspect (confident-learning shape). Anchors with
+    // fewer than 5 bucket neighbors abstain (counted separately).
+    "q386_knn_label_audit" -> ((s0, d) => {
+      val s = withFns(s0)
+      val e = table(s, d, "embeddings")
+      val bits = e.agg(count(lit(1)).as("n"))
+        .select(greatest(lit(4),
+          length(bin(expr("(n - 1) div 125")))).cast("int").as("bits"))
+      val projected = e.select(
+        Seq(col("vec_id"), col("label"), col("embedding")) ++
+          (0 until NPlanes).map { j =>
+            val signs = array(planeSigns(j).map(v => lit(v)): _*)
+            round(fdot(col("embedding"), signs), 6).as(s"p$j")
+          }: _*)
+      // Norms are PER-VECTOR, so compute sqrt(<v,v>) once per vector
+      // before the bucket self-join — the former shape recomputed both
+      // self-dots for EVERY candidate pair, tripling the pair stage's
+      // dot-product work (guide §1.2 step 1: don't recompute what a
+      // cheaper grain already has). Same IEEE ops per pair (sqrt then
+      // multiply, round at the end) — cos_r is bit-identical.
+      val bucketed = projected.crossJoin(broadcast(bits))
+        .withColumn("bucket", expr((0 until NPlanes).map { j =>
+          s"CASE WHEN $j < bits AND p$j >= 0 THEN ${1 << j} ELSE 0 END"
+        }.mkString(" + ")))
+        .select(col("vec_id"), col("label"), col("embedding"),
+          sqrt(fdot(col("embedding"), col("embedding"))).as("nrm"),
+          col("bucket"))
+      val a = bucketed.select(col("vec_id").as("a_id"),
+        col("label").as("a_label"), col("embedding").as("a_vec"),
+        col("nrm").as("a_nrm"), col("bucket"))
+      val b = bucketed.select(col("vec_id").as("b_id"),
+        col("label").as("b_label"), col("embedding").as("b_vec"),
+        col("nrm").as("b_nrm"), col("bucket"))
+      val pairs = a.join(b, "bucket").filter(col("a_id") =!= col("b_id"))
+        .select(col("a_id"), col("a_label"), col("b_id"), col("b_label"),
+          round(fdot(col("a_vec"), col("b_vec")) /
+            (col("a_nrm") * col("b_nrm")), 6).as("cos_r"))
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy("a_id")
+        .orderBy(col("cos_r").desc, col("b_id").asc)
+      val top5 = pairs.withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= 5)
+      val full5 = top5.groupBy("a_id").agg(count(lit(1)).as("k"))
+        .filter(col("k") === 5).select("a_id")
+      val votes = top5.join(full5, "a_id")
+        .groupBy("a_id", "a_label", "b_label")
+        .agg(count(lit(1)).as("c"))
+      val maj = votes.groupBy("a_id", "a_label")
+        .agg(max(struct(col("c"), (-col("b_label")).as("nl"))).as("m"))
+        .select(col("a_id"), col("a_label"),
+          (-col("m.nl")).as("maj_label"), col("m.c").as("maj_c"))
+      maj
+        .withColumn("suspect",
+          (col("maj_label") =!= col("a_label") && col("maj_c") >= 3)
+            .cast("long"))
+        .groupBy(col("a_label").cast("long").as("label"))
+        .agg(count(lit(1)).as("n_anchors"),
+          sum("suspect").as("n_suspect"))
+        .withColumn("suspect_ppm",
+          expr("n_suspect * 1000000 div n_anchors"))
+        .orderBy("label")
+    }))
 
   /** Lowercase hex md5 of a string — plan-time only (sign matrix
     * generation for q112); matches DuckDB's md5() exactly. */
@@ -533,11 +855,6 @@ object VectorOps {
   private def embDouble(s: SparkSession, d: String): DataFrame =
     table(s, d, "embeddings").select(col("vec_id"), col("label"),
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-
-  /** Sequential double dot product of two ARRAY<DOUBLE> columns. */
-  private def dotD(a: String, b: String): Column = expr(
-    s"""aggregate(zip_with($a, $b, (x, y) -> x * y),
-        CAST(0 AS DOUBLE), (acc, t) -> acc + t)""")
 
   /** k-means assignment score of row vector `v` vs centroid `cvec`. */
   private def assignScore: Column =
@@ -719,6 +1036,32 @@ object VectorOps {
                      - 2 * list_dot_product(e.v, c.cvec), 6) ASC,
                c.cid ASC) AS rn
            FROM e CROSS JOIN c1 c) WHERE rn = 1)"""
+
+  private def kBranch(k: Int): String =
+    s"""SELECT CAST($k AS BIGINT) AS k,
+          sum(CAST(floor(dm * 1000000 + 0.5) AS BIGINT)) AS inertia_micro
+        FROM (
+          SELECT e.vec_id, min(round(
+              list_dot_product(e.v, e.v)
+              - 2 * list_dot_product(e.v, c.cvec)
+              + list_dot_product(c.cvec, c.cvec), 6)) AS dm
+          FROM ev e CROSS JOIN (
+            SELECT cid, list(c ORDER BY pos) AS cvec FROM (
+              SELECT CAST(label AS BIGINT) % $k AS cid, i AS pos,
+                     round(avg(x), 6) AS c
+              FROM (SELECT label,
+                      unnest(range(1, len(embedding) + 1)) AS i,
+                      unnest(CAST(embedding AS DOUBLE[])) AS x
+                    FROM embeddings)
+              GROUP BY 1, 2)
+            GROUP BY cid) c
+          GROUP BY e.vec_id)"""
+
+  // ---- oracles ---------------------------------------------------------
+
+  private def signsSql(j: Int): String =
+    planeSigns(j).map(v => if (v > 0) "1.0" else "-1.0")
+      .mkString("[", ", ", "]::DOUBLE[]")
 
   val oracle: Map[String, String] = Map(
     "q96_int8_quant" ->
@@ -1022,6 +1365,194 @@ object VectorOps {
          FROM embeddings i
          JOIN embeddings c ON i.vec_id = xor(c.vec_id, 1)
          WHERE round(list_cosine_similarity(CAST(i.embedding AS DOUBLE[]),
-             CAST(c.embedding AS DOUBLE[])), 6) >= 0.05"""
-  )
+             CAST(c.embedding AS DOUBLE[])), 6) >= 0.05""",
+    "q209_centroid_products" ->
+      """WITH e AS (
+           SELECT label, i - 1 AS i,
+                  CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000)
+                    AS BIGINT) AS v
+           FROM (SELECT label, embedding,
+                        unnest(range(1, len(embedding) + 1)) AS i
+                 FROM embeddings)),
+         cent AS (
+           SELECT label, i, sum(v) AS sv, count(*) AS n
+           FROM e GROUP BY label, i),
+         norms AS (
+           SELECT label, sum(sv * sv) AS norm2, min(n) AS n
+           FROM cent GROUP BY label),
+         dots AS (
+           SELECT a.label AS label_a, b.label AS label_b,
+                  sum(a.sv * b.sv) AS dot_milli2
+           FROM cent a JOIN cent b ON a.i = b.i AND a.label < b.label
+           GROUP BY a.label, b.label)
+         SELECT d.label_a, d.label_b,
+                CAST(d.dot_milli2 AS BIGINT) AS dot_milli2,
+                CAST(na.norm2 AS BIGINT) AS norm2_a,
+                CAST(nb.norm2 AS BIGINT) AS norm2_b,
+                CAST(na.n AS BIGINT) AS n_a, CAST(nb.n AS BIGINT) AS n_b
+         FROM dots d
+         JOIN norms na ON na.label = d.label_a
+         JOIN norms nb ON nb.label = d.label_b""",
+
+    "q264_embedding_drift" ->
+      """WITH e AS (
+           SELECT label, half, i - 1 AS i,
+                  CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000)
+                    AS BIGINT) AS v
+           FROM (SELECT label, vec_id % 2 AS half, embedding,
+                        unnest(range(1, len(embedding) + 1)) AS i
+                 FROM embeddings)),
+         cent AS (
+           SELECT label, half, i, CAST(sum(v) AS BIGINT) AS sv,
+             count(*) AS n
+           FROM e GROUP BY label, half, i),
+         j AS (
+           SELECT a.label AS label, min(a.n) AS n0, min(b.n) AS n1,
+             CAST(sum(a.sv * b.sv) AS BIGINT) AS dot_milli2,
+             CAST(sum(a.sv * a.sv) AS BIGINT) AS norm2_0,
+             CAST(sum(b.sv * b.sv) AS BIGINT) AS norm2_1
+           FROM cent a JOIN cent b
+             ON a.label = b.label AND a.i = b.i
+             AND a.half = 0 AND b.half = 1
+           GROUP BY a.label)
+         SELECT CAST(label AS BIGINT) AS label, n0, n1, dot_milli2,
+           round(CAST(dot_milli2 AS DOUBLE) /
+             sqrt(CAST(norm2_0 AS DOUBLE) * CAST(norm2_1 AS DOUBLE)), 6)
+             AS cos_r
+         FROM j""",
+    "q308_kselect_sweep" ->
+      (s"""WITH ev AS (
+            SELECT vec_id, CAST(label AS BIGINT) AS label,
+                   CAST(embedding AS DOUBLE[]) AS v
+            FROM embeddings),
+          curve AS (
+            ${Ks.map(kBranch).mkString("\n UNION ALL \n")}),
+          ends AS (
+            SELECT min(k) AS k0, max(k) AS k1,
+              (SELECT inertia_micro FROM curve
+               WHERE k = (SELECT min(k) FROM curve)) AS i0,
+              (SELECT inertia_micro FROM curve
+               WHERE k = (SELECT max(k) FROM curve)) AS i1
+            FROM curve),
+          scored AS (
+            SELECT c.k, c.inertia_micro,
+              abs((e.i1 - e.i0) * (c.k - e.k0)
+                  - (e.k1 - e.k0) * (c.inertia_micro - e.i0))
+                AS knee_score
+            FROM curve c, ends e),
+          best AS (
+            SELECT k AS bk FROM scored
+            ORDER BY knee_score DESC, k ASC LIMIT 1)
+          SELECT s.k, CAST(s.inertia_micro AS BIGINT) AS inertia_micro,
+            CAST(s.knee_score AS BIGINT) AS knee_score,
+            s.k = b.bk AS is_knee
+          FROM scored s, best b"""),
+
+    "q320_embedding_outlier_scan" ->
+      """WITH e AS (
+           SELECT vec_id, CAST(label AS BIGINT) AS label,
+                  CAST(embedding AS DOUBLE[]) AS v
+           FROM embeddings),
+         cent AS (
+           SELECT clabel, list(c ORDER BY pos) AS cvec FROM (
+             SELECT CAST(label AS BIGINT) AS clabel, i AS pos,
+                    round(avg(x), 6) AS c
+             FROM (SELECT label,
+                     unnest(range(1, len(embedding) + 1)) AS i,
+                     unnest(CAST(embedding AS DOUBLE[])) AS x
+                   FROM embeddings)
+             GROUP BY 1, 2)
+           GROUP BY clabel)
+         SELECT e.vec_id, e.label,
+           round(list_dot_product(e.v, e.v)
+             - 2 * list_dot_product(e.v, c.cvec)
+             + list_dot_product(c.cvec, c.cvec), 6) AS dist2
+         FROM e JOIN cent c ON e.label = c.clabel
+         ORDER BY dist2 DESC, e.vec_id
+         LIMIT 20""",
+    "q371_fisher_separability" ->
+      """WITH q AS (
+           SELECT CAST(label AS BIGINT) AS lbl, i - 1 AS dim,
+             CAST(floor(x * 1000000) AS BIGINT) AS xq
+           FROM (SELECT label,
+                   unnest(range(1, len(embedding) + 1)) AS i,
+                   unnest(CAST(embedding AS DOUBLE[])) AS x
+                 FROM embeddings)),
+         lm AS (
+           SELECT dim, lbl, count(*) AS n, sum(xq) AS sx,
+             sum(CAST(xq AS HUGEINT) * xq) AS sxx
+           FROM q GROUP BY 1, 2),
+         dm AS (
+           SELECT dim, sum(n) AS nn, sum(sx) AS sxt
+           FROM lm GROUP BY 1),
+         terms AS (
+           SELECT lm.dim,
+             (CAST(lm.sx AS HUGEINT) * nn - CAST(lm.n AS HUGEINT) * sxt)
+             * (CAST(lm.sx AS HUGEINT) * nn
+                - CAST(lm.n AS HUGEINT) * sxt)
+             // (CAST(lm.n AS HUGEINT) * nn * nn) AS between_term,
+             CAST(lm.sxx AS HUGEINT)
+               - CAST(lm.sx AS HUGEINT) * lm.sx // lm.n AS within_term,
+             nn
+           FROM lm JOIN dm ON lm.dim = dm.dim)
+         SELECT CAST(dim AS BIGINT) AS dim,
+           CAST(max(nn) AS BIGINT) AS n_vectors,
+           CAST(sum(between_term) * 1000000
+             // greatest(CAST(1 AS HUGEINT), sum(within_term))
+             AS BIGINT) AS fisher_ppm
+         FROM terms GROUP BY dim""",
+
+    "q386_knn_label_audit" -> {
+      val projCols = (0 until NPlanes).map { j =>
+        s"round(list_dot_product(CAST(embedding AS DOUBLE[]), " +
+          s"${signsSql(j)}), 6) AS p$j"
+      }.mkString(", ")
+      val bucketTerms = (0 until NPlanes).map { j =>
+        s"CASE WHEN $j < bits AND p$j >= 0 THEN ${1 << j} ELSE 0 END"
+      }.mkString(" + ")
+      s"""WITH nb AS (
+           SELECT greatest(4,
+             length(format('{:b}', (count(*) - 1) // 125))) AS bits
+           FROM embeddings),
+         pr AS (
+           SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v,
+             $projCols
+           FROM embeddings),
+         bk AS (
+           SELECT vec_id, label, v, ($bucketTerms) AS bucket
+           FROM pr CROSS JOIN nb),
+         pairs AS (
+           SELECT x.vec_id AS a_id, x.label AS a_label,
+             y.vec_id AS b_id, y.label AS b_label,
+             round(list_cosine_similarity(x.v, y.v), 6) AS cos_r
+           FROM bk x JOIN bk y
+             ON x.bucket = y.bucket AND x.vec_id <> y.vec_id),
+         top5 AS (
+           SELECT * FROM (
+             SELECT p.*, row_number() OVER (
+               PARTITION BY a_id ORDER BY cos_r DESC, b_id) AS rk
+             FROM pairs p)
+           WHERE rk <= 5),
+         full5 AS (
+           SELECT a_id FROM top5 GROUP BY a_id HAVING count(*) = 5),
+         votes AS (
+           SELECT t.a_id, t.a_label, t.b_label, count(*) AS c
+           FROM top5 t JOIN full5 f USING (a_id)
+           GROUP BY 1, 2, 3),
+         maj AS (
+           SELECT a_id, a_label, b_label AS maj_label, c AS maj_c
+           FROM (SELECT v.*, row_number() OVER (
+                   PARTITION BY a_id ORDER BY c DESC, b_label) AS rk
+                 FROM votes v)
+           WHERE rk = 1)
+         SELECT CAST(a_label AS BIGINT) AS label,
+           CAST(count(*) AS BIGINT) AS n_anchors,
+           CAST(sum(CASE WHEN maj_label <> a_label AND maj_c >= 3
+                THEN 1 ELSE 0 END) AS BIGINT) AS n_suspect,
+           CAST(sum(CASE WHEN maj_label <> a_label AND maj_c >= 3
+                THEN 1 ELSE 0 END) * 1000000 // count(*) AS BIGINT)
+             AS suspect_ppm
+         FROM maj
+         GROUP BY 1 ORDER BY 1"""
+    })
 }

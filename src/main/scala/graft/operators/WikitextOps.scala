@@ -15,9 +15,7 @@ import graft.sources.Revision
   * `count(documents)`, so the DuckDB oracle can hash-check the whole
   * extract→normalize→dedup pipeline without being able to run it.
   */
-object WikitextOps {
-
-  type Q = (SparkSession, String) => DataFrame
+object WikitextOps extends QueryModule {
 
   /** Two synthetic revisions per document; doc text is word-salad (no
     * wiki markup), so the only extractable constructs are the ones we

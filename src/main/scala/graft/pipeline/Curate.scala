@@ -96,7 +96,7 @@ object Curate {
     // 3) near-dup keep-list: LSH candidates → connected components →
     //    keep each family's min doc_id (docs outside any pair survive
     //    via the left_anti branch)
-    val comp = GraphOps.connectedComponentsFixed(
+    val (comp, adj) = GraphOps.componentsAndAdjacency(
       TextOps.lshPairsOf(sigsOf(exact), TextOps.MaxLshBucket), rounds = 6)
     val nearKeep = exact.join(
       comp.filter(col("id") =!= col("comp"))
@@ -149,6 +149,7 @@ object Curate {
     val out = docs.sparkSession.read.schema(sharded.schema).parquet(outDir)
     val nShards = out.select("shard").distinct().count()
     quality.unpersist(); exact.unpersist(); nearKeep.unpersist()
+    adj.unpersist()
     Report(nInput, nQuality, nExact, nNear, nClean, nShards, tokensKept)
   }
 }

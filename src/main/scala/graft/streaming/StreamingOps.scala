@@ -19,9 +19,7 @@ import org.apache.spark.sql.types._
   * bound that state. `dsum` keeps money sums exact and
   * order-independent, so results are stable under any microbatch split.
   */
-object StreamingOps {
-
-  type Q = (SparkSession, String) => DataFrame
+object StreamingOps extends graft.operators.QueryModule {
 
   private val seq = new AtomicInteger()
 
@@ -305,8 +303,7 @@ object StreamingOps {
       s"transform(hs, h -> substring(h, $off, 8))"))
     val idx = s.readStream.schema(docsSchema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      .withColumn("tokens",
-        filter(split(lower(col("text")), " "), w => w =!= ""))
+      .withColumn("tokens", words(col("text")))
       .filter(size(col("tokens")) >= 3)
       .withColumn("hs", expr(
         """transform(sequence(0, size(tokens) - 3),
@@ -487,8 +484,7 @@ object StreamingOps {
     val k = 256
     val rows = streamEvents(s, dir)
       .select(col("event_type"),
-        expr("""CAST(conv(substring(md5(CAST(event_id AS STRING)), 1, 13),
-             16, 10) AS BIGINT)""").as("hv"),
+        expr(h13("event_id")).as("hv"),
         col("value"))
       .as[(String, Long, Double)]
     implicit val stEnc =

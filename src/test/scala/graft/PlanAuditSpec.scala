@@ -463,6 +463,20 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"expected a range exchange feeding the neighbor scan\n$plan")
   }
 
+  test("q217: no broadcast hint over the per-record names side") {
+    // The name lookup holds one row per supplier, so it grows with the
+    // corpus; a hint would force it into a broadcast whatever its size.
+    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+    val df = SparkEntry.queries("q217_entity_resolution")(spark, sf)
+    val hinted = df.queryExecution.analyzed.collect {
+      case h: ResolvedHint if h.hints.strategy.isDefined =>
+        h.output.map(_.name)
+    }
+    assert(!hinted.exists(_.exists(_.endsWith("nm"))),
+      s"broadcast hint over a names frame: $hinted")
+    assert(df.count() > 0)
+  }
+
   test("registerViews: full corpus + native functions reachable via spark.sql") {
     graft.Tables.registerViews(spark, sf)
     val r = spark.sql(

@@ -17,8 +17,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Per-suite isolation moves to [[cleanup]], which every suite's
   * `afterAll` calls instead of `stop()`: caches and temp views the
-  * suite leaked are dropped and the session conf keys suites are known
-  * to touch are restored, so suite order cannot change results.
+  * suite leaked are dropped, and the session conf goes back to the
+  * snapshot taken when the session was built: keys a suite added are
+  * unset and keys it changed or removed get their first value again, so
+  * suite order cannot change results.
   */
 object SparkTestSession {
   val defaultShufflePartitions = "4"
@@ -34,8 +36,12 @@ object SparkTestSession {
       .appName("graft-test-shared")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    initialConf = s.conf.getAll
     s
   }
+
+  /** The session conf as built, before any suite touched it. */
+  private var initialConf = Map.empty[String, String]
 
   /** Suite-boundary hygiene replacing the old `spark.stop()`. */
   def cleanup(): Unit = {
@@ -43,15 +49,9 @@ object SparkTestSession {
     s.sharedState.cacheManager.clearCache()
     s.sessionState.catalog.getTempViewNames()
       .foreach(s.catalog.dropTempView)
-    s.conf.set("spark.sql.shuffle.partitions", defaultShufflePartitions)
-    // Keys individual suites override inside tests; restored here too in
-    // case a failing test skipped its own finally-restore.
-    s.conf.set("spark.sql.adaptive.enabled", "true")
-    s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.exchange.reuse", "true")
-    s.conf.unset("spark.sql.requireAllClusterKeysForCoPartition")
-    s.conf.unset(
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled")
+    val now = s.conf.getAll
+    (now.keySet -- initialConf.keySet).foreach(s.conf.unset)
+    for ((k, v) <- initialConf if !now.get(k).contains(v)) s.conf.set(k, v)
     System.gc()
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkEntry
 import graft.functions.KmvMinK
 
 /** Contracts for the wave-8 operators: KMV sketch set algebra (q165),
@@ -56,7 +57,7 @@ class Wave8Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q165: union estimate is within 3/sqrt(k) of the exact distinct " +
     "union, and identical sources give jaccard_ppm = 1e6") {
-    val rows = Wave8Ops.queries("q165_kmv_set_ops")(spark, sf).collect()
+    val rows = SparkEntry.queries("q165_kmv_set_ops")(spark, sf).collect()
     assert(rows.nonEmpty)
     // exact per-pair distinct shingle union, recomputed from scratch
     val docs = graft.Tables.table(spark, sf, "documents")
@@ -143,7 +144,7 @@ class Wave8Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q170: all four raw variants of an item collapse to one canonical " +
     "URL with no tracking params, ports, fragments or trailing slashes") {
-    val rows = Wave8Ops.queries("q170_url_dedup")(spark, sf).collect()
+    val rows = SparkEntry.queries("q170_url_dedup")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val u = r.getAs[String]("canon_url")
@@ -173,7 +174,7 @@ class Wave8Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q172: cleaned text is exactly the tokens not covered by any " +
     "cross-document duplicated 5-token span, in order") {
-    val rows = Wave8Ops.queries("q172_exactsubstr_dedup")(spark, sf)
+    val rows = SparkEntry.queries("q172_exactsubstr_dedup")(spark, sf)
       .collect().map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[String]("clean_text"), r.getAs[Long]("n_kept"),
           r.getAs[Long]("n_removed"))).toMap
@@ -211,7 +212,7 @@ class Wave8Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q173: n_1h/cents_1h equal a per-user replay of the trailing " +
     "3600-second value frame (peers included)") {
-    val got = Wave8Ops.queries("q173_range_frame")(spark, sf).collect()
+    val got = SparkEntry.queries("q173_range_frame")(spark, sf).collect()
     assert(got.nonEmpty)
     val byUser = got.groupBy(_.getAs[Long]("user_id"))
     byUser.foreach { case (_, rows) =>
@@ -230,7 +231,7 @@ class Wave8Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q175: deletion-neighborhood candidates find EXACTLY the brute-force " +
     "edit-distance<=1 pairs (zero false negatives)") {
-    val got = Wave8Ops.queries("q175_fuzzy_join")(spark, sf).collect()
+    val got = SparkEntry.queries("q175_fuzzy_join")(spark, sf).collect()
       .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"),
         r.getAs[Int]("dist"))).toSet
     val names = graft.Tables.table(spark, sf, "customer")
@@ -258,7 +259,7 @@ class Wave8Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q176: slope_num/slope_den equal the exact integer least-squares " +
     "sums over the recomputed daily series") {
-    val got = Wave8Ops.queries("q176_trend_slope")(spark, sf).collect()
+    val got = SparkEntry.queries("q176_trend_slope")(spark, sf).collect()
       .map(r => r.getAs[String]("event_type") ->
         (r.getAs[Long]("n_days"), r.getAs[Long]("slope_num"),
           r.getAs[Long]("slope_den"))).toMap
@@ -287,7 +288,7 @@ class Wave8Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q177: per-day peak equals a sequential sweep over the sorted " +
     "boundary points") {
-    val got = Wave8Ops.queries("q177_concurrency")(spark, sf).collect()
+    val got = SparkEntry.queries("q177_concurrency")(spark, sf).collect()
       .map(r => r.getAs[Long]("day") -> r.getAs[Long]("peak")).toMap
     val secs = graft.Tables.table(spark, sf, "events")
       .select(col("event_id"), expr("ts div 1000000000").as("sec"))
@@ -310,7 +311,7 @@ class Wave8Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q178: popcounts equal the direct predicate counts, per block and " +
     "in total") {
-    val got = Wave8Ops.queries("q178_bitmap_index")(spark, sf).collect()
+    val got = SparkEntry.queries("q178_bitmap_index")(spark, sf).collect()
     val docs = graft.Tables.table(spark, sf, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -334,7 +335,7 @@ class Wave8Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q179: df/cf/bounds/postings_xor equal a from-scratch index build, " +
     "and the xor detects a posting perturbation") {
-    val got = Wave8Ops.queries("q179_inverted_index")(spark, sf).collect()
+    val got = SparkEntry.queries("q179_inverted_index")(spark, sf).collect()
       .map(r => r.getAs[String]("tok") ->
         (r.getAs[Long]("df"), r.getAs[Long]("cf"),
           r.getAs[Long]("first_doc"), r.getAs[Long]("last_doc"),
@@ -371,7 +372,7 @@ class Wave8Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q180: plans through the native AsOfJoinExec and matches an " +
     "explicit latest-version-in-force recompute") {
-    val df = Wave8Ops.queries("q180_temporal_join")(spark, sf)
+    val df = SparkEntry.queries("q180_temporal_join")(spark, sf)
     val got = df.collect().map(r => (r.getAs[String]("seg"),
       r.getAs[Int]("ver"), r.getAs[Long]("n_orders"))).toSet
     assert(df.queryExecution.executedPlan.toString.contains("AsOfJoin"),
@@ -395,7 +396,7 @@ class Wave8Spec extends AnyFunSuite with BeforeAndAfterAll {
   // ---- q181: exact median --------------------------------------------
 
   test("q181: histogram median equals the sort-based lower median") {
-    val got = Wave8Ops.queries("q181_exact_median")(spark, sf).collect()
+    val got = SparkEntry.queries("q181_exact_median")(spark, sf).collect()
       .map(r => r.getAs[String]("l_returnflag") ->
         (r.getAs[Long]("median_lo"), r.getAs[Long]("n_rows"))).toMap
     val rows = graft.Tables.table(spark, sf, "lineitem")

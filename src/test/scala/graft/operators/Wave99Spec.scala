@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkEntry
+
 /** Wave-99 invariants that the hash gate can't see: the layout advisor
   * must rank layouts the way min/max pruning actually ranks them, the
   * blocking audit's arithmetic must match a brute-force pair count, and
@@ -19,7 +21,7 @@ class Wave99Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q385: Z-order prunes at least as well as lex, lex at least as " +
       "well as round-robin; zone maps never skip a matching row") {
-    val rows = Wave99Ops.queries("q385_zorder_layout")(spark, sf)
+    val rows = SparkEntry.queries("q385_zorder_layout")(spark, sf)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .toMap
@@ -40,7 +42,7 @@ class Wave99Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("q387: sum-of-C(n,2) arithmetic equals a brute-force pair count " +
       "on the small corpus, and union dominates both schemes") {
     import spark.implicits._
-    val out = Wave99Ops.queries("q387_blocking_quality")(spark, sf)
+    val out = SparkEntry.queries("q387_blocking_quality")(spark, sf)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
     // brute force: materialize the pairs the audit only counts
@@ -80,7 +82,7 @@ class Wave99Spec extends AnyFunSuite with BeforeAndAfterAll {
       java.lang.Long.toBinaryString(math.max(1L, (n - 1) / 125)).length)
     assert(bits(500) == 4 && bits(2000) == 4 && bits(8000) == 6)
     // and the query runs end-to-end with every label accounted for
-    val out = Wave99Ops.queries("q386_knn_label_audit")(spark, sf)
+    val out = SparkEntry.queries("q386_knn_label_audit")(spark, sf)
       .collect()
     assert(out.nonEmpty)
     out.foreach { r =>

@@ -25,6 +25,7 @@ class CurateSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = all.filter(col("doc_id") % 97 =!= 0)
     val out = Files.createTempDirectory("curate").toFile.getAbsolutePath
     val budget = 2000L
+    spark.catalog.clearCache()
 
     val r = Curate.run(docs, bench, out, minTokens = 5,
       shardTokens = budget)
@@ -34,6 +35,8 @@ class CurateSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.nAfterExact >= r.nAfterNear)
     assert(r.nAfterNear >= r.nAfterDecontam)
     assert(r.nAfterDecontam > 0 && r.nShards > 1)
+    // no cache outlives the run, the near-dup adjacency included
+    assert(spark.sharedState.cacheManager.isEmpty)
 
     // partition-column inference reads `shard` back as int — normalize
     val written = spark.read.parquet(out)
