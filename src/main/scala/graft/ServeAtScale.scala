@@ -111,22 +111,28 @@ object ServeAtScale {
       s"batch report cardinality diverges: $reportN vs $reportDirectN")
 
     // ---- 6. layout plan audits ---------------------------------------
-    // (a) the hot join reuses bucket partitioning: no page_id Exchange.
-    // AQE/broadcast off so the assertion reads the static plan, same as
+    // Both audits plan on a child session: same SparkContext and
+    // catalog, the caller's SQL settings, and its own overrides, so the
+    // caller's conf is never touched, also when planning throws.
+    // AQE/broadcast off so (a) reads the static plan, same as
     // BucketingSpec.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val hotJoin = st("citation_histories")
-      .join(st("citation_instances"), Seq("page_id", "raw_sha1"))
+    val audit = spark.newSession()
+    for ((k, v) <- spark.conf.getAll if spark.conf.isModifiable(k))
+      audit.conf.set(k, v)
+    audit.conf.set("spark.sql.adaptive.enabled", "false")
+    audit.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def at(n: String) = CitationPipeline.servingTable(audit, servingDir, n)
+
+    // (a) the hot join reuses bucket partitioning: no page_id Exchange.
+    val hotJoin = at("citation_histories")
+      .join(at("citation_instances"), Seq("page_id", "raw_sha1"))
       .groupBy("page_id").agg(count(lit(1)).as("n"))
     val hotPlan = hotJoin.queryExecution.executedPlan.toString
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     require(!hotPlan.contains("Exchange hashpartitioning(page_id"),
       s"hot serving join shuffled on page_id:\n$hotPlan")
 
     // (b) the single-page path prunes to ONE bucket.
-    val scanPlan = st("citation_histories")
+    val scanPlan = at("citation_histories")
       .filter(col("page_id") === pageId)
       .queryExecution.executedPlan.toString
     require(scanPlan.contains(s"SelectedBucketsCount: 1 out of $buckets"),

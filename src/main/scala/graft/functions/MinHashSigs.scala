@@ -11,8 +11,10 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native 4-slot MinHash signature of a token array: the four 8-hex-char
   * slices of md5 over every 3-word shingle, min-folded per slot —
   * bit-identical to the relational explode + min-aggregate formulation
-  * (`TextOps.minhashSigs`'s original form and the q36 DuckDB oracle:
-  * `min(substr(md5(shingle), 1|9|17|25, 8))`), which this replaces.
+  * (the q36 DuckDB oracle: `min(substr(md5(shingle), 1|9|17|25, 8))`),
+  * which this replaces. Its one caller path is
+  * `graft.operators.TextKernel.minhash`, which every signature in the
+  * engine goes through.
   *
   * Why native: the relational form EXPLODES every shingle onto its own
   * row (≈|tokens| rows per document) and folds them back with a
@@ -27,7 +29,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Returns ARRAY<STRING> [sig0, sig1, sig2, sig3], or NULL for arrays
   * with < 3 tokens (no shingles — the relational groupBy emitted no
-  * row there, so callers filter, exactly as `TextOps.shingled` does).
+  * row there, so callers filter, exactly as `TextKernel.signatures`
+  * does).
   * NULL tokens inside a shingle follow `concat_ws` skip-null semantics
   * exactly (the token AND its separator are skipped), so the kernel
   * stays bit-identical to `md5(concat_ws(' ', slice(tokens, i+1, 3)))`

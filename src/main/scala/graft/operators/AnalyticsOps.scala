@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables.table
+import graft.operators.TextKernel.{ngrams, words}
 
 /** Business and behavioural analytics over the orders, lineitem and
   * events tables: cohorts and retention, funnels and paths, baskets and
@@ -127,12 +128,8 @@ object AnalyticsOps extends QueryModule {
       val docs = table(s, d, "documents")
         .withColumn("tokens", words(col("text")))
       val sh = materialized(docs.filter(size(col("tokens")) >= 5)
-        .select(col("doc_id"), explode(expr(
-          """array_distinct(transform(sequence(0, size(tokens) - 5),
-             i -> concat_ws(' ',
-                    element_at(tokens, i + 1), element_at(tokens, i + 2),
-                    element_at(tokens, i + 3), element_at(tokens, i + 4),
-                    element_at(tokens, i + 5))))""")).as("sg")))
+        .select(col("doc_id"),
+          explode(array_distinct(ngrams(col("tokens"), 5))).as("sg")))
       val rare = sh.groupBy("sg").agg(count(lit(1)).as("df"))
         .filter(col("df").between(2, 10)).select("sg")
       val postings = sh.join(rare, "sg")
@@ -524,12 +521,10 @@ object AnalyticsOps extends QueryModule {
         .select(col("doc_id"), md5(concat(col("text"),
           when(pmod(col("doc_id"), lit(7)) === 0, lit(" rev2"))
             .otherwise(lit("")))).as("nh"))
-      val j = old.join(neu, Seq("doc_id"), "full_outer")
+      val j = materialized(old.join(neu, Seq("doc_id"), "full_outer")
         .withColumn("changed",
           col("oh").isNotNull && col("nh").isNotNull &&
-            col("oh") =!= col("nh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      j.count()
+            col("oh") =!= col("nh")))
       val closedOrOpen = j.filter(col("oh").isNotNull).select(
         col("doc_id"), col("oh").as("content_v"),
         lit(1).as("valid_from"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables.table
+import graft.operators.TextKernel.{shingles, words}
 
 /** Corpus governance and data-quality audits: deterministic sampling,
   * cross-source overlap, column profiling, functional-dependency and key
@@ -130,21 +131,10 @@ object AuditOps extends QueryModule {
     // one join keyed by shingle, one pair aggregate. No stage is
     // quadratic in corpus size; the output is #source-pairs rows.
     "q131_source_overlap" -> ((s, d) => {
-      // Persisted AND eagerly materialized: the tokenize→shingle→
-      // distinct subtree feeds three consumers (set sizes + both join
-      // sides). Lazy persist lets the three subtrees race to populate
-      // the cache (each runs the full scan); one cheap count() up
-      // front buys a single computation.
-      val sh = table(s, d, "documents")
-        .withColumn("tokens", words(col("text")))
-        .filter(size(col("tokens")) >= 3)
-        .select(col("source"), explode(expr(
-          """transform(sequence(0, size(tokens) - 3),
-               i -> concat_ws(' ', slice(tokens, i + 1, 3)))"""))
-          .as("shingle"))
-        .distinct()
-        .persist()
-      sh.count()
+      // Materialized: the tokenize→shingle→distinct subtree feeds
+      // three consumers (set sizes + both join sides).
+      val sh = materialized(
+        shingles(table(s, d, "documents"), col("source")).distinct())
       val sizes = sh.groupBy("source").agg(count(lit(1)).as("n"))
       sh.select(col("source").as("src_a"), col("shingle"))
         .join(sh.select(col("source").as("src_b"), col("shingle")),
@@ -276,10 +266,9 @@ object AuditOps extends QueryModule {
     // 7 × |active (user, day)| — linear, partitioned by day, no
     // quadratic day×day join, no global sort.
     "q143_rolling_dau" -> ((s, d) => {
-      val ud = table(s, d, "events")
+      val ud = materialized(table(s, d, "events")
         .select(expr("ts div 86400000000000").as("day"), col("user_id"))
-        .distinct().persist()
-      ud.count()
+        .distinct())
       val mx = ud.agg(max("day").as("mx"))
       val dau = ud.groupBy("day").agg(count(lit(1)).as("dau"))
       val wau = ud
@@ -299,10 +288,9 @@ object AuditOps extends QueryModule {
     // Daily counts are one shuffle; the (N, S, Q) triple is a
     // broadcast scalar.
     "q144_anomaly_days" -> ((s, d) => {
-      val daily = table(s, d, "events")
+      val daily = materialized(table(s, d, "events")
         .select(expr("ts div 86400000000000").as("day"))
-        .groupBy("day").agg(count(lit(1)).as("n_events")).persist()
-      daily.count()
+        .groupBy("day").agg(count(lit(1)).as("n_events")))
       val stats = daily.agg(count(lit(1)).as("nd"),
         sum("n_events").as("s"),
         sum(expr("n_events * n_events")).as("q"))

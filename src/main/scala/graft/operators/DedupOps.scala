@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables.table
+import graft.operators.TextKernel.{minhash, ngrams, segments, shingles, words}
 
 /** Near-duplicate detection, entity resolution and record linkage,
   * built on TextOps' shingles, MinHash signatures and LSH banding:
@@ -46,9 +47,7 @@ object DedupOps extends QueryModule {
         .select(col("doc_id"), words(col("text")).as("t"))
         .filter(size(col("t")) > 0)
       val segs = docs.select(col("doc_id"),
-        posexplode(expr(
-          s"""transform(sequence(0, int(ceil(size(t) / $SegLen.0)) - 1),
-              i -> array_join(slice(t, i * $SegLen + 1, $SegLen), ' '))""")))
+        posexplode(segments(col("t"), SegLen)))
         .toDF("doc_id", "seg_idx", "seg")
       val firstSeen = Window.partitionBy("seg")
         .orderBy(col("doc_id"), col("seg_idx"))
@@ -151,32 +150,19 @@ object DedupOps extends QueryModule {
     // S-curve; BandingSpec in Wave19Spec checks it is monotone and
     // pins the analytic 1-(1-s²)² curve within sampling error.
     "q218_lsh_scurve" -> ((s, d) => {
-      // Two per-row kernel cuts, output byte-identical (guide §1.2
-      // step 2):
-      //  1. The UNPERTURBED side's whole pipeline — shingle set, its
-      //     md5 array, and the 4 signature mins — is a function of the
-      //     doc alone, so it is computed ONCE PER DOC above the 9-way
-      //     k-explode instead of once per (doc, k) row (9× cut on half
-      //     the kernel).
-      //  2. md5 runs ONCE per shingle per side; the per-offset
-      //     signature mins are cheap substring folds over the hash
-      //     array (the former shape recomputed the digests for every
-      //     one of the 8 signature expressions). CollapseProject keeps
-      //     the hoisted arrays materialized: an alias consumed by
-      //     multiple non-cheap expressions is not inlined.
-      def shingleSet(c: String) = expr(
-        s"""array_distinct(transform(sequence(0, size($c) - 3),
-            i -> concat_ws(' ', slice($c, i + 1, 3))))""")
-      def sig(c: String, off: Int) = expr(
-        s"array_min(transform($c, h -> substring(h, $off, 8)))")
+      // The UNPERTURBED side — shingle set and signature — is a
+      // function of the doc alone, so it is computed ONCE PER DOC before
+      // the 9-way k-explode instead of once per (doc, k) row. Each
+      // signature is the native minhash over all shingles, whose
+      // per-slot minimum equals the oracle's minimum over the distinct
+      // shingle set.
+      def shingleSet(c: String) = array_distinct(ngrams(col(c), 3))
       val docs = table(s, d, "documents")
         .select(col("doc_id"), words(col("text")).as("t"))
         .filter(col("doc_id") % 5 === 0 && size(col("t")) >= 20)
         .withColumn("sa", shingleSet("t"))
-        .withColumn("ha", expr("transform(sa, x -> md5(x))"))
-        .select(col("doc_id"), col("t"), col("sa"),
-          sig("ha", 1).as("a1"), sig("ha", 9).as("a9"),
-          sig("ha", 17).as("a17"), sig("ha", 25).as("a25"),
+        .withColumn("ma", minhash(col("t")))
+        .select(col("doc_id"), col("t"), col("sa"), col("ma"),
           explode(sequence(lit(1), lit(9))).as("k"))
       // i sweeps explicit 0-based positions so the Spark and DuckDB
       // lambdas agree exactly; the salted '?' prefix can never collide
@@ -189,19 +175,20 @@ object DedupOps extends QueryModule {
                          AS BIGINT) % 10 < k
                        THEN concat('?', element_at(t, i + 1))
                        ELSE element_at(t, i + 1) END)"""))
+      // detected: the pair shares an LSH band, i.e. both slots of
+      // band 0 or both slots of band 1 agree
+      def slotsAgree(ks: Int*) = ks.map(k =>
+        element_at(col("ma"), k) === element_at(col("mv"), k)).reduce(_ && _)
       val scored = perturbed
         .withColumn("sv", shingleSet("tv"))
         .withColumn("inter",
           size(array_intersect(col("sa"), col("sv"))).cast("long"))
         .withColumn("uni",
           (size(col("sa")) + size(col("sv"))).cast("long") - col("inter"))
-        .withColumn("hv", expr("transform(sv, x -> md5(x))"))
+        .withColumn("mv", minhash(col("tv")))
         .select(
           least(lit(9L), expr("(inter * 10) div uni")).as("decile"),
-          when((col("a1") === sig("hv", 1) &&
-            col("a9") === sig("hv", 9)) ||
-            (col("a17") === sig("hv", 17) &&
-              col("a25") === sig("hv", 25)), 1L).otherwise(0L)
+          when(slotsAgree(1, 2) || slotsAgree(3, 4), 1L).otherwise(0L)
             .as("detected"))
       scored.groupBy("decile")
         .agg(count(lit(1)).as("n_pairs"), sum("detected").as("n_detected"))
@@ -414,10 +401,8 @@ object DedupOps extends QueryModule {
       // ranked frame feeds 4 consumers (2 passes × 2 sides): persist
       // eagerly; released at the harness boundary
       // (GraftSession.releaseQueryCaches).
-      val r = u.withColumn("rn1", row_number().over(o1))
-        .withColumn("rn2", row_number().over(o2))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      r.count()
+      val r = materialized(u.withColumn("rn1", row_number().over(o1))
+        .withColumn("rn2", row_number().over(o2)))
       def passPairs(rn: String): DataFrame = {
         val l = r.select(col("nat"), col("key").as("lk"),
           col("side").as("ls"), col(rn).as("rn_l"))
@@ -483,12 +468,7 @@ object DedupOps extends QueryModule {
     // any corpus scale), so the non-equi `<` pairing is a bounded
     // build, never a corpus-sized nested loop.
     "q165_kmv_set_ops" -> ((s, d) => {
-      val sh = table(s, d, "documents")
-        .withColumn("tokens", words(col("text")))
-        .filter(size(col("tokens")) >= 3)
-        .select(col("source"), explode(expr(
-          """transform(sequence(0, size(tokens) - 3),
-             i -> concat_ws(' ', slice(tokens, i + 1, 3)))""")).as("shingle"))
+      val sh = shingles(table(s, d, "documents"), col("source"))
       val hv = conv(substring(md5(col("shingle")), 1, 13), 16, 10)
         .cast("long")
       val kmv = udaf(new graft.functions.KmvMinK(K))
@@ -577,10 +557,8 @@ object DedupOps extends QueryModule {
       val docs = table(s, d, "documents")
         .select(col("doc_id"), words(col("text")).as("tokens"))
       val spans = docs.filter(size(col("tokens")) >= SpanLen)
-        .select(col("doc_id"), posexplode(expr(
-          s"""transform(sequence(0, size(tokens) - $SpanLen),
-              i -> concat_ws(' ', slice(tokens, i + 1, $SpanLen)))"""))
-          .as(Seq("p", "span")))
+        .select(col("doc_id"),
+          posexplode(ngrams(col("tokens"), SpanLen)).as(Seq("p", "span")))
       val dup = spans.groupBy("span")
         .agg(countDistinct("doc_id").as("nd")).filter(col("nd") >= 2)
         .select("span")

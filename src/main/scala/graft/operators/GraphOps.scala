@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.TimestampNTZType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables.table
+import graft.operators.TextKernel.words
 
 /** Graph-shaped operators for training-data curation — here: near-dup
   * CLUSTERING. LSH (q37) emits candidate PAIRS; a dedup pipeline needs
@@ -78,8 +79,7 @@ object GraphOps extends QueryModule {
     val want = math.max(1L, math.min(cap.toLong, rows / 200000L + 1L)).toInt
     val sized =
       if (want < cap) {
-        val s = wide.repartition(want, col("src")).persist()
-        s.count()
+        val s = materialized(wide.repartition(want, col("src")))
         wide.unpersist()
         s
       } else wide
@@ -791,9 +791,7 @@ object GraphOps extends QueryModule {
       // pipeline re-executes per consumer (measured ~2× on the full
       // query at sf0.1). Released at the harness boundary per the
       // GraftSession.releaseQueryCaches cache-lifetime contract.
-      val walks = queries("q240_random_walks")(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      walks.count()
+      val walks = materialized(queries("q240_random_walks")(s, d))
       val seqs = walks.select(col("walk_id"),
         array(col("walk_id"), col("n1"), col("n2"), col("n3")).as("seq"))
       val pairs = seqs.select(col("walk_id"), explode(expr(

@@ -21,10 +21,6 @@ trait QueryModule {
     * (`WikitextOps.oracle` follows the staged-table root). */
   def oracle: Map[String, String]
 
-  /** Tokenize into a non-empty lowercase word array. */
-  protected def words(c: Column): Column =
-    filter(split(lower(c), " "), w => w =!= "")
-
   /** Persist and eagerly materialize an intermediate that the rest of
     * the query fans out from. Without the count(), every downstream
     * subtree races to populate the cache on the first action; one count

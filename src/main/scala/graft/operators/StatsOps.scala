@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables.table
+import graft.operators.TextKernel.words
 
 /** Statistical tests, drift scores and series diagnostics: robust
   * statistics, distribution comparisons (KS, PSI, chi-square, copulas),

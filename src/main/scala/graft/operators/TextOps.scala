@@ -6,6 +6,8 @@ import org.apache.spark.sql.types.TimestampNTZType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables.table
+import graft.operators.TextKernel.{
+  bands, bucketPairs, ngrams, segments, shingles, signatures, words}
 
 /** Text-analysis + deduplication operators for large-scale training-data
   * pipelines, exercised over the `documents` table: exact dedup,
@@ -13,45 +15,22 @@ import graft.Tables.table
   * candidate-pair generation, n-gram Jaccard, language-ID heuristics,
   * quality scoring and token statistics.
   *
-  * Everything here is expressed with codegen'd built-ins (no UDFs): the
-  * tokenize/shingle/minhash chain is `split`/`transform`/`md5`/`min`, so
-  * Catalyst sees through the whole pipeline and the shuffles are only the
-  * per-doc groupBys and the LSH band self-join.
+  * Everything here is expressed with codegen'd built-ins and native
+  * Expressions (no UDFs): the tokenize/shingle/minhash/band/pair chain
+  * is [[TextKernel]], so Catalyst sees through the whole pipeline.
   */
 object TextOps extends QueryModule {
-  /** 3-word shingles (requires >= 3 tokens; callers filter). */
-  private val shinglesExpr =
-    "transform(sequence(0, size(tokens) - 3), i -> concat_ws(' ', slice(tokens, i + 1, 3)))"
-
   /** Per-doc exploded shingle rows: (doc_id, shingle). */
   private[operators] def shingled(s: SparkSession, d: String): DataFrame =
-    table(s, d, "documents")
-      .withColumn("tokens", words(col("text")))
-      .filter(size(col("tokens")) >= 3)
-      .select(col("doc_id"), explode(expr(shinglesExpr)).as("shingle"))
+    shingles(table(s, d, "documents"), col("doc_id"))
 
-  /** MinHash signature: 4 independent 8-hex-digit slots carved from ONE
-    * md5 per shingle (quarters of the digest are independent uniform
-    * hashes — one hash evaluation instead of four), min-folded per doc
-    * by the native `minhash_sigs` Expression
-    * (graft.functions.MinHashSigs): the whole document reduces inside
-    * the scan task — one md5 per shingle, four 8-byte stack minima,
-    * zero extra rows — where the previous relational form exploded
-    * every shingle onto its own row and shuffled them into a 4-buffer
-    * min aggregate. The signature stage is now map-only with NO
-    * groupBy at all; bit-for-bit equal to the explode+min form
-    * (MinHashSigsSpec proves it against the old formulation, and the
-    * q36 DuckDB oracle still hash-matches). */
+  /** MinHash signatures (doc_id, sig0 .. sig3) of the corpus, folded per
+    * document inside the scan task by the native `minhash_sigs`
+    * (graft.functions.MinHashSigs): map-only, no groupBy. MinHashSigsSpec
+    * pins it bit-for-bit against the explode + min form, which the q36
+    * DuckDB oracle still runs. */
   private[operators] def minhashSigs(s: SparkSession, d: String): DataFrame =
-    table(s, d, "documents")
-      .withColumn("tokens", words(col("text")))
-      .filter(size(col("tokens")) >= 3)
-      .select(col("doc_id"), expr("minhash_sigs(tokens)").as("sigs"))
-      .select(col("doc_id"),
-        expr("element_at(sigs, 1)").as("sig0"),
-        expr("element_at(sigs, 2)").as("sig1"),
-        expr("element_at(sigs, 3)").as("sig2"),
-        expr("element_at(sigs, 4)").as("sig3"))
+    signatures(table(s, d, "documents"))
 
   /** 64-bit SimHash as four 16-bit bit-PLANES: plane j, char i holds
     * bit j of md5-hex-digit i (i = 1..16). All 64 bit-sums ride one
@@ -112,8 +91,12 @@ object TextOps extends QueryModule {
     * harness boundary per the cache-lifetime contract documented on
     * `GraftSession.releaseQueryCaches`.
     */
-  def verifiedJaccardPairs(s: SparkSession, d: String): DataFrame = {
-    val pairs = lshPairs(s, d).persist()
+  def verifiedJaccardPairs(s: SparkSession, d: String): DataFrame =
+    exactJaccard(s, d, lshPairs(s, d).persist())
+
+  /** (a_id, b_id, jac_ppm) for each of the candidate `pairs`. */
+  private def exactJaccard(
+      s: SparkSession, d: String, pairs: DataFrame): DataFrame = {
     val candIds = pairs.select(col("a_id").as("doc_id"))
       .union(pairs.select(col("b_id").as("doc_id"))).distinct()
     val sh = shingled(s, d).distinct()
@@ -138,20 +121,15 @@ object TextOps extends QueryModule {
 
   /** Pair expansion from precomputed signatures, hot buckets capped. */
   def lshPairsOf(sigs: DataFrame, maxBucket: Int): DataFrame =
-    sigs
-      .select(col("doc_id"), explode(map(
-        lit(0), md5(concat(col("sig0"), col("sig1"))),
-        lit(1), md5(concat(col("sig2"), col("sig3")))))
-        .as(Seq("band_id", "band")))
-      .groupBy("band_id", "band")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-      .select(explode(expr(
-        """flatten(transform(ids, (x, i) ->
-             transform(slice(ids, i + 2, size(ids) - i - 1), y ->
-               struct(x AS a_id, y AS b_id))))""")).as("p"))
-      .select(col("p.a_id"), col("p.b_id"))
-      .distinct()
+    bucketPairs(bandRows(sigs), Seq(col("band_id"), col("band")),
+      col("doc_id"), maxBucket).distinct()
+
+  /** One (doc_id, band_id, band) row per LSH band of each signature. */
+  private def bandRows(sigs: DataFrame): DataFrame = {
+    val b = bands(k => col(s"sig$k"))
+    sigs.select(col("doc_id"),
+      explode(map(lit(0), b(0), lit(1), b(1))).as(Seq("band_id", "band")))
+  }
 
   /** Segment length (tokens) for the repetition signals (q210/q211) —
     * 3 on this short-doc corpus (real prose uses line/paragraph
@@ -159,10 +137,6 @@ object TextOps extends QueryModule {
   private val SegLen = 3
 
   private val MinToks = 10
-
-  private val segsExpr =
-    s"""transform(sequence(0, int(ceil(size(t) / $SegLen.0)) - 1),
-        i -> array_join(slice(t, i * $SegLen + 1, $SegLen), ' '))"""
 
   /** Tokens below this corpus frequency stay out of the graph
     * (TextRank's usual stopword/min-count gate — keeps |V| the
@@ -174,6 +148,28 @@ object TextOps extends QueryModule {
     * them) while the curve is still read at 5 points. */
   private val VocabCuts = Seq(1L, 3L, 10L, 30L, 100L, 300L)
 
+  /** The phrase-search front of q327 and q350: the corpus's most
+    * frequent trigram (`phrase`, its count `n_total`; ties broken by
+    * the phrase) crossed with every doc of 3 or more words (`doc_id`,
+    * tokens `t`) and the ascending 0-based positions where the phrase
+    * starts in it (`hits`). The tokenized corpus is materialized once
+    * and feeds both the argmax and the map-only position filter, so
+    * no pass re-tokenizes or regroups the documents. */
+  private def topTrigramHits(s: SparkSession, d: String): DataFrame = {
+    val toks = materialized(table(s, d, "documents")
+      .withColumn("t", words(col("text")))
+      .filter(size(col("t")) >= 3)
+      .select(col("doc_id"), col("t")))
+    val top = toks.select(explode(ngrams(col("t"), 3)).as("shingle"))
+      .groupBy("shingle").agg(count(lit(1)).as("n_total"))
+      .orderBy(col("n_total").desc, col("shingle")).limit(1)
+      .select(col("shingle").as("phrase"), col("n_total"))
+    toks.crossJoin(broadcast(top))
+      .withColumn("hits", expr(
+        """filter(sequence(0, size(t) - 3),
+           i -> concat_ws(' ', slice(t, i + 1, 3)) = phrase)"""))
+  }
+
   val queries: Map[String, Q] = Map(
     // ---- q140: MinHash sketch accuracy audit ---------------------------
     // For every LSH candidate pair: the Jaccard ESTIMATE the 4-slot
@@ -181,29 +177,12 @@ object TextOps extends QueryModule {
     // Jaccard, plus the absolute error. This is the sketch-quality
     // gate a dedup deployment runs before trusting MinHash at scale:
     // systematic over-estimation means the band/slot budget is wrong.
-    // Exact scoring touches only candidate pairs (never all-pairs);
-    // the signature table and the distinct shingle sets are persisted
-    // — each feeds two consumers.
+    // Exact scoring is verifiedJaccardPairs' candidate-bounded verify
+    // stage; the signature table and the pairs are persisted — each
+    // feeds two consumers.
     "q140_minhash_accuracy" -> ((s, d) => {
       val sigs = minhashSigs(s, d).persist()
       val pairs = lshPairsOf(sigs, MaxLshBucket).persist()
-      // The audit is candidate-bounded: only docs that appear in an LSH
-      // pair need their exact shingle sets. Broadcast the candidate id
-      // set and semi-filter BEFORE the exact-Jaccard joins, so the
-      // corpus-wide shingle table is never shuffled — the exact pass
-      // scales with |candidates|, not |corpus| (same discipline as the
-      // q84 verify stage).
-      val candIds = pairs.select(col("a_id").as("doc_id"))
-        .union(pairs.select(col("b_id").as("doc_id"))).distinct()
-      val sh = shingled(s, d).distinct()
-        .join(broadcast(candIds), Seq("doc_id"), "left_semi")
-        .persist()
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-      val inter = pairs
-        .join(sh.select(col("doc_id").as("a_id"), col("shingle")), "a_id")
-        .join(sh.select(col("doc_id").as("b_id"), col("shingle")),
-          Seq("b_id", "shingle"))
-        .groupBy("a_id", "b_id").agg(count(lit(1)).as("inter"))
       val a = sigs.select(col("doc_id").as("a_id"), col("sig0").as("a0"),
         col("sig1").as("a1"), col("sig2").as("a2"), col("sig3").as("a3"))
       val b = sigs.select(col("doc_id").as("b_id"), col("sig0").as("b0"),
@@ -212,14 +191,7 @@ object TextOps extends QueryModule {
         .withColumn("est_ppm",
           ((0 to 3).map(i => when(col(s"a$i") === col(s"b$i"), 1)
             .otherwise(0)).reduce(_ + _)).cast("long") * 250000)
-        .join(inter, Seq("a_id", "b_id"), "left_outer")
-        .withColumn("inter", coalesce(col("inter"), lit(0L)))
-        .join(sizes.select(col("doc_id").as("a_id"), col("sz").as("sza")),
-          "a_id")
-        .join(sizes.select(col("doc_id").as("b_id"), col("sz").as("szb")),
-          "b_id")
-        .withColumn("jac_ppm",
-          expr("(inter * 1000000) div (sza + szb - inter)"))
+        .join(exactJaccard(s, d, pairs), Seq("a_id", "b_id"))
         .select(col("a_id"), col("b_id"), col("est_ppm"), col("jac_ppm"),
           abs(col("est_ppm") - col("jac_ppm")).as("err_ppm"))
     }),
@@ -376,9 +348,7 @@ object TextOps extends QueryModule {
       table(s, d, "documents")
         .withColumn("tokens", words(col("text")))
         .filter(size(col("tokens")) >= 2)
-        .select(explode(expr(
-          """transform(sequence(0, size(tokens) - 2),
-             i -> concat_ws(' ', slice(tokens, i + 1, 2)))""")).as("bigram"))
+        .select(explode(ngrams(col("tokens"), 2)).as("bigram"))
         .groupBy("bigram").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("bigram").asc)
         .limit(20)
@@ -583,7 +553,7 @@ object TextOps extends QueryModule {
       table(s, d, "documents")
         .withColumn("tokens", words(col("text")))
         .filter(size(col("tokens")) >= 3)
-        .withColumn("sh", expr(shinglesExpr))
+        .withColumn("sh", ngrams(col("tokens"), 3))
         .select(col("doc_id"),
           size(col("sh")).cast("long").as("n_shingles"),
           size(array_distinct(col("sh"))).cast("long").as("n_distinct"),
@@ -649,9 +619,7 @@ object TextOps extends QueryModule {
       table(s, d, "documents")
         .withColumn("tokens", words(col("text")))
         .filter(size(col("tokens")) >= 5)
-        .select(col("doc_id"), explode(expr(
-          """transform(sequence(0, size(tokens) - 5),
-             i -> concat_ws(' ', slice(tokens, i + 1, 5)))""")).as("span"))
+        .select(col("doc_id"), explode(ngrams(col("tokens"), 5)).as("span"))
         .groupBy("span")
         .agg(countDistinct("doc_id").as("n_docs"),
           count(lit(1)).as("n_occ"))
@@ -669,19 +637,12 @@ object TextOps extends QueryModule {
     "q101_simhash_neardup" -> ((s, d) => {
       val sigs = simhashPlanes(s, d)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val pairs = sigs
-        .select(col("doc_id"), explode(map(
+      val pairs = bucketPairs(
+        sigs.select(col("doc_id"), explode(map(
           lit(0), concat(col("p0"), col("p1")),
           lit(1), concat(col("p2"), col("p3"))))
-          .as(Seq("band_id", "band")))
-        .groupBy("band_id", "band")
-        .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-        .filter(size(col("ids")) > 1 && size(col("ids")) <= MaxLshBucket)
-        .select(explode(expr(
-          """flatten(transform(ids, (x, i) ->
-               transform(slice(ids, i + 2, size(ids) - i - 1), y ->
-                 struct(x AS a_id, y AS b_id))))""")).as("p"))
-        .select(col("p.a_id"), col("p.b_id"))
+          .as(Seq("band_id", "band"))),
+        Seq(col("band_id"), col("band")), col("doc_id"), MaxLshBucket)
         .distinct()
       val l = (0 to 3).foldLeft(
         sigs.withColumnRenamed("doc_id", "a_id"))((f, j) =>
@@ -752,11 +713,7 @@ object TextOps extends QueryModule {
     // what a real deployment keeps as its standing dedup index.
     "q105_incremental_dedup" -> ((s, d) => {
       val docs = table(s, d, "documents")
-      val sigB = minhashSigs(s, d)
-        .select(col("doc_id"), explode(map(
-          lit(0), md5(concat(col("sig0"), col("sig1"))),
-          lit(1), md5(concat(col("sig2"), col("sig3")))))
-          .as(Seq("band_id", "band")))
+      val sigB = bandRows(minhashSigs(s, d))
       val exBands = sigB.filter(col("doc_id") % 2 === 0)
         .select("band_id", "band").distinct()
       val nearIds = sigB.filter(col("doc_id") % 2 === 1)
@@ -800,14 +757,7 @@ object TextOps extends QueryModule {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val sizes = fps.groupBy("doc_id").agg(count(lit(1)).as("a_nfp"))
         .withColumnRenamed("doc_id", "a_id")
-      fps.groupBy("fp")
-        .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-        .filter(size(col("ids")) > 1 && size(col("ids")) <= MaxLshBucket)
-        .select(explode(expr(
-          """flatten(transform(ids, (x, i) ->
-               transform(slice(ids, i + 2, size(ids) - i - 1), y ->
-                 struct(x AS a_id, y AS b_id))))""")).as("p"))
-        .select(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"))
+      bucketPairs(fps, Seq(col("fp")), col("doc_id"), MaxLshBucket)
         .groupBy("a_id", "b_id")
         .agg(count(lit(1)).as("n_shared"))
         .filter(col("n_shared") >= 2)
@@ -990,14 +940,12 @@ object TextOps extends QueryModule {
     // side stays broadcastable at any corpus size. All-integer ppm
     // ratio; ns >= 10 guards the tiny-source degenerate case.
     "q148_boilerplate" -> ((s, d) => {
-      val occ = table(s, d, "documents")
+      // materialized: feeds ns, sdf, and the marker join
+      val occ = materialized(table(s, d, "documents")
         .withColumn("tokens", words(col("text")))
         .filter(size(col("tokens")) >= 2)
-        .select(col("doc_id"), col("source"), explode(expr(
-          """transform(sequence(0, size(tokens) - 2),
-             i -> concat_ws(' ', slice(tokens, i + 1, 2)))""")).as("sg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      occ.count() // materialize once: feeds ns, sdf, and the marker join
+        .select(col("doc_id"), col("source"),
+          explode(ngrams(col("tokens"), 2)).as("sg")))
       val ns = occ.groupBy("source")
         .agg(countDistinct("doc_id").as("ns"))
       val boiler = occ.select("source", "sg", "doc_id").distinct()
@@ -1027,11 +975,9 @@ object TextOps extends QueryModule {
     // per-doc keep decision is map-side codegen.
     "q149_mixture_reweight" -> ((s, d) => {
       val w = 200000L // uniform 5-lang target, ppm
-      val docs = table(s, d, "documents")
+      val docs = materialized(table(s, d, "documents")
         .select(col("doc_id"), col("lang"),
-          size(words(col("text"))).cast("long").as("n_tokens"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      docs.count()
+          size(words(col("text"))).cast("long").as("n_tokens")))
       val perLang = docs.groupBy("lang")
         .agg(sum("n_tokens").as("lang_tokens"))
       val total = perLang.agg(sum("lang_tokens").as("total_tokens"))
@@ -1110,11 +1056,9 @@ object TextOps extends QueryModule {
     // with map-side combine, and the smoothed vocab rides to the
     // scorers as one broadcast.
     "q150_dsir_weights" -> ((s, d) => {
-      val toks = table(s, d, "documents")
+      val toks = materialized(table(s, d, "documents")
         .select(col("doc_id"), col("source"),
-          explode(words(col("text"))).as("tok"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      toks.count()
+          explode(words(col("text"))).as("tok")))
       val tgt = toks.filter(col("source").isin("src0", "src1", "src2", "src3"))
       val vocabAll = toks.groupBy("tok").agg(count(lit(1)).as("cnt_r"))
       val vocabTgt = tgt.groupBy("tok").agg(count(lit(1)).as("cnt_t"))
@@ -1152,7 +1096,8 @@ object TextOps extends QueryModule {
     // Integer micro-nats (q99's floor(ln·1e6) trick) keep the
     // per-doc sums bit-exact across engines at any parallelism.
     "q157_bigram_lm" -> ((s, d) => {
-      val occ = table(s, d, "documents")
+      // materialized: feeds both count tables + scoring
+      val occ = materialized(table(s, d, "documents")
         .withColumn("tokens", words(col("text")))
         .filter(size(col("tokens")) >= 2)
         .select(col("doc_id"), explode(expr(
@@ -1160,9 +1105,7 @@ object TextOps extends QueryModule {
              i -> struct(tokens[i] AS w1,
                          concat_ws(' ', slice(tokens, i + 1, 2)) AS bg))"""))
           .as("p"))
-        .select(col("doc_id"), col("p.w1"), col("p.bg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      occ.count() // materialize once: feeds both count tables + scoring
+        .select(col("doc_id"), col("p.w1"), col("p.bg")))
       val bgCnt = occ.groupBy("bg").agg(count(lit(1)).as("c12"))
       val w1Cnt = occ.groupBy("w1").agg(count(lit(1)).as("c1"))
       val v = w1Cnt.agg(count(lit(1)).as("vv"))
@@ -1484,9 +1427,7 @@ object TextOps extends QueryModule {
       val grams = table(s, d, "documents")
         .select(col("doc_id"), words(col("text")).as("t"))
         .filter(size(col("t")) >= 5)
-        .select(col("doc_id"), explode(expr(
-          """transform(sequence(0, size(t) - 5),
-             i -> array_join(slice(t, i + 1, 5), ' '))""")).as("g"))
+        .select(col("doc_id"), explode(ngrams(col("t"), 5)).as("g"))
         .distinct()
       val bench = grams.filter(col("doc_id") % 97 === 0)
         .select("g").distinct().withColumn("hit", lit(1L))
@@ -1558,9 +1499,8 @@ object TextOps extends QueryModule {
         .select(col("doc_id"), col("n_chars"), words(col("text")).as("t"))
         .withColumn("n_toks", size(col("t")).cast("long"))
         .filter(col("n_toks") >= MinToks)
-      val topG = base.select(col("doc_id"), explode(expr(
-          """transform(sequence(0, size(t) - 2),
-             i -> array_join(slice(t, i + 1, 2), ' '))""")).as("gram"))
+      val topG = base
+        .select(col("doc_id"), explode(ngrams(col("t"), 2)).as("gram"))
         .groupBy("doc_id", "gram").agg(count(lit(1)).as("cnt"))
         .groupBy("doc_id").agg(max(struct(col("cnt"), col("gram"))).as("m"))
         .select(col("doc_id"),
@@ -1569,7 +1509,8 @@ object TextOps extends QueryModule {
         .groupBy("doc_id", "w").agg(count(lit(1)).as("cnt"))
         .groupBy("doc_id").agg(max(struct(col("cnt"), col("w"))).as("m"))
         .select(col("doc_id"), col("m.cnt").as("w_cnt"))
-      val segs = base.select(col("doc_id"), explode(expr(segsExpr)).as("seg"))
+      val segs = base
+        .select(col("doc_id"), explode(segments(col("t"), SegLen)).as("seg"))
         .groupBy("doc_id", "seg").agg(count(lit(1)).as("cnt"))
         .groupBy("doc_id").agg(sum("cnt").as("n_segs"),
           sum(col("cnt") - 1).as("dup_segs"))
@@ -1602,7 +1543,7 @@ object TextOps extends QueryModule {
       val segs = table(s, d, "documents")
         .select(col("doc_id"), words(col("text")).as("t"))
         .filter(size(col("t")) > 0)
-        .select(col("doc_id"), posexplode(expr(segsExpr)))
+        .select(col("doc_id"), posexplode(segments(col("t"), SegLen)))
         .toDF("doc_id", "seg_idx", "seg")
       val firstIdx = Window.partitionBy("doc_id", "seg").orderBy("seg_idx")
       segs.withColumn("rn", row_number().over(firstIdx))
@@ -1679,14 +1620,10 @@ object TextOps extends QueryModule {
     // once — at 100 TB the pair key becomes xxhash64(shingle) (q196's
     // recipe), kept as text here for oracle parity.
     "q237_novelty_rate" -> ((s, d) => {
-      val pairs = table(s, d, "documents")
-        .select(expr("doc_id div 50").as("batch"),
-          words(col("text")).as("tokens"))
-        .filter(size(col("tokens")) >= 3)
-        .select(col("batch"), explode(expr(
-          "transform(sequence(0, size(tokens) - 3)," +
-            " i -> concat_ws(' ', slice(tokens, i + 1, 3)))"))
-          .as("shingle"))
+      val pairs = shingles(
+          table(s, d, "documents")
+            .select(expr("doc_id div 50").as("batch"), col("text")),
+          col("batch"))
         .distinct()
       val totals = pairs.groupBy("batch")
         .agg(count(lit(1)).as("n_shingles"))
@@ -1762,12 +1699,10 @@ object TextOps extends QueryModule {
       // the scan+tokenize pass runs once, not once per consumer (guide
       // §1.2 step 1). Released at the harness boundary per the
       // GraftSession.releaseQueryCaches cache-lifetime contract.
-      val toks = table(s, d, "documents")
+      val toks = materialized(table(s, d, "documents")
         .withColumn("tokens", words(col("text")))
         .filter(size(col("tokens")) >= 2)
-        .select(col("tokens"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      toks.count()
+        .select(col("tokens")))
       val adj = toks.select(explode(expr(
           """transform(sequence(0, size(tokens) - 2),
              i -> struct(element_at(tokens, i + 1) AS a,
@@ -1946,33 +1881,7 @@ object TextOps extends QueryModule {
     // phrase-search serving shape where the postings list is the
     // shuffled unit, never the documents.
     "q327_phrase_occurrences" -> ((s, d) => {
-      // Pass 1 (argmax) explodes shingles as before, over an eagerly
-      // persisted tokenized corpus; pass 2 is now MAP-ONLY — each
-      // doc's occurrence positions of the single top phrase fall out
-      // of one array filter over its cached tokens, replacing the
-      // former re-tokenize + re-explode + broadcast join + groupBy
-      // (the per-doc grain already exists, so the explode-then-regroup
-      // paid a corpus-sized shuffle for nothing — guide §2.4). Output
-      // identical: n_occ = |matches|, first_pos = first match index
-      // (filter preserves the ascending sequence order).
-      val toks = table(s, d, "documents")
-        .withColumn("t", words(col("text")))
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"), col("t"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      toks.count()
-      val sh = toks.select(col("doc_id"), posexplode(expr(
-        """transform(sequence(0, size(t) - 3),
-           i -> concat_ws(' ', slice(t, i + 1, 3)))"""))
-        .as(Seq("pos", "shingle")))
-      val top = sh.groupBy("shingle").agg(count(lit(1)).as("n_total"))
-        .orderBy(col("n_total").desc, col("shingle")).limit(1)
-        .select(col("shingle").as("phrase"), col("n_total"))
-      toks.crossJoin(broadcast(top))
-        .select(col("doc_id"), expr(
-          """filter(sequence(0, size(t) - 3),
-             i -> concat_ws(' ', slice(t, i + 1, 3)) = phrase)""")
-          .as("hits"), col("n_total"))
+      topTrigramHits(s, d)
         .filter(size(col("hits")) > 0)
         .select(col("doc_id"),
           size(col("hits")).cast("long").as("n_occ"),
@@ -2015,34 +1924,9 @@ object TextOps extends QueryModule {
     // tokenized row — no re-scan, no per-occurrence string search).
     // The "show me the hits" serving shape of a concordance/search UI.
     "q350_kwic_contexts" -> ((s, d) => {
-      // Pass 1 (argmax phrase) explodes shingles over an eagerly
-      // persisted tokenized corpus — and no longer drags each doc's
-      // FULL token array through the explode (the old sh carried `t`
-      // on every shingle row just so the join survivors could build
-      // contexts). Pass 2 is MAP-ONLY: each doc's hit positions fall
-      // out of one array filter over its cached tokens, replacing the
-      // re-tokenize + re-explode + broadcast join (guide §2.3: don't
-      // ship payloads through stages that only need keys). Rows
-      // identical: filter preserves the ascending position order and
-      // the context expression is unchanged.
-      val toks = table(s, d, "documents")
-        .withColumn("t", TextOps.words(col("text")))
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"), col("t"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      toks.count()
-      val sh = toks.select(col("doc_id"), posexplode(expr(
-        """transform(sequence(0, size(t) - 3),
-           i -> concat_ws(' ', slice(t, i + 1, 3)))"""))
-        .as(Seq("pos", "shingle")))
-      val top = sh.groupBy("shingle").agg(count(lit(1)).as("n_total"))
-        .orderBy(col("n_total").desc, col("shingle")).limit(1)
-        .select(col("shingle").as("phrase"))
-      toks.crossJoin(broadcast(top))
-        .select(col("doc_id"), col("t"), col("phrase"), explode(expr(
-          """filter(sequence(0, size(t) - 3),
-             i -> concat_ws(' ', slice(t, i + 1, 3)) = phrase)"""))
-          .as("pos"))
+      topTrigramHits(s, d)
+        .select(col("doc_id"), col("t"), col("phrase"),
+          explode(col("hits")).as("pos"))
         .select(col("doc_id"), col("pos").cast("long").as("pos"),
           col("phrase"),
           expr("""array_join(slice(t, greatest(1, pos - 2),

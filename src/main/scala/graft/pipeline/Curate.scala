@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{GraphOps, TextOps}
+import graft.operators.TextKernel.{shingles, signatures, words}
 
 /** End-to-end training-data curation: the individual operators
   * (quality gate, exact dedup, near-dup keep-list, benchmark
@@ -31,37 +32,6 @@ object Curate {
       nShards: Long,
       tokensKept: Long)
 
-  private def toks(c: Column): Column =
-    filter(split(lower(c), " "), w => w =!= "")
-
-  /** Per-doc MinHash signatures over a document FRAME (same formulation
-    * as the q36/q37 dir-based path). */
-  private def sigsOf(docs: DataFrame): DataFrame = {
-    val h = md5(col("shingle"))
-    docs
-      .withColumn("tokens", toks(col("text")))
-      .filter(size(col("tokens")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(0, size(tokens) - 3),
-           i -> concat_ws(' ', slice(tokens, i + 1, 3)))""")).as("shingle"))
-      .groupBy("doc_id")
-      .agg(
-        min(substring(h, 1, 8)).as("sig0"),
-        min(substring(h, 9, 8)).as("sig1"),
-        min(substring(h, 17, 8)).as("sig2"),
-        min(substring(h, 25, 8)).as("sig3"))
-  }
-
-  /** 3-token shingles of a document frame, for the decontamination
-    * overlap join. */
-  private def shinglesOf(docs: DataFrame): DataFrame =
-    docs
-      .withColumn("tokens", toks(col("text")))
-      .filter(size(col("tokens")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(0, size(tokens) - 3),
-           i -> concat_ws(' ', slice(tokens, i + 1, 3)))""")).as("shingle"))
-
   /** Run the full curation chain over `docs` (schema: doc_id, text,
     * lang, source, n_chars), holding out `bench` as the contamination
     * reference; write token-budgeted shards to `outDir` and return the
@@ -77,7 +47,7 @@ object Curate {
 
     // 1) row-local quality gate — pure scan filter, zero shuffle
     val quality = docs
-      .withColumn("n_tokens", size(toks(col("text"))).cast("long"))
+      .withColumn("n_tokens", size(words(col("text"))).cast("long"))
       .filter(col("n_tokens") >= minTokens)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nQuality = quality.count()
@@ -97,7 +67,8 @@ object Curate {
     //    keep each family's min doc_id (docs outside any pair survive
     //    via the left_anti branch)
     val (comp, adj) = GraphOps.componentsAndAdjacency(
-      TextOps.lshPairsOf(sigsOf(exact), TextOps.MaxLshBucket), rounds = 6)
+      TextOps.lshPairsOf(signatures(exact), TextOps.MaxLshBucket),
+      rounds = 6)
     val nearKeep = exact.join(
       comp.filter(col("id") =!= col("comp"))
         .select(col("id").as("doc_id")),
@@ -107,8 +78,8 @@ object Curate {
 
     // 4) decontamination: drop any doc sharing a 3-gram with the
     //    benchmark set (one hash join on the shingle key)
-    val contaminated = shinglesOf(nearKeep)
-      .join(shinglesOf(bench).select("shingle").distinct(),
+    val contaminated = shingles(nearKeep, col("doc_id"))
+      .join(shingles(bench, col("doc_id")).select("shingle").distinct(),
         Seq("shingle"), "left_semi")
       .select("doc_id").distinct()
     val clean = nearKeep.join(contaminated, Seq("doc_id"), "left_anti")

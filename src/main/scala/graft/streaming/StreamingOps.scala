@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
+import graft.operators.TextKernel.{bands, signatures}
+
 /** Structured Streaming surface over the `events` table. The reference
   * is pure batch (SURVEY.md §2.10) — these are the engine's streaming
   * extension: the same event-time aggregations expressed as incremental
@@ -292,24 +294,16 @@ object StreamingOps extends graft.operators.QueryModule {
     StructField("n_chars", LongType)))
 
   /** Streaming near-dup signature index: MinHash-LSH bands computed
-    * PER ROW with array lambdas (tokenize → shingle-hash → array_min —
-    * zero shuffle, unlike the batch explode+groupBy formulation), then
-    * a per-signature aggregation whose state is one row per distinct
+    * PER ROW by the native signature kernel (zero shuffle), then a
+    * per-signature aggregation whose state is one row per distinct
     * band pair. This is the standing dedup index q105 screens against,
     * maintained incrementally as documents arrive; keeper = min doc_id
     * makes the survivor deterministic under any micro-batch split. */
   def streamNeardupIndex(s: SparkSession, dir: String): DataFrame = {
-    def sig(off: Int) = array_min(expr(
-      s"transform(hs, h -> substring(h, $off, 8))"))
-    val idx = s.readStream.schema(docsSchema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      .withColumn("tokens", words(col("text")))
-      .filter(size(col("tokens")) >= 3)
-      .withColumn("hs", expr(
-        """transform(sequence(0, size(tokens) - 3),
-           i -> md5(concat_ws(' ', slice(tokens, i + 1, 3))))"""))
-      .withColumn("band0", md5(concat(sig(1), sig(9))))
-      .withColumn("band1", md5(concat(sig(17), sig(25))))
+    val band = bands(k => col(s"sig$k"))
+    val idx = signatures(s.readStream.schema(docsSchema)
+        .option("pathGlobFilter", "documents.parquet").parquet(dir))
+      .select(col("doc_id"), band(0).as("band0"), band(1).as("band1"))
       .groupBy("band0", "band1")
       .agg(min("doc_id").as("keeper"), count(lit(1)).as("n_docs"))
     runToTable(idx, "complete")

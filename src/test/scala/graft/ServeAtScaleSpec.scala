@@ -35,8 +35,15 @@ class ServeAtScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = graft.SparkTestSession.cleanup()
 
   test("bucketed serving layout: built, audited, result-identical") {
+    // the audits plan with AQE and broadcast off; the caller's values
+    // of both keys must come through the run unchanged
+    val scoped = Map(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "1234567")
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
     val m = ServeAtScale.run(spark, "/root/testdata/sf0.001",
       servingDir, buckets = 8)
+    for ((k, v) <- scoped) assert(spark.conf.get(k) == v, k)
     assert(m("exchange_free_hot_join") == true)
     assert(m("bucket_pruned_single_page") == true)
     assert(m("serve_page_rows").asInstanceOf[Int] > 0)
