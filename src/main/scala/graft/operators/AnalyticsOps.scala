@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables.table
-import graft.operators.TextKernel.{ngrams, words}
+import graft.operators.TextKernel.{adjacentPairs, ngrams, words}
 
 /** Business and behavioural analytics over the orders, lineitem and
   * events tables: cohorts and retention, funnels and paths, baskets and
@@ -473,10 +473,7 @@ object AnalyticsOps extends QueryModule {
         .groupBy("tok").agg(count(lit(1)).as("cnt")))
       val totalU = uni.agg(sum("cnt").as("tu"))
       val bi = docs.filter(size(col("tokens")) >= 2)
-        .select(explode(expr(
-          """transform(sequence(0, size(tokens) - 2),
-             i -> struct(element_at(tokens, i + 1) AS a,
-                         element_at(tokens, i + 2) AS b))""")).as("p"))
+        .select(explode(adjacentPairs(col("tokens"))).as("p"))
         .select(col("p.a"), col("p.b"))
         .groupBy("a", "b").agg(count(lit(1)).as("cab"))
         .filter(col("cab") >= 5)

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 /** The engine's near-duplicate text kernel. Each decision the dedup,
   * curation and text-analytics queries share is defined here once:
   *
-  *  - how a document becomes words ([[words]]) and sliding word
-  *    n-grams ([[ngrams]], [[shingles]]);
+  *  - how a document becomes words ([[words]]), sliding word
+  *    n-grams ([[ngrams]], [[shingles]]) and adjacent word pairs
+  *    ([[adjacentPairs]]);
   *  - how 3-word shingles fold into a 4-slot MinHash signature
   *    ([[minhash]], [[signatures]]);
   *  - how signature slots become LSH band keys ([[bands]]);
@@ -29,6 +30,14 @@ object TextKernel {
   def ngrams(tokens: Column, n: Int): Column =
     transform(sequence(lit(0), size(tokens) - n),
       i => concat_ws(" ", slice(tokens, i + 1, lit(n))))
+
+  /** Adjacent word pairs in order: element i (0-based) is the struct
+    * (a = tokens i+1, b = tokens i+2). Needs `size(tokens) >= 2`, which
+    * callers filter first. */
+  def adjacentPairs(tokens: Column): Column =
+    transform(sequence(lit(0), size(tokens) - 2),
+      i => struct(element_at(tokens, i + 1).as("a"),
+        element_at(tokens, i + 2).as("b")))
 
   /** Non-overlapping `len`-word segments in order, the last one
     * possibly shorter. Needs a non-empty array. */

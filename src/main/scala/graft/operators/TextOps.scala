@@ -7,7 +7,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables.table
 import graft.operators.TextKernel.{
-  bands, bucketPairs, ngrams, segments, shingles, signatures, words}
+  adjacentPairs, bands, bucketPairs, ngrams, segments, shingles, signatures,
+  words}
 
 /** Text-analysis + deduplication operators for large-scale training-data
   * pipelines, exercised over the `documents` table: exact dedup,
@@ -1703,10 +1704,7 @@ object TextOps extends QueryModule {
         .withColumn("tokens", words(col("text")))
         .filter(size(col("tokens")) >= 2)
         .select(col("tokens")))
-      val adj = toks.select(explode(expr(
-          """transform(sequence(0, size(tokens) - 2),
-             i -> struct(element_at(tokens, i + 1) AS a,
-                         element_at(tokens, i + 2) AS b))""")).as("p"))
+      val adj = toks.select(explode(adjacentPairs(col("tokens"))).as("p"))
         .select(col("p.a").as("a"), col("p.b").as("b"))
         .filter(col("a") =!= col("b"))
       val vocab = toks.select(explode(col("tokens")).as("w"))

@@ -90,7 +90,8 @@ object WikitextOps extends QueryModule {
         stagedTableNames.foreach { n => // leave stale staging behind
           t(n).coalesce(1).write.mode("overwrite").parquet(s"$root/$n.parquet")
         }
-        CitationPipeline.extractRefs(syntheticRevisions(s, d))
+        CitationPipeline
+          .extractRows(syntheticRevisions(s, d), emitRefless = false)
           .select(col("referenceType").cast("int").as("reference_type"),
             col("referenceNormalized").as("reference_normalized"))
           .coalesce(1).write.mode("overwrite")

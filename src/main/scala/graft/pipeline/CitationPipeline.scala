@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Revision
+import graft.sources.{MwRevZst, Revision}
 import graft.wikitext.{ReferenceExtractor, WikitextNormalizer}
 
 /** One template invocation attached to an extracted reference, with the
@@ -45,10 +45,13 @@ final case class ExtractedRow(
   *
   * Scale design:
   *  - extraction is a typed `flatMap` (the Generator/UDTF analogue) —
-  *    embarrassingly parallel, no shuffle; one bundle file = one task;
-  *  - `build` materializes the extracted rows ONCE as zstd parquet, then
-  *    derives all 11 tables from that staging set with column-pruned
-  *    scans — bundles are decompressed exactly once;
+  *    embarrassingly parallel, no shuffle; a bundle is never split
+  *    across tasks;
+  *  - `build` is `stage`, which materializes the extracted rows ONCE as
+  *    zstd parquet, then `publish`, which derives all 11 tables from
+  *    that staging set with column-pruned scans — bundles are
+  *    decompressed exactly once. The streaming ingest runs the same two
+  *    steps;
   *  - sha1/parse_url run as codegen'd built-ins on the staged DataFrame,
   *    not inside the flatMap;
   *  - each table's dedup is a single hash shuffle on its natural key
@@ -148,12 +151,6 @@ object CitationPipeline {
         urls = Nil, templates = Nil))
     }
   }
-
-  /** References only (no refless markers). */
-  def extractRefs(
-      revs: Dataset[Revision],
-      domain: String = "en.wikipedia.org"): Dataset[ExtractedRow] =
-    extractRows(revs, domain, emitRefless = false)
 
   private def isRef: Column = col("rawReference") =!= ""
 
@@ -273,12 +270,6 @@ object CitationPipeline {
       "template_data" -> templateData)
   }
 
-  /** Extract + derive in one call (small inputs / tests). */
-  def stagingTables(
-      revs: Dataset[Revision],
-      domain: String = "en.wikipedia.org"): Map[String, DataFrame] =
-    stagingFromRows(extractRows(revs, domain, emitRefless = true), domain)
-
   /** A1/A2: per-table distinct — `distinct()` for whole-row tables,
     * `dropDuplicates(keys)` for keyed ones (arbitrary survivor, matching
     * DuckDB `DISTINCT ON` with no ORDER BY). */
@@ -302,7 +293,7 @@ object CitationPipeline {
         .mkString(", ")}"))
     val conf = spark.sparkContext.hadoopConfiguration
     val targets = table.map(Seq(_))
-      .getOrElse(dedupKeys.keys.toSeq :+ "_staged_refs")
+      .getOrElse(dedupKeys.keys.toSeq :+ StagedRefs)
     targets.foreach { t =>
       if (bucketedTables(t))
         spark.sql(s"DROP TABLE IF EXISTS ${servingTableName(t)}")
@@ -346,8 +337,7 @@ object CitationPipeline {
     else spark.read.parquet(s"$outDir/$table")
 
   /** Publish the deduped table set: bucketed catalog tables for the
-    * big two, plain zstd parquet otherwise. Shared by the batch build
-    * and the streaming refresh so both layouts are identical. */
+    * big two, plain zstd parquet otherwise. */
   def writeTables(
       tables: Map[String, DataFrame],
       outDir: String,
@@ -366,6 +356,37 @@ object CitationPipeline {
           .parquet(s"$outDir/$name")
     }
 
+  /** The staging set under `outDir`: every extracted row, as zstd
+    * parquet. */
+  val StagedRefs = "_staged_refs"
+
+  /** Extract `revs` (refless markers included) into the staging set:
+    * `SaveMode.Overwrite` for a batch build, `SaveMode.Append` for a
+    * streaming micro-batch. */
+  def stage(
+      revs: Dataset[Revision],
+      outDir: String,
+      mode: SaveMode,
+      domain: String = "en.wikipedia.org"): Unit =
+    extractRows(revs, domain, emitRefless = true)
+      .write.mode(mode).option("compression", "zstd")
+      .parquet(s"$outDir/$StagedRefs")
+
+  /** Derive, dedup and publish the 11 tables from the whole staging
+    * set; returns the deduped tables. Dedup-on-read also absorbs rows
+    * a retried streaming micro-batch appended twice. */
+  def publish(
+      spark: SparkSession,
+      outDir: String,
+      domain: String = "en.wikipedia.org",
+      buckets: Int = 32): Map[String, DataFrame] = {
+    import spark.implicits._
+    val staged = spark.read.parquet(s"$outDir/$StagedRefs").as[ExtractedRow]
+    val tables = dedup(stagingFromRows(staged, domain))
+    writeTables(tables, outDir, buckets)
+    tables
+  }
+
   /** Full pipeline: bundle glob → one extraction pass materialized as
     * zstd parquet → 11 deduped tables (S2/S4/S5). `buckets` sizes the
     * page_id bucketing of the two big tables (32 here; O(thousands) on
@@ -377,13 +398,8 @@ object CitationPipeline {
       outDir: String,
       domain: String = "en.wikipedia.org",
       buckets: Int = 32): Unit = {
-    import spark.implicits._
-    val revs = graft.sources.MwRevZst.read(spark, bundleGlob)
-    extractRows(revs, domain, emitRefless = true)
-      .write.mode("overwrite").option("compression", "zstd")
-      .parquet(s"$outDir/_staged_refs")
-    val staged =
-      spark.read.parquet(s"$outDir/_staged_refs").as[ExtractedRow]
-    writeTables(dedup(stagingFromRows(staged, domain)), outDir, buckets)
+    stage(MwRevZst.read(spark, bundleGlob), outDir, SaveMode.Overwrite,
+      domain)
+    publish(spark, outDir, domain, buckets)
   }
 }

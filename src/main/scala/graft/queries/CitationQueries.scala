@@ -24,6 +24,55 @@ object CitationQueries {
 
   private def clamp(limit: Int): Int = math.min(math.max(limit, 0), MaxLimit)
 
+  /** A6: first/last seen (timestamp and revision id) and appearance
+    * count of every citation instance `(page_id, raw_sha1)` in
+    * `citationHistories`. */
+  private def historyStats(
+      citationHistories: DataFrame, revisions: DataFrame): DataFrame =
+    citationHistories
+      .join(revisions.select("revision_id", "revision_timestamp"),
+        "revision_id")
+      .groupBy("page_id", "raw_sha1")
+      .agg(
+        min("revision_timestamp").as("first_seen"),
+        max("revision_timestamp").as("last_seen"),
+        min("revision_id").as("first_seen_revision_id"),
+        max("revision_id").as("last_seen_revision_id"),
+        count(lit(1)).as("appearance_count"))
+
+  /** The distinct pages citing a normalized citation. */
+  private def citingPages(
+      citationInstances: DataFrame, normalizedSha1: String): DataFrame =
+    citationInstances
+      .filter(col("normalized_sha1") === normalizedSha1)
+      .select("page_id").distinct()
+
+  /** Every appearance (instance → history row → revision) of a
+    * normalized citation, optionally on one page only. */
+  private def appearances(
+      citationInstances: DataFrame, citationHistories: DataFrame,
+      revisions: DataFrame, normalizedSha1: String,
+      pageId: Option[Int] = None): DataFrame = {
+    val instances = citationInstances
+      .filter(col("normalized_sha1") === normalizedSha1)
+      .select("page_id", "raw_sha1")
+    pageId.fold(instances)(p => instances.filter(col("page_id") === p))
+      .join(citationHistories, Seq("page_id", "raw_sha1"))
+      .join(revisions.select("revision_id", "revision_timestamp"),
+        "revision_id")
+  }
+
+  /** A9: one row per template invocation `(template_name,
+    * offset_start)` of a normalized citation, with its parameters as a
+    * key-sorted map (api_v1.py:323-333 `map_from_entries` shape). */
+  private def invocations(
+      templateData: DataFrame, normalizedSha1: String): DataFrame =
+    templateData.filter(col("normalized_sha1") === normalizedSha1)
+      .groupBy("template_name", "offset_start")
+      .agg(map_from_entries(sort_array(collect_list(
+        struct(col("parameter_key"), col("parameter_value")))))
+        .as("parameters"))
+
   /** Enum → label map (api_v1.py:14, F13). */
   val referenceTypeLabel: org.apache.spark.sql.Column =
     when(col("reference_type") === 1, "inline")
@@ -126,18 +175,7 @@ object CitationQueries {
           Seq("revision_id"), "left_semi")
     }).select(col("page_id"), col("raw_sha1"))
 
-    // A6 history stats over the full (pruned) history.
-    val stats = ch
-      .join(rev.select("revision_id", "revision_timestamp"), "revision_id")
-      .groupBy("page_id", "raw_sha1")
-      .agg(
-        min("revision_timestamp").as("first_seen"),
-        max("revision_timestamp").as("last_seen"),
-        min("revision_id").as("first_seen_revision_id"),
-        max("revision_id").as("last_seen_revision_id"),
-        count(lit(1)).as("appearance_count"))
-
-    val withFlags = stats
+    val withFlags = historyStats(ch, rev)
       .join(broadcast(timeline.select(
           col("revision_id").as("last_seen_revision_id"),
           col("next_revision_id"), col("latest_rev"))),
@@ -176,16 +214,7 @@ object CitationQueries {
       citationHistories: DataFrame, revisions: DataFrame): DataFrame = {
     val latest = revisions.groupBy("page_id")
       .agg(max("revision_id").as("latest_rev"))
-    val stats = citationHistories
-      .join(revisions.select("revision_id", "revision_timestamp"),
-        "revision_id")
-      .groupBy("page_id", "raw_sha1")
-      .agg(
-        min("revision_timestamp").as("first_seen"),
-        max("revision_timestamp").as("last_seen"),
-        max("revision_id").as("last_seen_revision_id"),
-        count(lit(1)).as("appearance_count"))
-    stats.join(latest, "page_id")
+    historyStats(citationHistories, revisions).join(latest, "page_id")
       .filter(col("last_seen_revision_id") === col("latest_rev"))
       .join(citationInstances, Seq("page_id", "raw_sha1"))
       .join(normalizedCitations, Seq("normalized_sha1"))
@@ -207,21 +236,14 @@ object CitationQueries {
       .filter(col("normalized_sha1") === normalizedSha1)
       .select("normalized_sha1", "reference_normalized")
 
-    val articles = citationInstances
-      .filter(col("normalized_sha1") === normalizedSha1)
-      .select("page_id").distinct()
+    val articles = citingPages(citationInstances, normalizedSha1)
       .agg(sort_array(collect_list("page_id")).as("appears_on_articles"))
 
     val links = ncwr.filter(col("normalized_sha1") === normalizedSha1)
       .select("url").distinct()
       .agg(sort_array(collect_list("url")).as("extracted_links"))
 
-    val templates = templateData
-      .filter(col("normalized_sha1") === normalizedSha1)
-      .groupBy("template_name", "offset_start")
-      .agg(map_from_entries(sort_array(collect_list(
-        struct(col("parameter_key"), col("parameter_value")))))
-        .as("parameters"))
+    val templates = invocations(templateData, normalizedSha1)
       .agg(collect_list(struct(
         col("offset_start"), col("template_name"), col("parameters")))
         .as("templates"))
@@ -235,12 +257,8 @@ object CitationQueries {
                   WHEN l.template_name > r.template_name THEN 1
                   ELSE 0 END)"""))
 
-    val history = citationInstances
-      .filter(col("normalized_sha1") === normalizedSha1)
-      .select("page_id", "raw_sha1")
-      .join(citationHistories, Seq("page_id", "raw_sha1"))
-      .join(revisions.select("revision_id", "revision_timestamp"),
-        "revision_id")
+    val history = appearances(citationInstances, citationHistories,
+        revisions, normalizedSha1)
       .agg(sort_array(collect_list(struct(
         col("revision_timestamp"), col("revision_id"), col("page_id"))))
         .as("history"))
@@ -255,19 +273,11 @@ object CitationQueries {
   def citationHistoryByNormalized(
       citationInstances: DataFrame, citationHistories: DataFrame,
       revisions: DataFrame, normalizedSha1: String,
-      pageId: Option[Int] = None): DataFrame = {
-    val instances = citationInstances
-      .filter(col("normalized_sha1") === normalizedSha1)
-      .select("page_id", "raw_sha1")
-    val filtered =
-      pageId.fold(instances)(p => instances.filter(col("page_id") === p))
-    filtered
-      .join(citationHistories, Seq("page_id", "raw_sha1"))
-      .join(revisions.select("revision_id", "revision_timestamp"),
-        "revision_id")
+      pageId: Option[Int] = None): DataFrame =
+    appearances(citationInstances, citationHistories, revisions,
+      normalizedSha1, pageId)
       .select("revision_id", "revision_timestamp", "page_id")
       .orderBy("revision_timestamp", "revision_id", "page_id") // O1
-  }
 
   /** GET /citation/{page_id}/{raw_sha1}/history: full appearance
     * timeline of one citation instance (J2 + O1). */
@@ -286,9 +296,7 @@ object CitationQueries {
       normalizedCitations: DataFrame, citationInstances: DataFrame,
       normalizedSha1: String, excludePageId: Option[Int] = None):
       DataFrame = {
-    val base = citationInstances
-      .filter(col("normalized_sha1") === normalizedSha1)
-      .select(col("page_id")).distinct()
+    val base = citingPages(citationInstances, normalizedSha1)
     excludePageId.fold(base)(p => base.filter(col("page_id") =!= p))
       .orderBy("page_id") // O3
   }
@@ -328,14 +336,9 @@ object CitationQueries {
         col("reference_normalized"))
       .orderBy("page_id", "raw_sha1")
 
-  /** Per-invocation template parameters pivoted to a map (A9 —
-    * api_v1.py:323-333 `map_from_entries` shape). */
+  /** Per-invocation template parameters pivoted to a map (A9). */
   def templateParamsMap(templateData: DataFrame,
       normalizedSha1: String): DataFrame =
-    templateData.filter(col("normalized_sha1") === normalizedSha1)
-      .groupBy("template_name", "offset_start")
-      .agg(map_from_entries(sort_array(collect_list(
-        struct(col("parameter_key"), col("parameter_value")))))
-        .as("parameters"))
+    invocations(templateData, normalizedSha1)
       .orderBy("offset_start", "template_name") // O4
 }

@@ -8,24 +8,22 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 for `.mwrev.zst` revision bundles — the "polish" form
-  * of S1 (SURVEY.md §2.1/§7.3): `spark.read.format("mwrev").load(glob)`.
+/** DataSource V2 for `.mwrev.zst` revision bundles, streaming only:
+  * `spark.readStream.format("mwrev").load(glob).as[Revision]`. Batch
+  * reads go through [[MwRevZst.read]].
   *
   * One bundle file = one InputPartition (a zstd stream is not
-  * splittable). Implements column pruning: when `revision_text` is not
-  * in the required schema the reader never accumulates text lines —
-  * metadata-only scans (counts, timelines) skip ~95% of the decode
-  * work.
+  * splittable). The schema and the rows are the [[Revision]] encoder's,
+  * so the stream reads back `as[Revision]` with no renaming.
   */
 class MwRevDataSource extends TableProvider with DataSourceRegister {
 
@@ -41,13 +39,10 @@ class MwRevDataSource extends TableProvider with DataSourceRegister {
 }
 
 object MwRevDataSource {
-  val schema: StructType = StructType(Seq(
-    StructField("page_id", IntegerType),
-    StructField("namespace_id", IntegerType),
-    StructField("revision_id", LongType),
-    StructField("parent_revision_id", LongType),
-    StructField("revision_timestamp", StringType),
-    StructField("revision_text", StringType)))
+  private[sources] val encoder: ExpressionEncoder[Revision] =
+    ExpressionEncoder[Revision]()
+
+  val schema: StructType = encoder.schema
 
   /** The bundle files `path` names, sorted: the files a glob matches,
     * with each matched directory replaced by its `.mwrev.zst` files.
@@ -76,8 +71,7 @@ private class MwRevTable(properties: Map[String, String])
   override def schema(): StructType = MwRevDataSource.schema
 
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(
-      TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
+    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
 
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder = {
@@ -86,41 +80,21 @@ private class MwRevTable(properties: Map[String, String])
     // the executor-side readers instead of a bare `new Configuration()`.
     val conf = new SerializableConfiguration(
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    new MwRevScanBuilder(options.asScala.getOrElse("path",
+    val scan = new MwRevScan(options.asScala.getOrElse("path",
       properties.getOrElse("path", sys.error("mwrev: no path given"))),
       conf)
+    () => scan
   }
 }
 
-private class MwRevScanBuilder(
-    path: String, conf: SerializableConfiguration)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-
-  private var required: StructType = MwRevDataSource.schema
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan = new MwRevScan(path, required, conf)
-}
-
 private class MwRevScan(
-    path: String, required: StructType,
-    private[sources] val conf: SerializableConfiguration)
-    extends Scan with Batch {
+    path: String, private[sources] val conf: SerializableConfiguration)
+    extends Scan {
 
-  override def readSchema(): StructType = required
-
-  override def toBatch: Batch = this
+  override def readSchema(): StructType = MwRevDataSource.schema
 
   private[sources] def listFiles(): Seq[String] =
     MwRevDataSource.bundleFiles(path, conf.value)
-
-  override def planInputPartitions(): Array[InputPartition] =
-    listFiles().map(f => MwRevPartition(f): InputPartition).toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new MwRevReaderFactory(required.fieldNames, conf)
 
   /** Streaming ingestion of a bundle directory — the Structured
     * Streaming replacement for the reference's DONE.txt bookkeeping
@@ -168,7 +142,7 @@ private class MwRevMicroBatchStream(scan: MwRevScan)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new MwRevReaderFactory(scan.readSchema().fieldNames, scan.conf)
+    new MwRevReaderFactory(scan.conf)
 
   override def commit(end: Offset): Unit = ()
 
@@ -177,27 +151,23 @@ private class MwRevMicroBatchStream(scan: MwRevScan)
 
 private case class MwRevPartition(file: String) extends InputPartition
 
-private class MwRevReaderFactory(
-    columns: Array[String], conf: SerializableConfiguration)
+private class MwRevReaderFactory(conf: SerializableConfiguration)
     extends PartitionReaderFactory {
 
   override def createReader(
-      partition: InputPartition): PartitionReader[InternalRow] = {
-    val file = partition.asInstanceOf[MwRevPartition].file
-    new MwRevPartitionReader(file, columns, conf)
-  }
+      partition: InputPartition): PartitionReader[InternalRow] =
+    new MwRevPartitionReader(
+      partition.asInstanceOf[MwRevPartition].file, conf)
 }
 
 private class MwRevPartitionReader(
-    file: String, columns: Array[String], conf: SerializableConfiguration)
+    file: String, conf: SerializableConfiguration)
     extends PartitionReader[InternalRow] {
 
-  private val wantText = columns.contains("revision_text")
   private val p = new Path(file)
   private val in = FileSystem.get(p.toUri, conf.value).open(p)
-  private val revisions: Iterator[Revision] =
-    if (wantText) MwRevZst.parse(in, file)
-    else MwRevZst.parseMetaOnly(in, file)
+  private val revisions = MwRevZst.parse(in, file)
+  private val toRow = MwRevDataSource.encoder.createSerializer()
   private var current: Revision = _
 
   override def next(): Boolean = {
@@ -205,20 +175,7 @@ private class MwRevPartitionReader(
     else false
   }
 
-  override def get(): InternalRow = {
-    val values = columns.map {
-      case "page_id" => current.pageId
-      case "namespace_id" => current.namespaceId.map(Int.box).orNull
-      case "revision_id" => current.revisionId
-      case "parent_revision_id" =>
-        current.parentRevisionId.map(Long.box).orNull
-      case "revision_timestamp" =>
-        UTF8String.fromString(current.revisionTimestamp)
-      case "revision_text" => UTF8String.fromString(current.revisionText)
-      case other => sys.error(s"mwrev: unknown column $other")
-    }
-    new GenericInternalRow(values.asInstanceOf[Array[Any]])
-  }
+  override def get(): InternalRow = toRow(current)
 
   override def close(): Unit = in.close()
 }

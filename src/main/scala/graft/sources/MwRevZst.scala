@@ -26,6 +26,10 @@ final case class Revision(
   * `timestamp`); lines starting with a single space are revision text
   * (the space is stripped); all other lines are ignored.
   *
+  * [[read]] is the one batch reader; the `mwrev` source
+  * ([[MwRevDataSource]]) is the streaming one, and both decode through
+  * [[parse]].
+  *
   * Spark shape: one zstd stream is not splittable, so a bundle is never
   * split across tasks (matching the reference's process-per-file
   * parallelism, build_all.py:125-129). `binaryFiles` packs small
@@ -34,16 +38,16 @@ final case class Revision(
   * `PortableDataStream`; decode is a streaming iterator — constant
   * memory regardless of bundle size, which is what lets this run over
   * thousands of multi-GB bundles on a cluster. On a small corpus the
-  * packing is the faster layout: one task per bundle (the `mwrev`
-  * source's plan) made a cold 8-bundle build slower, in both the
-  * extract and the publish of its staged files.
+  * packing is the faster layout: one task per bundle made a cold
+  * 8-bundle build slower, in both the extract and the publish of its
+  * staged files.
   */
 object MwRevZst {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Bundles truncated by a mid-stream I/O error since JVM start (per
-    * executor). Corruption salvage is intentional (see [[parseImpl]]),
+    * executor). Corruption salvage is intentional (see [[parse]]),
     * but it must be OBSERVABLE — a silent catch turns partial data loss
     * into a "successful" scan. Tests and ops dashboards read this. */
   val truncatedBundles = new java.util.concurrent.atomic.AtomicLong(0)
@@ -63,19 +67,9 @@ object MwRevZst {
       .toDS()
   }
 
-  /** Streaming parse of one decompressed bundle. `source` labels the
-    * bundle in truncation warnings. */
-  def parse(in: InputStream, source: String = "<stream>"): Iterator[Revision] =
-    parseImpl(in, true, source)
-
-  /** Metadata-only parse: text lines are skipped, `revisionText` is ""
-    * — backs column-pruned scans in the V2 source. */
-  def parseMetaOnly(
-      in: InputStream, source: String = "<stream>"): Iterator[Revision] =
-    parseImpl(in, false, source)
-
-  private def parseImpl(
-      in: InputStream, keepText: Boolean, source: String): Iterator[Revision] = {
+  /** Streaming parse of one zstd-compressed bundle. `source` labels
+    * the bundle in truncation warnings. */
+  def parse(in: InputStream, source: String = "<stream>"): Iterator[Revision] = {
     val reader = new BufferedReader(new InputStreamReader(
       new ZstdInputStream(in), StandardCharsets.UTF_8))
     new Iterator[Revision] {
@@ -121,7 +115,7 @@ object MwRevZst {
             current = Some(parseMeta(line.substring(1).trim))
             pending = flushed
           } else if (line.startsWith(" ")) {
-            if (keepText) textLines += line.substring(1)
+            textLines += line.substring(1)
           } // else: ignored line
         }
       }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.pipeline.CitationPipeline
@@ -9,9 +9,9 @@ import graft.sources.Revision
 /** Incremental citation pipeline: continuous ingestion of newly
   * arriving `.mwrev.zst` bundles via the mwrev MicroBatchStream.
   *
-  * Each micro-batch extracts its revisions (same typed flatMap as the
-  * batch pipeline) and APPENDS to the staged-refs parquet set; the
-  * checkpoint guarantees each bundle is read once across restarts.
+  * Each micro-batch runs the batch pipeline's `stage` step in APPEND
+  * mode on its revisions, and `refreshTables` is its `publish` step;
+  * the checkpoint guarantees each bundle is read once across restarts.
   * Batch-side retries can at worst re-append — and the downstream
   * table derivation dedups on content-addressed natural keys, so
   * re-appends are absorbed exactly like the reference's idempotent
@@ -28,26 +28,12 @@ object StreamingPipeline {
       spark: SparkSession, bundleGlob: String, outDir: String,
       domain: String = "en.wikipedia.org"): Unit = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val stream = spark.readStream.format("mwrev").load(bundleGlob)
-      .select(
-        col("page_id").as("pageId"),
-        col("namespace_id").as("namespaceId"),
-        col("revision_id").as("revisionId"),
-        col("parent_revision_id").as("parentRevisionId"),
-        col("revision_timestamp").as("revisionTimestamp"),
-        col("revision_text").as("revisionText"))
-      .as[Revision]
-    val q = stream.writeStream
+    val q = spark.readStream.format("mwrev").load(bundleGlob).as[Revision]
+      .writeStream
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Revision],
-          batchId: Long) =>
-        CitationPipeline
-          .extractRows(batch, domain, emitRefless = true)
-          .write.mode("append").option("compression", "zstd")
-          .parquet(s"$outDir/_staged_refs")
-        ()
+      .foreachBatch { (batch: Dataset[Revision], _: Long) =>
+        CitationPipeline.stage(batch, outDir, SaveMode.Append, domain)
       }
       .start()
     q.awaitTermination()
@@ -57,14 +43,6 @@ object StreamingPipeline {
     * (dedup-on-read absorbs any at-least-once re-appends). */
   def refreshTables(
       spark: SparkSession, outDir: String,
-      domain: String = "en.wikipedia.org"): Map[String, DataFrame] = {
-    import spark.implicits._
-    val staged = spark.read
-      .parquet(s"$outDir/_staged_refs")
-      .as[graft.pipeline.ExtractedRow]
-    val tables =
-      CitationPipeline.dedup(CitationPipeline.stagingFromRows(staged, domain))
-    CitationPipeline.writeTables(tables, outDir)
-    tables
-  }
+      domain: String = "en.wikipedia.org"): Map[String, DataFrame] =
+    CitationPipeline.publish(spark, outDir, domain)
 }

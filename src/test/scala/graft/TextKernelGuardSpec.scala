@@ -10,21 +10,24 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The near-duplicate decisions have one definition, in
   * `graft.operators.TextKernel`: no other main source spells out the
-  * sliding word n-gram, the MinHash slot fold or the in-bucket pair
-  * expansion. The DuckDB oracle statements are the exception; they
-  * state the same decisions independently, as the reference. */
+  * sliding word n-gram, the adjacent word pair, the MinHash slot fold
+  * or the in-bucket pair expansion. The DuckDB oracle statements are
+  * the exception; they state the same decisions independently, as the
+  * reference. */
 class TextKernelGuardSpec extends AnyFunSuite {
 
-  /** Each main Scala source but the kernel: (file name, text). */
-  private lazy val sources: Seq[(String, String)] = {
+  /** Every main Scala source: (file name, text). */
+  private lazy val all: Seq[(String, String)] = {
     val root = Paths.get("src/main")
     assert(Files.isDirectory(root), root.toAbsolutePath)
     Using.resource(Files.walk(root))(_.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        p.getFileName.toString != "TextKernel.scala")
+      .filter(_.toString.endsWith(".scala"))
       .map(p => p.getFileName.toString -> Files.readString(p))
       .toSeq)
   }
+
+  /** Each main Scala source but the kernel. */
+  private lazy val sources = all.filter(_._1 != "TextKernel.scala")
 
   private val tripleQuoted = "(?s)\"\"\".*?\"\"\"".r
 
@@ -51,6 +54,8 @@ class TextKernelGuardSpec extends AnyFunSuite {
 
   private val pairLambda = """slice\(ids, i \+ 2""".r
 
+  private val adjacentPair = """element_at\([^,()]+, i \+ 2\)""".r
+
   test("the sliding n-gram lambda appears only where it builds more " +
     "than the n-gram") {
     // q157 pairs each bigram with its first word; q327/q350 compare
@@ -68,5 +73,12 @@ class TextKernelGuardSpec extends AnyFunSuite {
 
   test("no in-bucket pair expansion outside the kernel") {
     assert(sparkSide(pairLambda).isEmpty)
+  }
+
+  test("the adjacent word pair is spelled only in the kernel") {
+    // the kernel's own spelling matches, so the pattern is live
+    assert(all.exists { case (f, t) =>
+      f == "TextKernel.scala" && adjacentPair.findFirstIn(t).isDefined })
+    assert(sparkSide(adjacentPair).isEmpty)
   }
 }

@@ -10,7 +10,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.CitationQueries
-import graft.sources.MwRevZst
+import graft.sources.{MwRevZst, Revision}
 
 /** End-to-end slice (SURVEY.md §7.2): synthetic `.mwrev.zst` bundle →
   * source → extract → dedup → citationsAtRevision, asserted against the
@@ -56,7 +56,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val tables = {
     val revs = MwRevZst.read(spark, s"$bundleDir/*.mwrev.zst")
-    CitationPipeline.dedup(CitationPipeline.stagingTables(revs))
+    CitationPipeline.dedup(CitationPipeline.stagingFromRows(
+      CitationPipeline.extractRows(revs, emitRefless = true)))
   }
 
   test("source parses the line protocol") {
@@ -288,6 +289,30 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       tables("ncwr"), tables("normalized_citations"),
       tables("citation_instances"), "https://example.com/x").collect()
     assert(wr.map(_.getAs[Int]("page_id")).toSet == Set(100, 200))
+
+    // A9 per-invocation parameter maps, pinned for both normalized
+    // citations, and equal to citationDetail's `templates` entries.
+    type Invocation = (String, Int, scala.collection.Map[String, String])
+    def invocation(r: org.apache.spark.sql.Row): Invocation =
+      (r.getAs[String]("template_name"), r.getAs[Int]("offset_start"),
+        r.getAs[scala.collection.Map[String, String]]("parameters"))
+    val expected = Map(
+      "a" -> Seq(("Cite web", 14,
+        Map("title" -> "X", "url" -> "https://example.com/x"))),
+      "-" -> Seq(("Sfn", 5, Map("1" -> "Doe", "2" -> "1999"))))
+    tables("citation_instances").collect().foreach { ci =>
+      val name = Option(ci.getAs[String]("reference_name")).getOrElse("-")
+      val sha = ci.getAs[String]("normalized_sha1")
+      val params = CitationQueries.templateParamsMap(
+        tables("template_data"), sha).collect().map(invocation).toSeq
+      assert(params == expected(name), name)
+      val detail = CitationQueries.citationDetail(
+        tables("normalized_citations"), tables("citation_instances"),
+        tables("citation_histories"), tables("revisions"),
+        tables("ncwr"), tables("template_data"), sha).head()
+      assert(detail.getSeq[org.apache.spark.sql.Row](
+        detail.fieldIndex("templates")).map(invocation) == params, name)
+    }
   }
 
   test("full build writes 11 deduped tables + staging; purge removes") {
@@ -331,23 +356,43 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.table("mwrev_empty_stream").count() == 0)
   }
 
+  /** The session settings the bucketed-layout tests change. */
+  private val layoutKeys = Seq(
+    "spark.sql.adaptive.enabled",
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.requireAllClusterKeysForCoPartition",
+    "spark.sql.sources.bucketing.autoBucketedScan.enabled")
+
+  /** Runs `body` on a child session (same SparkContext and catalog)
+    * that starts from the shared session's SQL settings plus
+    * `settings`, so no setting leaks into later tests, also when `body`
+    * fails; then asserts the shared session's layout keys unchanged. */
+  private def onChildSession(settings: (String, String)*)(
+      body: SparkSession => Unit): Unit = {
+    val before = layoutKeys.map(k => k -> spark.conf.getOption(k))
+    val child = spark.newSession()
+    for ((k, v) <- spark.conf.getAll if spark.conf.isModifiable(k))
+      child.conf.set(k, v)
+    settings.foreach { case (k, v) => child.conf.set(k, v) }
+    body(child)
+    assert(layoutKeys.map(k => k -> spark.conf.getOption(k)) == before)
+  }
+
   test("pipeline output: serving join J2/J9 is Exchange-free " +
     "(bucket contract, not just the BucketingSpec demo)") {
     val out =
       Files.createTempDirectory("graft-bucketed").toFile.getAbsolutePath
     CitationPipeline.build(spark, s"$bundleDir/*.mwrev.zst", out,
       buckets = 4)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     // Accept subset-key co-partitioning: both sides are bucketed on
     // page_id, which co-locates equal (page_id, raw_sha1) rows too.
     // Since Spark 3.3 this needs the all-cluster-keys requirement off.
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    try {
-      val ch = CitationPipeline.servingTable(spark, out,
-        "citation_histories")
-      val ci = CitationPipeline.servingTable(spark, out,
-        "citation_instances")
+    onChildSession(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.requireAllClusterKeysForCoPartition" -> "false") { s =>
+      val ch = CitationPipeline.servingTable(s, out, "citation_histories")
+      val ci = CitationPipeline.servingTable(s, out, "citation_instances")
       // J2: the 28.8B-row history×instance join. HashPartitioning
       // (page_id) from the bucket layout satisfies the clustered
       // distribution on (page_id, raw_sha1) — both sides read
@@ -360,10 +405,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!plan.contains("Exchange hashpartitioning(page_id"),
         s"serving join over pipeline output should reuse buckets:\n$plan")
       assert(joined.count() == 2)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.sql.requireAllClusterKeysForCoPartition")
     }
   }
 
@@ -376,50 +417,61 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // partitioning, so Spark's auto-bucketed-scan heuristic would
     // disable the bucketed read — and with it, bucket PRUNING. Serving
     // sessions pin it on (documented in CitationPipeline).
-    spark.conf.set(
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    val ch = CitationPipeline.servingTable(spark, out,
-      "citation_histories")
-    val q = ch.filter(
-      org.apache.spark.sql.functions.col("page_id") === 100)
-    q.collect()
-    val scan = q.queryExecution.executedPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-    }.head
-    // a single-page serving read touches 1 of the 4 hash buckets —
-    // the scan cost of the hot lookup path is 1/buckets of the table
-    assert(scan.metadata.get("SelectedBucketsCount")
-      .exists(_.contains("1 out of 4")),
-      s"expected bucket pruning, got: ${scan.metadata}")
-    spark.conf.unset(
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled")
+    onChildSession(
+      "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
+      s =>
+        def served(t: String) = CitationPipeline.servingTable(s, out, t)
+        val q = served("citation_histories").filter(
+          org.apache.spark.sql.functions.col("page_id") === 100)
+        q.collect()
+        val scan = q.queryExecution.executedPlan.collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+        }.head
+        // a single-page serving read touches 1 of the 4 hash buckets —
+        // the scan cost of the hot lookup path is 1/buckets of the table
+        assert(scan.metadata.get("SelectedBucketsCount")
+          .exists(_.contains("1 out of 4")),
+          s"expected bucket pruning, got: ${scan.metadata}")
+
+        // the layout changes the plan, never the rows: the same calls
+        // over the unbucketed parquet files return the same rows
+        def direct(t: String) = s.read.parquet(s"$out/$t")
+        def page(t: String => org.apache.spark.sql.DataFrame) =
+          CitationQueries.citationsAtRevision(t("citation_instances"),
+            t("normalized_citations"), t("citation_histories"),
+            t("revisions"), pageId = 100).collect().toSeq
+        def report(t: String => org.apache.spark.sql.DataFrame) =
+          CitationQueries.templateReport(t("template_data"),
+            t("normalized_citations"), "Cite web", "url",
+            Some("https://example.com/x")).collect().toSeq
+        assert(page(served).nonEmpty)
+        assert(page(served) == page(direct))
+        assert(report(served).nonEmpty)
+        assert(report(served) == report(direct))
+    }
   }
 
   test("DataSource V2: format(\"mwrev\") reads bundles") {
-    val df = spark.read.format("mwrev").load(s"$bundleDir/*.mwrev.zst")
-    assert(df.count() == 4)
-    val r = df.orderBy("revision_id").head()
-    assert(r.getAs[Int]("page_id") == 100)
-    assert(r.getAs[Long]("revision_id") == 1001L)
-    assert(r.getAs[String]("revision_timestamp") == "2020-01-01 00:00:00")
-    assert(r.getAs[String]("revision_text").contains("<ref name=a>"))
-    // Parity with the mapPartitions source.
-    val v1 = MwRevZst.read(spark, s"$bundleDir/*.mwrev.zst")
-      .select("revisionId", "pageId").collect()
-      .map(x => (x.getLong(0), x.getInt(1))).toSet
-    val v2 = df.select("revision_id", "page_id").collect()
-      .map(x => (x.getLong(0), x.getInt(1))).toSet
-    assert(v1 == v2)
-  }
-
-  test("DataSource V2: column pruning skips text accumulation") {
-    val pruned = spark.read.format("mwrev").load(s"$bundleDir/*.mwrev.zst")
-      .select("page_id", "revision_id")
-    // Physical scan schema must not include revision_text.
-    val scanSchema = pruned.queryExecution.executedPlan.collectLeaves()
-      .head.schema.fieldNames.toSet
-    assert(scanSchema == Set("page_id", "revision_id"))
-    assert(pruned.collect().length == 4)
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.Trigger
+    // The one batch reader and the streaming source agree on every
+    // field of every revision.
+    val glob = s"$bundleDir/*.mwrev.zst"
+    val q = spark.readStream.format("mwrev").load(glob).as[Revision]
+      .writeStream.outputMode("append").format("memory")
+      .queryName("mwrev_parity").trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val streamed = spark.table("mwrev_parity").as[Revision].collect()
+      .sortBy(_.revisionId).toSeq
+    val batch = MwRevZst.read(spark, glob).collect()
+      .sortBy(_.revisionId).toSeq
+    assert(streamed.size == 4)
+    assert(streamed == batch)
+    val r = streamed.head
+    assert(r.pageId == 100)
+    assert(r.revisionId == 1001L)
+    assert(r.revisionTimestamp == "2020-01-01 00:00:00")
+    assert(r.revisionText.contains("<ref name=a>"))
   }
 
   test("DataSource V2: streaming ingestion of the bundle directory") {
@@ -431,7 +483,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     q.awaitTermination()
     val rows = spark.table("mwrev_stream")
     assert(rows.count() == 4)
-    assert(rows.select("revision_id").collect().map(_.getLong(0)).toSet ==
+    assert(rows.select("revisionId").collect().map(_.getLong(0)).toSet ==
       Set(1001L, 1002L, 1003L, 2001L))
   }
 

@@ -44,7 +44,8 @@ class ResolveSpec extends AnyFunSuite with BeforeAndAfterAll {
     z.close()
     val revs = MwRevZst.read(spark, s"${dir.getAbsolutePath}/*.mwrev.zst")
     Resolve.serve(
-      CitationPipeline.dedup(CitationPipeline.stagingTables(revs)))
+      CitationPipeline.dedup(CitationPipeline.stagingFromRows(
+        CitationPipeline.extractRows(revs, emitRefless = true))))
   }
 
   test("sequential ids are dense, 1-based, deterministic") {

@@ -12,6 +12,8 @@ Runs, in order, against the CURRENT CLEAN TREE:
   4. full-suite correctness at sf1       -> correctness_sf1.json
      (guarded oracle: per-statement kill budget; oracle timeouts are a
       reported category, not failures — see tools/validate.py)
+  4b. traced perfbench serve run         -> serve-seed1-trace1.json
+     (fails unless its last line says "correct": true)
   5. matched bench pair at sf1           -> bench_pair_sf1.json
   6. scale gate vs the committed baseline pair + ratio table
                                          -> scale_gate.log, scale_ratio_sf1.md
@@ -26,7 +28,7 @@ Usage:
 Wall-clock at local[32]: ~3h, dominated by the two sf1 suites. Steps
 are idempotent; a re-run with --skip resumes after a fixed step.
 """
-import sys, os, json, subprocess, argparse, re, time
+import sys, os, json, shutil, subprocess, argparse, re, time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TOOLS = os.path.join(REPO, "tools")
@@ -218,12 +220,22 @@ def main():
            log=os.path.join(art, "validate_sf1.log"))
     step("step4_correctness_sf1", sf1corr)
 
-    # -- 4b. serving layer end-to-end at sf1 --------------------------------
-    step("step4b_serve_at_scale", lambda: sh(
-        ["sbt", "-batch",
-         f"runMain graft.ServeAtScale {a.sf1} "
-         f"{os.path.join(art, 'serve_at_scale.json')}"],
-        log=os.path.join(art, "serve_at_scale.log")))
+    # -- 4b. serving layer end-to-end ---------------------------------------
+    # A traced serve run publishes the seeded corpus bucketed, digest-
+    # checks all 11 ops against the unbucketed tables and checks the
+    # resolved dense ids; its last line must report "correct": true.
+    def serve():
+        log = os.path.join(art, "serve.log")
+        sh([sys.executable, os.path.join("perfbench", "run.py"),
+            "--workload", "serve", "--seed", "1", "--seconds", "5",
+            "--trace", "1"], log=log)
+        with open(log) as f:
+            last = [l for l in f.read().splitlines() if l.strip()][-1]
+        if not json.loads(last).get("correct"):
+            raise SystemExit(f"[release-gate] serve run not correct: {last}")
+        shutil.copy(os.path.join(REPO, "perfbench", "out",
+                                 "serve-seed1-trace1.json"), art)
+    step("step4b_serve", serve)
 
     # -- 4c. GenData fidelity audit ------------------------------------------
     step("step4c_gendata_audit", lambda: sh(
