@@ -4,6 +4,7 @@ import java.io.{FileInputStream, PrintStream}
 import java.time.ZoneOffset
 import java.time.format.DateTimeFormatter
 
+import graft.Verify.jsonStr
 import graft.sources.{MwRevZst, Revision}
 import graft.wikitext.ReferenceExtractor
 
@@ -51,16 +52,6 @@ object RefsExtractorCli {
         .sortBy(_.getName)
     else Seq(f)
   }
-
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   def run(args: Array[String], out: PrintStream): Int = {
     var full = false
@@ -110,21 +101,21 @@ object RefsExtractorCli {
     } else {
       val refsJson = refs.map { r =>
         "{" + Seq(
-          s"${jstr("raw_reference")}: ${jstr(r.rawReference)}",
-          s"${jstr("reference_name")}: " +
-            r.referenceName.map(jstr).getOrElse("null"),
-          s"${jstr("offset_start")}: ${r.offsetStart}",
-          s"${jstr("length")}: ${r.length}",
-          s"${jstr("reference_type")}: ${r.referenceType}")
+          s"${jsonStr("raw_reference")}: ${jsonStr(r.rawReference)}",
+          s"${jsonStr("reference_name")}: " +
+            r.referenceName.map(jsonStr).getOrElse("null"),
+          s"${jsonStr("offset_start")}: ${r.offsetStart}",
+          s"${jsonStr("length")}: ${r.length}",
+          s"${jsonStr("reference_type")}: ${r.referenceType}")
           .mkString(", ") + "}"
       }.mkString("[", ", ", "]")
       out.println("{" + Seq(
-        s"${jstr("title")}: ${jstr(pos.head)}",
-        s"${jstr("as_of")}: ${jstr(asOf)}",
-        s"${jstr("page_id")}: ${rev.pageId}",
-        s"${jstr("revision_id")}: ${rev.revisionId}",
-        s"${jstr("revision_timestamp")}: ${jstr(rev.revisionTimestamp)}",
-        s"${jstr("references")}: $refsJson").mkString(", ") + "}")
+        s"${jsonStr("title")}: ${jsonStr(pos.head)}",
+        s"${jsonStr("as_of")}: ${jsonStr(asOf)}",
+        s"${jsonStr("page_id")}: ${rev.pageId}",
+        s"${jsonStr("revision_id")}: ${rev.revisionId}",
+        s"${jsonStr("revision_timestamp")}: ${jsonStr(rev.revisionTimestamp)}",
+        s"${jsonStr("references")}: $refsJson").mkString(", ") + "}")
     }
     0
   }

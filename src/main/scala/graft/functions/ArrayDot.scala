@@ -113,35 +113,28 @@ object GraftFunctions {
   private def builder(es: Seq[Expression]): Expression =
     ArrayDot(es.head, es(1))
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "array_dot", builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", es => NfcNormalize(es.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "aho_match", es => AhoMatch(es.head, es(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_planes", es => SimHashPlanes(es.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sigs", es => MinHashSigs(es.head), "built-in")
-  }
-
   private[functions] val info = new ExpressionInfo(
     classOf[ArrayDot].getName, "array_dot")
 
   val injection: (FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression) =
     (FunctionIdentifier("array_dot"), info, builder)
+
+  /** Every native function, as the (name, info, builder) triple that
+    * both registration paths install. */
+  private[functions] val injections = Seq(injection, NfcNormalize.injection,
+    AhoMatch.injection, SimHashPlanes.injection, MinHashSigs.injection,
+    CdcChunks.injection)
+
+  def register(spark: SparkSession): Unit =
+    injections.foreach { case (name, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(name, info, builder)
+    }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.injection)
-    ext.injectFunction(NfcNormalize.injection)
-    ext.injectFunction(AhoMatch.injection)
-    ext.injectFunction(SimHashPlanes.injection)
-    ext.injectFunction(MinHashSigs.injection)
-    ext.injectFunction(CdcChunks.injection)
+    GraftFunctions.injections.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => DotProductRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }

@@ -94,6 +94,39 @@ object AuditOps extends QueryModule {
         case ((name, re), acc) => when(v.rlike(re), lit(name)).otherwise(acc)
       })
 
+  /** q347's data contract over the event feed: (check, predicate). */
+  private val ContractChecks: Seq[(String, String)] = Seq(
+    ("value_nonneg", "value >= 0"),
+    ("value_under_1k", "value < 1000"),
+    ("type_in_enum",
+      "event_type IN ('click','error','purchase','signup','view')"),
+    ("user_id_nonneg", "user_id >= 0"),
+    ("props_present", "props IS NOT NULL AND props <> ''"),
+    ("ts_in_window",
+      "ts >= 1577836800000000000 AND ts < 1893456000000000000"))
+
+  /** One row: `n_rows` and a `p_<check>` pass count per contract check,
+    * each a predicate sum (map-side combinable). */
+  private[graft] def contractSums(events: DataFrame): DataFrame =
+    events.groupBy().agg(
+      count(lit(1)).as("n_rows"),
+      ContractChecks.map { case (nm, p) =>
+        sum(expr(s"CAST($p AS BIGINT)")).as(s"p_$nm")
+      }: _*)
+
+  /** [[contractSums]] unpivoted to one row per check with its pass rate
+    * in ppm and a pass/fail verdict. */
+  private[graft] def contractVerdicts(sums: DataFrame): DataFrame =
+    sums.select(col("n_rows"), explode(array(
+        ContractChecks.map { case (nm, _) =>
+          struct(lit(nm).as("check"), col(s"p_$nm").as("n_pass"))
+        }: _*)).as("c"))
+      .select(col("c.check").as("check"), col("n_rows"),
+        col("c.n_pass").as("n_pass"),
+        expr("c.n_pass * 1000000 div n_rows").as("pass_ppm"),
+        expr("CASE WHEN c.n_pass = n_rows THEN 'pass' ELSE 'fail' END")
+          .as("status"))
+
   val queries: Map[String, Q] = Map(
     // Reference context: the reference's QA surface is row counts and
     // spot queries (`dedup_parquet.py` prints per-table row counts); these
@@ -974,31 +1007,8 @@ object AuditOps extends QueryModule {
     // with pass-rate ppm and a pass/fail verdict. The check list is
     // the data contract; a new feed version that breaks one shows up
     // as a 'fail' row, not a silent drift.
-    "q347_contract_conformance" -> ((s, d) => {
-      val checks = Seq(
-        ("value_nonneg", "value >= 0"),
-        ("value_under_1k", "value < 1000"),
-        ("type_in_enum",
-          "event_type IN ('click','error','purchase','signup','view')"),
-        ("user_id_nonneg", "user_id >= 0"),
-        ("props_present", "props IS NOT NULL AND props <> ''"),
-        ("ts_in_window",
-          "ts >= 1577836800000000000 AND ts < 1893456000000000000"))
-      val agg = table(s, d, "events").agg(
-        count(lit(1)).as("n_rows"),
-        checks.map { case (nm, p) =>
-          sum(expr(s"CAST($p AS BIGINT)")).as(s"p_$nm")
-        }: _*)
-      agg.select(col("n_rows"), explode(array(
-          checks.map { case (nm, _) =>
-            struct(lit(nm).as("check"), col(s"p_$nm").as("n_pass"))
-          }: _*)).as("c"))
-        .select(col("c.check").as("check"), col("n_rows"),
-          col("c.n_pass").as("n_pass"),
-          expr("c.n_pass * 1000000 div n_rows").as("pass_ppm"),
-          expr("""CASE WHEN c.n_pass = n_rows THEN 'pass'
-              ELSE 'fail' END""").as("status"))
-    }),
+    "q347_contract_conformance" -> ((s, d) =>
+      contractVerdicts(contractSums(table(s, d, "events")))),
 
     // ---- q348: referential-integrity report over all FK edges ----------
     // Every FK edge of the schema scored by an anti-join orphan count

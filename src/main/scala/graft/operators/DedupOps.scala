@@ -24,6 +24,13 @@ object DedupOps extends QueryModule {
   /** Span length for the exact-substring dedup pass (q172). */
   private val SpanLen = 5
 
+  /** `nm` and every string one character deletion away from it: two
+    * strings within edit distance 1 share at least one variant. */
+  private def deletionVariants: Column = expr(
+    """array_union(array(nm), transform(sequence(1, length(nm)),
+       i -> concat(substring(nm, 1, i - 1),
+                   substring(nm, i + 1, length(nm) - i))))""")
+
   val queries: Map[String, Q] = Map(
     // ---- q196: segment-level exact dedup with recompose ----------------
     // q196 segment-level exact dedup with recompose: the Dolma/CCNet
@@ -102,11 +109,8 @@ object DedupOps extends QueryModule {
       // The names side has one row per record, so it grows with the
       // corpus: no broadcast hint, AQE picks the join from its runtime
       // size.
-      val variants = recs.select(col("id"), explode(expr(
-        """array_union(array(nm), transform(sequence(1, length(nm)),
-           i -> concat(substring(nm, 1, i - 1),
-                       substring(nm, i + 1, length(nm) - i))))"""
-        )).as("variant"))
+      val variants = recs
+        .select(col("id"), explode(deletionVariants).as("variant"))
         .select(col("id"), xxhash64(col("variant")).as("vh"))
       val a = variants.select(col("vh"), col("id").as("a_id"))
       val b = variants.select(col("vh"), col("id").as("b_id"))
@@ -599,11 +603,8 @@ object DedupOps extends QueryModule {
       val c = table(s, d, "customer")
         .filter(col("c_custkey") % 10 === 0)
         .select(col("c_custkey").as("id"), lower(col("c_name")).as("nm"))
-      val variants = c.select(col("id"), col("nm"), explode(expr(
-        """array_union(array(nm), transform(sequence(1, length(nm)),
-           i -> concat(substring(nm, 1, i - 1),
-                       substring(nm, i + 1, length(nm) - i))))"""
-        )).as("variant"))
+      val variants = c.select(col("id"), col("nm"),
+        explode(deletionVariants).as("variant"))
       val a = variants.select(col("variant"), col("id").as("a_id"),
         col("nm").as("a_nm"))
       val b = variants.select(col("variant"), col("id").as("b_id"),

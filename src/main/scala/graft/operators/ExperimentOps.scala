@@ -288,11 +288,7 @@ object ExperimentOps extends QueryModule {
       // decimal `/`+floor route rounds at result scale and floors,
       // neither of which HUGEINT `//` does).
       m
-        .withColumn("theta_ppm", expr("""CAST(
-            (CAST(n AS DECIMAL(38,0)) * sxy
-             - CAST(sx AS DECIMAL(38,0)) * sy) * 1000000
-            div (CAST(n AS DECIMAL(38,0)) * sxx
-               - CAST(sx AS DECIMAL(38,0)) * sx) AS BIGINT)"""))
+        .withColumn("theta_ppm", olsSlopePpm)
         .withColumn("raw_diff_micro", expr("""CAST(
             (CAST(syt AS DECIMAL(38,0)) * nc
              - CAST(syc AS DECIMAL(38,0)) * nt) * 1000000
@@ -303,15 +299,7 @@ object ExperimentOps extends QueryModule {
             div (CAST(nt AS DECIMAL(38,0)) * nc) AS BIGINT)"""))
         .withColumn("adj_diff_micro", expr(
           "raw_diff_micro - (theta_ppm * x_diff_micro div 1000000)"))
-        .withColumn("rho2_ppm", expr("""CAST(
-            (CAST(n AS DECIMAL(38,0)) * sxy
-             - CAST(sx AS DECIMAL(38,0)) * sy)
-            * (CAST(n AS DECIMAL(38,0)) * sxy
-               - CAST(sx AS DECIMAL(38,0)) * sy) * 1000000
-            div ((CAST(n AS DECIMAL(38,0)) * sxx
-                - CAST(sx AS DECIMAL(38,0)) * sx)
-               * (CAST(n AS DECIMAL(38,0)) * syy
-                  - CAST(sy AS DECIMAL(38,0)) * sy)) AS BIGINT)"""))
+        .withColumn("rho2_ppm", olsR2Ppm)
         .select(col("n").as("n_users"), col("theta_ppm"),
           col("raw_diff_micro"), col("x_diff_micro"),
           col("adj_diff_micro"), col("rho2_ppm"))

@@ -224,6 +224,27 @@ object GraphOps extends QueryModule {
       .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
       .distinct()
 
+  /** The undirected customer(2k)–supplier(2k+1) trade graph as a
+    * symmetrized (src, dst) edge list. The half-size directed pair set
+    * is the cached frame and both directions are a map-only projection
+    * of it per consumer: caching AFTER the explode re-plans the
+    * lineitem⋈orders join and distinct once per explode branch inside
+    * the cached build (exchange reuse does not fire inside an
+    * InMemoryRelation's physical plan — the round-7 plan audit caught
+    * the join running twice), and doubles the cached bytes for rows
+    * that are a pure projection. Released at the harness boundary
+    * (GraftSession.releaseQueryCaches). */
+  private def bipartiteEdges(s: SparkSession, d: String): DataFrame =
+    materialized(table(s, d, "lineitem")
+        .join(table(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
+        .select((col("o_custkey") * 2).as("src"),
+          (col("l_suppkey") * 2 + 1).as("dst"))
+        .distinct())
+      .select(explode(array(
+        struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+
   /** Shift making balance-cents non-negative before integer division,
     * so `div` (truncation) == floor division on BOTH engines whatever
     * the sign of the sum: (Σc + n·K) div n − K = floor(Σc / n) for
@@ -387,7 +408,7 @@ object GraphOps extends QueryModule {
           (col("l_suppkey") * 2 + 1).as("dst"))
         .distinct()
       // cache the half-size eo; the symmetrized edge list is a map-only
-      // projection per consumer (see the q194 round-7 plan-audit note)
+      // projection per consumer (see bipartiteEdges)
       val eoM = eo
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val edges = eoM
@@ -441,22 +462,7 @@ object GraphOps extends QueryModule {
     // min-hops makes this exactly equal to the oracle's unrolled
     // min-distance closure. Output: nodes per hop count, hops 0–3.
     "q187_bfs_hops" -> ((s, d) => {
-      val eo = table(s, d, "lineitem")
-        .join(table(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      // half-size eo is the cached frame; the symmetrized edge list is
-      // a map-only projection of it per consumer (caching post-explode
-      // re-plans the join+distinct subtree once per explode branch
-      // inside the InMemoryRelation — the round-7 q194 plan audit
-      // caught lineitem⋈orders running twice; same fix here)
-      val eoM = materialized(eo)
-      val edges = eoM
-        .select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      val edges = bipartiteEdges(s, d)
       val seed = materialized(edges
         .filter(col("src") % 2 === 0 && col("src") < 10)
         .select(col("src").as("id")).distinct()
@@ -501,26 +507,7 @@ object GraphOps extends QueryModule {
     // label — impossible here since the edge list defines the node
     // set. Output: the 20 largest communities (size desc, label asc).
     "q194_label_propagation" -> ((s, d) => {
-      val eo = table(s, d, "lineitem")
-        .join(table(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      // Materialize the HALF-SIZE directed pair set and derive the
-      // symmetrized edge list map-only per consumer: caching edges
-      // AFTER the explode re-plans the join+distinct subtree once per
-      // explode branch inside the cached build (exchange reuse does
-      // not fire inside an InMemoryRelation's physical plan — the
-      // round-7 plan audit caught lineitem⋈orders running twice), and
-      // doubles the cached bytes for rows that are a pure projection
-      // of eo. Released at the harness boundary
-      // (GraftSession.releaseQueryCaches).
-      val eoM = materialized(eo)
-      val edges = eoM
-        .select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      val edges = bipartiteEdges(s, d)
       // Round 1 collapses algebraically: labels start as node ids and
       // the symmetrized edge list is DISTINCT, so every neighbor casts
       // exactly one vote for its own id — all counts tie at 1 and the
@@ -567,22 +554,7 @@ object GraphOps extends QueryModule {
     // convergence probes.
     "q199_kcore_peel" -> ((s, d) => {
       import s.implicits._
-      val eo = table(s, d, "lineitem")
-        .join(table(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      // half-size eo is the cached frame; the symmetrized edge list is
-      // a map-only projection of it per consumer (caching post-explode
-      // re-plans the join+distinct subtree once per explode branch
-      // inside the InMemoryRelation — the round-7 q194 plan audit
-      // caught lineitem⋈orders running twice; same fix here)
-      val eoM = materialized(eo)
-      val edges = eoM
-        .select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      val edges = bipartiteEdges(s, d)
       val k = edges
         .agg(expr("count(1) div (2 * count(distinct src))")).head.getLong(0)
       // Peeling is monotone (each round's survivor set is nested in the
@@ -840,23 +812,7 @@ object GraphOps extends QueryModule {
     // 1-row driver scalar (documented, bounded). The full-outer with
     // the seed list implements "+ 0.15·e_s" sparsely.
     "q256_personalized_pagerank" -> ((s, d) => {
-      val eo = table(s, d, "lineitem")
-        .join(table(s, d, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      // half-size eo is the cached frame; the symmetrized edge list is
-      // a map-only projection of it per consumer (caching post-explode
-      // re-plans the join+distinct subtree once per explode branch
-      // inside the InMemoryRelation — the round-7 q194 plan audit
-      // caught lineitem⋈orders running twice; same fix here)
-      val eoM = materialized(eo)
-      val edges0 = eoM
-        .select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      val edges0 = bipartiteEdges(s, d)
       val deg = materialized(
         edges0.groupBy("src").agg(count(lit(1)).as("deg")))
       val seeds = materialized(table(s, d, "customer")
@@ -905,22 +861,7 @@ object GraphOps extends QueryModule {
     // O(|E|·rounds·|seeds-reached-overlap|) with every frame keyed —
     // the multi-source trick that costs one BFS, not |seeds|.
     "q339_harmonic_centrality" -> ((s, d) => {
-      val eo = table(s, d, "lineitem")
-        .join(table(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      // half-size eo is the cached frame; the symmetrized edge list is
-      // a map-only projection of it per consumer (caching post-explode
-      // re-plans the join+distinct subtree once per explode branch
-      // inside the InMemoryRelation — the round-7 q194 plan audit
-      // caught lineitem⋈orders running twice; same fix here)
-      val eoM = materialized(eo)
-      val edges = eoM
-        .select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      val edges = bipartiteEdges(s, d)
       val seed = materialized(edges
         .filter(col("src") % 2 === 0 && col("src") < 10)
         .select(col("src").as("seed"), col("src").as("id")).distinct()
@@ -950,20 +891,7 @@ object GraphOps extends QueryModule {
   // Same LSH pair derivation as q37 (shared by the component and
   // triangle oracles below).
   private val pairsCte =
-    """sigs AS (
-           SELECT doc_id,
-             md5(min(substr(md5(shingle), 1, 8))
-                 || min(substr(md5(shingle), 9, 8))) AS b0,
-             md5(min(substr(md5(shingle), 17, 8))
-                 || min(substr(md5(shingle), 25, 8))) AS b1
-           FROM (
-             SELECT doc_id, unnest(list_transform(range(0, len(tokens) - 2),
-               i -> array_to_string(list_slice(tokens, i + 1, i + 3), ' '))) AS shingle
-             FROM (SELECT doc_id,
-                     list_filter(string_split(lower(text), ' '), w -> w <> '') AS tokens
-                   FROM documents)
-             WHERE len(tokens) >= 3)
-           GROUP BY doc_id),
+    s"""${TextOps.sigsCte},
          pairs AS (
            SELECT DISTINCT a_id, b_id FROM (
              SELECT l.doc_id AS a_id, r.doc_id AS b_id

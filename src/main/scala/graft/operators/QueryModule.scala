@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.storage.StorageLevel
 
 /** One domain's share of the query registry: the queries it builds and
@@ -31,6 +32,10 @@ trait QueryModule {
     p
   }
 
+  /** Exact, order-independent sum of a money-like double column. */
+  protected def dsum(c: Column): Column =
+    sum(c.cast(DecimalType(18, 2))).cast("double")
+
   /** Sequential double dot product of two float-array columns, written
     * as `aggregate(zip_with)` so it accumulates in DuckDB's order. */
   protected def dotD(a: String, b: String): Column = expr(
@@ -47,6 +52,26 @@ trait QueryModule {
     * sample assignment. */
   protected def h13(c: String): String =
     s"CAST(conv(substring(md5(CAST($c AS STRING)), 1, 13), 16, 10) AS BIGINT)"
+
+  /** Least-squares slope of y on x in ppm, from the sums `n`, `sx`,
+    * `sy`, `sxx`, `sxy` and `syy`: DECIMAL(38,0) products (n·Σxy
+    * overflows i64) and one exact integral division. */
+  protected def olsSlopePpm: Column = expr("""CAST(
+            (CAST(n AS DECIMAL(38,0)) * sxy
+             - CAST(sx AS DECIMAL(38,0)) * sy) * 1000000
+            div (CAST(n AS DECIMAL(38,0)) * sxx
+               - CAST(sx AS DECIMAL(38,0)) * sx) AS BIGINT)""")
+
+  /** The same fit's r² in ppm, from the same sums. */
+  protected def olsR2Ppm: Column = expr("""CAST(
+            (CAST(n AS DECIMAL(38,0)) * sxy
+             - CAST(sx AS DECIMAL(38,0)) * sy)
+            * (CAST(n AS DECIMAL(38,0)) * sxy
+               - CAST(sx AS DECIMAL(38,0)) * sy) * 1000000
+            div ((CAST(n AS DECIMAL(38,0)) * sxx
+                - CAST(sx AS DECIMAL(38,0)) * sx)
+               * (CAST(n AS DECIMAL(38,0)) * syy
+                  - CAST(sy AS DECIMAL(38,0)) * sy)) AS BIGINT)""")
 
   /** Nanoseconds per day, for day buckets of the ns-since-epoch `ts`. */
   protected val NsPerDay = 86400000000000L

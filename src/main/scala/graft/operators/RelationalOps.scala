@@ -22,9 +22,6 @@ import graft.Tables.table
 object RelationalOps extends QueryModule {
   private val Dec = DecimalType(18, 2)
 
-  /** Exact, order-independent sum of a money-like double column. */
-  private def dsum(c: Column): Column = sum(c.cast(Dec)).cast("double")
-
   /** Exact discounted-price sum: cast BOTH factors to decimal before the
     * multiply so no engine ever rounds a double product (rounding-mode
     * tie-breaks differ between Java BigDecimal and DuckDB). */
@@ -53,6 +50,33 @@ object RelationalOps extends QueryModule {
       .cast("long")
 
   private val K = 64
+
+  /** q190's changelog: one (key, ts, event_id, op, new_bal) row per
+    * non-error event; a purchase deletes its key, every other event
+    * upserts the key's balance in integer cents. */
+  private[graft] def cdcChanges(events: DataFrame): DataFrame =
+    events.filter(col("event_type") =!= "error")
+      .select(col("user_id").as("key"), col("ts"), col("event_id"),
+        when(col("event_type") === "purchase", lit("D")).otherwise(lit("U"))
+          .as("op"),
+        floor(col("value") * 100).cast("long").as("new_bal"))
+
+  /** q190's snapshot merge: the changelog heads `latest` (key, op,
+    * new_bal; one row per key) full-outer joined into the customer
+    * balance snapshot. A delete drops the key, an upsert overwrites or
+    * inserts it, and untouched snapshot rows pass through. */
+  private[graft] def cdcMerge(s: SparkSession, d: String,
+      latest: DataFrame): DataFrame =
+    table(s, d, "customer")
+      .select(col("c_custkey").as("key"),
+        floor(col("c_acctbal") * 100).cast("long").as("bal_cents"))
+      .join(latest, Seq("key"), "full_outer")
+      .filter(col("op").isNull || col("op") =!= "D")
+      .select(col("key"),
+        when(col("op").isNotNull, col("new_bal")).otherwise(col("bal_cents"))
+          .as("bal_cents"),
+        when(col("op").isNotNull, lit("chg")).otherwise(lit("snap"))
+          .as("src"))
 
   val queries: Map[String, Q] = Map(
     // ---- A6/A8-family aggregation over the fact table (TPC-H Q1 shape) --
@@ -881,40 +905,21 @@ object RelationalOps extends QueryModule {
 
     // ---- q190: CDC apply (changelog → snapshot merge) ------------------
     // q190 CDC apply: collapse a keyed insert/update/delete changelog
-    // to latest-wins and merge it into a snapshot with one full-outer
-    // join — the batch analogue of a streaming upsert sink.
-    // Snapshot = customer balances (integer cents); changelog = events
-    // keyed by user_id (signup/view/click upsert the event value,
-    // purchase deletes the key; errors are not changes). Latest-wins per
-    // key via ONE per-key window (order ts desc, event_id desc — the
-    // changelog's total order), then a single full-outer join merges
-    // changelog heads into the snapshot: delete drops the key, upsert
-    // overwrites-or-inserts, untouched snapshot rows pass through. Both
+    // (`cdcChanges`) to latest-wins and merge it into a snapshot with
+    // one full-outer join (`cdcMerge`) — the batch analogue of a
+    // streaming upsert sink. Latest-wins per key via ONE per-key window
+    // (order ts desc, event_id desc — the changelog's total order). Both
     // shuffles hash on the key — the exact shape a compaction job uses
     // to fold a day of CDC into a 100 TB table, touching each side
     // once. (Batch analogue of the streaming dedup sink q174.)
     "q190_cdc_apply" -> ((s, d) => {
-      val snap = table(s, d, "customer")
-        .select(col("c_custkey").as("key"),
-          floor(col("c_acctbal") * 100).cast("long").as("bal_cents"))
       val byKeyDesc = Window.partitionBy("key")
         .orderBy(col("ts").desc, col("event_id").desc)
-      val latest = table(s, d, "events")
-        .filter(col("event_type") =!= "error")
-        .select(col("user_id").as("key"), col("ts"), col("event_id"),
-          when(col("event_type") === "purchase", lit("D")).otherwise(lit("U"))
-            .as("op"),
-          floor(col("value") * 100).cast("long").as("new_bal"))
+      val latest = cdcChanges(table(s, d, "events"))
         .withColumn("rn", row_number().over(byKeyDesc))
         .filter(col("rn") === 1)
         .select("key", "op", "new_bal")
-      snap.join(latest, Seq("key"), "full_outer")
-        .filter(col("op").isNull || col("op") =!= "D")
-        .select(col("key"),
-          when(col("op").isNotNull, col("new_bal")).otherwise(col("bal_cents"))
-            .as("bal_cents"),
-          when(col("op").isNotNull, lit("chg")).otherwise(lit("snap"))
-            .as("src"))
+      cdcMerge(s, d, latest)
     }),
 
     // ---- q201: forward as-of (time-to-next-conversion) -----------------
@@ -1532,6 +1537,16 @@ object RelationalOps extends QueryModule {
         .select("event_id", "user_id", "sec", "n_1h", "cents_1h")
     }))
 
+  /** Each purchase attributed to the user's latest click at or before
+    * it (null when there is none). */
+  private val asofClickSql =
+    """SELECT p.user_id, p.event_id AS purchase_id, c.event_id AS click_id
+         FROM (SELECT user_id, event_id, ts FROM events
+               WHERE event_type = 'purchase') p
+         ASOF LEFT JOIN (SELECT user_id, event_id, ts FROM events
+                         WHERE event_type = 'click') c
+           ON p.user_id = c.user_id AND p.ts >= c.ts"""
+
   val oracle: Map[String, String] = Map(
     "q01_agg_pricing" ->
       """SELECT l_returnflag, l_linestatus,
@@ -1704,20 +1719,9 @@ object RelationalOps extends QueryModule {
       """SELECT a.c_custkey AS a_key, b.c_custkey AS b_key,
          levenshtein(a.c_name, b.c_name) AS dist
          FROM customer a JOIN customer b ON a.c_custkey + 1 = b.c_custkey""",
-    "q70_asof_join" ->
-      """SELECT p.user_id, p.event_id AS purchase_id, c.event_id AS click_id
-         FROM (SELECT user_id, event_id, ts FROM events
-               WHERE event_type = 'purchase') p
-         ASOF LEFT JOIN (SELECT user_id, event_id, ts FROM events
-                         WHERE event_type = 'click') c
-           ON p.user_id = c.user_id AND p.ts >= c.ts""",
-    "q114_asof_exec" ->
-      """SELECT p.user_id, p.event_id AS purchase_id, c.event_id AS click_id
-         FROM (SELECT user_id, event_id, ts FROM events
-               WHERE event_type = 'purchase') p
-         ASOF LEFT JOIN (SELECT user_id, event_id, ts FROM events
-                         WHERE event_type = 'click') c
-           ON p.user_id = c.user_id AND p.ts >= c.ts""",
+    "q70_asof_join" -> asofClickSql,
+    // Same attribution as q70, planned by the native as-of operator.
+    "q114_asof_exec" -> asofClickSql,
     "q117_asof_window" ->
       """SELECT p.user_id, p.event_id AS purchase_id,
            CASE WHEN c.event_id IS NOT NULL

@@ -63,6 +63,23 @@ object StatsOps extends QueryModule {
       .filter(col("rn") === 1).drop("rn")
   }
 
+  /** q317's burst rule over an (hour_id, cnt) frame: an hour bursts
+    * when its count exceeds 2× the mean of the 24 hours before it
+    * (cnt·24 > 2·trail_sum, exact integers). Only hours with a FULL
+    * trailing window qualify (no partial-baseline false positives at
+    * the series head). The global window sorts the hour frame, which
+    * is bounded by the corpus time span, not its row count. */
+  private[graft] def burstRule(hourly: DataFrame): DataFrame = {
+    val w = Window.orderBy("hour_id").rowsBetween(-24, -1)
+    hourly
+      .withColumn("trail_sum", sum("cnt").over(w))
+      .withColumn("trail_n", count(lit(1)).over(w))
+      .filter(col("trail_n") === 24 &&
+        col("cnt") * 24 > col("trail_sum") * 2)
+      .select(col("hour_id"), col("cnt"), col("trail_sum"),
+        expr("(cnt * 24 * 1000000) div trail_sum").as("ratio_ppm"))
+  }
+
   val queries: Map[String, Q] = Map(
     // ---- q192: per-user daily gap fill + forward fill ------------------
     // q192 gap fill: per-user daily resampling with forward fill —
@@ -821,25 +838,11 @@ object StatsOps extends QueryModule {
 
     // ---- q317: trailing-baseline burst detection -----------------------
     // Events fold to hour buckets (pure integer ts arithmetic on the
-    // canonical ns column); a bucket bursts when its count exceeds 2×
-    // the trailing 24-bucket mean, i.e. cnt·24 > 2·trail_sum in exact
-    // integers. Only buckets with a FULL trailing window qualify (no
-    // partial-baseline false positives at the series head). The
-    // ordered window runs on the hour frame — bounded by the corpus
-    // time span, not its row count.
-    "q317_burst_detection" -> ((s, d) => {
-      val hourly = table(s, d, "events")
+    // canonical ns column), then `burstRule` flags the bursts.
+    "q317_burst_detection" -> ((s, d) =>
+      burstRule(table(s, d, "events")
         .groupBy(expr("ts div 3600000000000").as("hour_id"))
-        .agg(count(lit(1)).as("cnt"))
-      val w = Window.orderBy("hour_id").rowsBetween(-24, -1)
-      hourly
-        .withColumn("trail_sum", sum("cnt").over(w))
-        .withColumn("trail_n", count(lit(1)).over(w))
-        .filter(col("trail_n") === 24 &&
-          col("cnt") * 24 > col("trail_sum") * 2)
-        .select(col("hour_id"), col("cnt"), col("trail_sum"),
-          expr("(cnt * 24 * 1000000) div trail_sum").as("ratio_ppm"))
-    }),
+        .agg(count(lit(1)).as("cnt")))),
 
     // ---- q318: day-of-week decomposition + anomaly days ----------------
     // Daily revenue → centered 7-row moving average (full windows

@@ -1843,22 +1843,8 @@ object TextOps extends QueryModule {
           sum(expr("CAST(y AS DECIMAL(38,0)) * y")).as("syy"),
           max("cnt").as("top_cnt"))
         .select(col("n").as("n_terms"),
-          expr("""CAST(
-            (CAST(n AS DECIMAL(38,0)) * sxy
-             - CAST(sx AS DECIMAL(38,0)) * sy) * 1000000
-            div (CAST(n AS DECIMAL(38,0)) * sxx
-               - CAST(sx AS DECIMAL(38,0)) * sx) AS BIGINT)""")
-            .as("slope_ppm"),
-          expr("""CAST(
-            (CAST(n AS DECIMAL(38,0)) * sxy
-             - CAST(sx AS DECIMAL(38,0)) * sy)
-            * (CAST(n AS DECIMAL(38,0)) * sxy
-               - CAST(sx AS DECIMAL(38,0)) * sy) * 1000000
-            div ((CAST(n AS DECIMAL(38,0)) * sxx
-                - CAST(sx AS DECIMAL(38,0)) * sx)
-               * (CAST(n AS DECIMAL(38,0)) * syy
-                  - CAST(sy AS DECIMAL(38,0)) * sy)) AS BIGINT)""")
-            .as("r2_ppm"),
+          olsSlopePpm.as("slope_ppm"),
+          olsR2Ppm.as("r2_ppm"),
           col("top_cnt"))
     }),
 
@@ -2311,6 +2297,31 @@ object TextOps extends QueryModule {
       .drop("_pid", "_local", "_offset")
   }
 
+  /** DuckDB reference for the LSH signatures: one row per document,
+    * its 3-word shingles folded to 4 md5 slots and paired into the two
+    * band hashes named `b0` and `b1`. The q37, q105, q107 and GraphOps
+    * pair-graph statements share it; it stays out of `TextKernel`, so
+    * the reference and the Spark kernel remain independent. */
+  private[graft] def lshSigs(b0: String, b1: String): String =
+    s"""SELECT doc_id,
+             md5(min(substr(md5(shingle), 1, 8))
+                 || min(substr(md5(shingle), 9, 8))) AS $b0,
+             md5(min(substr(md5(shingle), 17, 8))
+                 || min(substr(md5(shingle), 25, 8))) AS $b1
+           FROM (
+             SELECT doc_id, unnest(list_transform(range(0, len(tokens) - 2),
+               i -> array_to_string(list_slice(tokens, i + 1, i + 3), ' '))) AS shingle
+             FROM (SELECT doc_id,
+                     list_filter(string_split(lower(text), ' '), w -> w <> '') AS tokens
+                   FROM documents)
+             WHERE len(tokens) >= 3)
+           GROUP BY doc_id"""
+
+  /** [[lshSigs]] as the `sigs` CTE. */
+  private[graft] val sigsCte: String =
+    s"""sigs AS (
+           ${lshSigs("b0", "b1")})"""
+
   val oracle: Map[String, String] = Map(
     "q157_bigram_lm" ->
       """WITH toks AS (
@@ -2722,20 +2733,7 @@ object TextOps extends QueryModule {
            LEFT JOIN iv ON iv.a_id = p.a_id AND iv.b_id = p.b_id)""",
 
     "q37_lsh_pairs" ->
-      """WITH sigs AS (
-           SELECT doc_id,
-             md5(min(substr(md5(shingle), 1, 8))
-                 || min(substr(md5(shingle), 9, 8))) AS b0,
-             md5(min(substr(md5(shingle), 17, 8))
-                 || min(substr(md5(shingle), 25, 8))) AS b1
-           FROM (
-             SELECT doc_id, unnest(list_transform(range(0, len(tokens) - 2),
-               i -> array_to_string(list_slice(tokens, i + 1, i + 3), ' '))) AS shingle
-             FROM (SELECT doc_id,
-                     list_filter(string_split(lower(text), ' '), w -> w <> '') AS tokens
-                   FROM documents)
-             WHERE len(tokens) >= 3)
-           GROUP BY doc_id)
+      s"""WITH $sigsCte
          SELECT DISTINCT a_id, b_id FROM (
            SELECT l.doc_id AS a_id, r.doc_id AS b_id
            FROM sigs l JOIN sigs r ON l.b0 = r.b0 AND l.doc_id < r.doc_id
@@ -2893,20 +2891,7 @@ object TextOps extends QueryModule {
     },
 
     "q105_incremental_dedup" ->
-      """WITH sigs AS (
-           SELECT doc_id,
-             md5(min(substr(md5(shingle), 1, 8))
-                 || min(substr(md5(shingle), 9, 8))) AS b0,
-             md5(min(substr(md5(shingle), 17, 8))
-                 || min(substr(md5(shingle), 25, 8))) AS b1
-           FROM (
-             SELECT doc_id, unnest(list_transform(range(0, len(tokens) - 2),
-               i -> array_to_string(list_slice(tokens, i + 1, i + 3), ' '))) AS shingle
-             FROM (SELECT doc_id,
-                     list_filter(string_split(lower(text), ' '), w -> w <> '') AS tokens
-                   FROM documents)
-             WHERE len(tokens) >= 3)
-           GROUP BY doc_id),
+      s"""WITH $sigsCte,
          bandrows AS (
            SELECT doc_id, 0 AS band_id, b0 AS band FROM sigs
            UNION ALL SELECT doc_id, 1, b1 FROM sigs),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
+import graft.operators.{AuditOps, RelationalOps, StatsOps, TextOps}
 import graft.operators.TextKernel.{bands, signatures}
 
 /** Structured Streaming surface over the `events` table. The reference
@@ -45,6 +46,14 @@ object StreamingOps extends graft.operators.QueryModule {
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .withColumn("ts", graft.Tables.tsToNanos(col("ts")))
   }
+
+  /** [[streamEvents]] plus the event-time column `etime` (`ts` in whole
+    * seconds) under the 1-hour watermark that bounds every windowed
+    * twin's state. */
+  private def timedEvents(s: SparkSession, dir: String): DataFrame =
+    streamEvents(s, dir)
+      .withColumn("etime", timestamp_seconds(expr("ts div 1000000000")))
+      .withWatermark("etime", "1 hour")
 
   /** Drain a streaming DataFrame into an in-memory table with
     * AvailableNow and return the final result.
@@ -147,13 +156,9 @@ object StreamingOps extends graft.operators.QueryModule {
     * streaming twin of q28 (its DuckDB oracle is the correctness
     * check). Complete mode so every window reaches the sink. */
   def windowedAgg(s: SparkSession, dir: String): DataFrame = {
-    val agg = streamEvents(s, dir)
-      .withColumn("etime", timestamp_seconds(expr("ts div 1000000000")))
-      .withWatermark("etime", "1 hour")
+    val agg = timedEvents(s, dir)
       .groupBy(window(col("etime"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double")
-          .as("sum_value"))
+      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
       .select(
         date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"), col("sum_value"))
@@ -168,9 +173,7 @@ object StreamingOps extends graft.operators.QueryModule {
     * any micro-batch split. The batch oracle unnests each event onto
     * its 4 aligned window starts — stream == batch. */
   def slidingWindowAgg(s: SparkSession, dir: String): DataFrame = {
-    val agg = streamEvents(s, dir)
-      .withColumn("etime", timestamp_seconds(expr("ts div 1000000000")))
-      .withWatermark("etime", "1 hour")
+    val agg = timedEvents(s, dir)
       .groupBy(window(col("etime"), "1 hour", "15 minutes").as("w"))
       .agg(count(lit(1)).as("n"),
         sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")).as("cents"))
@@ -194,24 +197,30 @@ object StreamingOps extends graft.operators.QueryModule {
     * AvailableNow over a static directory this equals the batch
     * interval join — the oracle. State on both sides is bounded by the
     * watermark + join range. */
-  def streamStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    def side(tpe: String, prefix: String) =
+  def streamStreamJoin(s: SparkSession, dir: String): DataFrame =
+    runToTable(clickPurchaseJoin(s, dir, "inner"), "append")
+
+  /** (user_id, click_id, purchase_id): each click joined to the same
+    * user's purchases in the hour after it. Each side carries its own
+    * event time (`click_time`, `purchase_time`) under a 1-hour
+    * watermark. */
+  private def clickPurchaseJoin(s: SparkSession, dir: String,
+      joinType: String): DataFrame = {
+    def side(tpe: String) =
       streamEvents(s, dir)
         .filter(col("event_type") === tpe)
         .select(col("user_id"),
-          col("event_id").as(s"${prefix}_id"),
-          col("ts").as(s"${prefix}_ts"),
-          timestamp_seconds(expr("ts div 1000000000"))
-            .as(s"${prefix}_time"))
-        .withWatermark(s"${prefix}_time", "1 hour")
-    val clicks = side("click", "click")
-    val purchases = side("purchase", "purchase")
-    val joined = clicks.join(purchases,
+          col("event_id").as(s"${tpe}_id"),
+          timestamp_seconds(expr("ts div 1000000000")).as(s"${tpe}_time"))
+        .withWatermark(s"${tpe}_time", "1 hour")
+    val clicks = side("click")
+    val purchases = side("purchase")
+    clicks.join(purchases,
       clicks("user_id") === purchases("user_id") &&
         col("purchase_time") >= col("click_time") &&
-        col("purchase_time") <= col("click_time") + expr("INTERVAL 1 HOUR"))
+        col("purchase_time") <= col("click_time") + expr("INTERVAL 1 HOUR"),
+      joinType)
       .select(clicks("user_id"), col("click_id"), col("purchase_id"))
-    runToTable(joined, "append")
   }
 
   /** Bounded-state streaming dedup: `dropDuplicatesWithinWatermark`
@@ -224,9 +233,7 @@ object StreamingOps extends graft.operators.QueryModule {
     * every duplicate shares the single batch, so the result equals the
     * batch DISTINCT — the oracle. */
   def streamingDedupBounded(s: SparkSession, dir: String): DataFrame = {
-    val deduped = streamEvents(s, dir)
-      .withColumn("etime", timestamp_seconds(expr("ts div 1000000000")))
-      .withWatermark("etime", "1 hour")
+    val deduped = timedEvents(s, dir)
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select("user_id", "event_type")
     runToTable(deduped, "append")
@@ -245,36 +252,18 @@ object StreamingOps extends graft.operators.QueryModule {
     * global watermark is min over both inputs of (max event time −
     * delay); Spark runs a closing no-data micro-batch so eviction
     * happens even on a single-file drain. */
-  def streamLeftOuter(s: SparkSession, dir: String): DataFrame = {
-    def side(tpe: String, prefix: String) =
-      streamEvents(s, dir)
-        .filter(col("event_type") === tpe)
-        .select(col("user_id"),
-          col("event_id").as(s"${prefix}_id"),
-          timestamp_seconds(expr("ts div 1000000000"))
-            .as(s"${prefix}_time"))
-        .withWatermark(s"${prefix}_time", "1 hour")
-    val clicks = side("click", "click")
-    val purchases = side("purchase", "purchase")
-    val joined = clicks.join(purchases,
-      clicks("user_id") === purchases("user_id") &&
-        col("purchase_time") >= col("click_time") &&
-        col("purchase_time") <= col("click_time") + expr("INTERVAL 1 HOUR"),
-      "left_outer")
-      .select(clicks("user_id"), col("click_id"), col("purchase_id"))
+  def streamLeftOuter(s: SparkSession, dir: String): DataFrame =
     // noDataBatch: outer-null emission is watermark-driven — the
     // closing no-data batch is what advances the watermark past
     // click_time + 1h and flushes the unmatched clicks.
-    runToTable(joined, "append", noDataBatch = true)
-  }
+    runToTable(clickPurchaseJoin(s, dir, "left_outer"), "append",
+      noDataBatch = true)
 
   /** Native event-time session windows (30-min gap) — the declarative
     * twin of the flatMapGroupsWithState sessionizer; complete mode so
     * every closed-and-open session reaches the sink. */
   def sessionWindowAgg(s: SparkSession, dir: String): DataFrame = {
-    val perSession = streamEvents(s, dir)
-      .withColumn("etime", timestamp_seconds(expr("ts div 1000000000")))
-      .withWatermark("etime", "1 hour")
+    val perSession = timedEvents(s, dir)
       .groupBy(col("user_id"), session_window(col("etime"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"))
     // Per-user rollup runs as a batch query over the sink — chaining a
@@ -319,9 +308,7 @@ object StreamingOps extends graft.operators.QueryModule {
     val enriched = streamEvents(s, dir)
       .join(broadcast(cust), col("user_id") === col("c_custkey"))
       .groupBy("c_mktsegment")
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double")
-          .as("sum_value"))
+      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
     runToTable(enriched, "complete")
   }
 
@@ -335,29 +322,16 @@ object StreamingOps extends graft.operators.QueryModule {
     * join over the drained heads (merging against a 100 TB snapshot
     * inside every micro-batch would re-read it per batch; real
     * deployments run exactly this split: incremental head maintenance,
-    * periodic merge). Oracle: identical to q190 — stream == batch. */
+    * periodic merge). The change rows and the merge are q190's own
+    * (`RelationalOps.cdcChanges`, `cdcMerge`); only the head pick
+    * differs, so stream == batch against q190's statement. */
   def streamCdcApply(s: SparkSession, dir: String): DataFrame = {
-    val heads = streamEvents(s, dir)
-      .filter(col("event_type") =!= "error")
-      .select(col("user_id").as("key"), col("ts"), col("event_id"),
-        when(col("event_type") === "purchase", lit("D")).otherwise(lit("U"))
-          .as("op"),
-        floor(col("value") * 100).cast("long").as("new_bal"))
+    val heads = RelationalOps.cdcChanges(streamEvents(s, dir))
       .groupBy("key")
       .agg(max(struct(col("ts"), col("event_id"), col("op"),
         col("new_bal"))).as("h"))
       .select(col("key"), col("h.op").as("op"), col("h.new_bal").as("new_bal"))
-    val latest = runToTable(heads, "complete")
-    val snap = graft.Tables.table(s, dir, "customer")
-      .select(col("c_custkey").as("key"),
-        floor(col("c_acctbal") * 100).cast("long").as("bal_cents"))
-    snap.join(latest, Seq("key"), "full_outer")
-      .filter(col("op").isNull || col("op") =!= "D")
-      .select(col("key"),
-        when(col("op").isNotNull, col("new_bal")).otherwise(col("bal_cents"))
-          .as("bal_cents"),
-        when(col("op").isNotNull, lit("chg")).otherwise(lit("snap"))
-          .as("src"))
+    RelationalOps.cdcMerge(s, dir, runToTable(heads, "complete"))
   }
 
   /** Streaming drift monitor: per 6-hour event-time window, the value
@@ -371,8 +345,7 @@ object StreamingOps extends graft.operators.QueryModule {
     * against the reference shares is q226's batch recipe applied to
     * this output downstream. */
   def streamDriftMonitor(s: SparkSession, dir: String): DataFrame = {
-    val agg = streamEvents(s, dir)
-      .withColumn("etime", timestamp_seconds(expr("ts div 1000000000")))
+    val agg = timedEvents(s, dir)
       // Both Spark `div` and DuckDB integer `//` truncate toward zero
       // (verified round 6: -7//2 = -3 in both engines — NOT floor), so
       // negatives already agree. The domain shift below is
@@ -383,7 +356,6 @@ object StreamingOps extends graft.operators.QueryModule {
       // invariant to.
       .withColumn("bin",
         expr("(CAST(floor(value * 100) AS BIGINT) + 10000000) div 5000"))
-      .withWatermark("etime", "1 hour")
       .groupBy(window(col("etime"), "6 hours").as("w"), col("bin"))
       .agg(count(lit(1)).as("n"))
       .select(
@@ -403,9 +375,7 @@ object StreamingOps extends graft.operators.QueryModule {
     * AvailableNow; count-desc ties break on event_type asc so the
     * top-3 cut is deterministic in both engines. */
   def streamTopkWindows(s: SparkSession, dir: String): DataFrame = {
-    val counts = streamEvents(s, dir)
-      .withColumn("etime", timestamp_seconds(expr("ts div 1000000000")))
-      .withWatermark("etime", "1 hour")
+    val counts = timedEvents(s, dir)
       .groupBy(window(col("etime"), "6 hours").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(
@@ -543,30 +513,19 @@ object StreamingOps extends graft.operators.QueryModule {
     * in the stream, cheap windowed rule at serve time (the trailing
     * window needs 24 CLOSED buckets, so evaluating it in-stream would
     * re-scan the whole bucket history every micro-batch for the same
-    * answer). Same rule and output as batch q317 → stream == batch
-    * under AvailableNow. */
+    * answer). The rule is q317's own (`StatsOps.burstRule`), so
+    * stream == batch under AvailableNow. */
   def streamBurstDetection(s: SparkSession, dir: String): DataFrame = {
-    val hourly = streamEvents(s, dir)
-      .withColumn("etime", timestamp_seconds(expr("ts div 1000000000")))
-      .withWatermark("etime", "1 hour")
+    val hourly = timedEvents(s, dir)
       .groupBy(window(col("etime"), "1 hour").as("w"))
       .agg(count(lit(1)).as("cnt"))
       .select(
         graft.Tables.tsToNanos(col("w.start"))
           .as("start_ns"),
         col("cnt"))
-    val drained = runToTable(hourly, "complete")
+    StatsOps.burstRule(runToTable(hourly, "complete")
       .select(expr("start_ns div 3600000000000").as("hour_id"),
-        col("cnt"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy("hour_id").rowsBetween(-24, -1)
-    drained
-      .withColumn("trail_sum", sum("cnt").over(w))
-      .withColumn("trail_n", count(lit(1)).over(w))
-      .filter(col("trail_n") === 24 &&
-        col("cnt") * 24 > col("trail_sum") * 2)
-      .select(col("hour_id"), col("cnt"), col("trail_sum"),
-        expr("(cnt * 24 * 1000000) div trail_sum").as("ratio_ppm"))
+        col("cnt")))
   }
 
   /** Streaming M4 downsampling per hour bucket: the stream maintains
@@ -595,33 +554,12 @@ object StreamingOps extends graft.operators.QueryModule {
     * as combinable predicate sums INSIDE the stream (state = one
     * 7-counter row, forever), unpivoted to per-check verdict rows at
     * serve time. The shape that fails a deploy the micro-batch a feed
-    * version breaks its contract — stream == batch q347 oracle. */
-  def streamContractConformance(s: SparkSession, dir: String): DataFrame = {
-    val checks = Seq(
-      ("value_nonneg", "value >= 0"),
-      ("value_under_1k", "value < 1000"),
-      ("type_in_enum",
-        "event_type IN ('click','error','purchase','signup','view')"),
-      ("user_id_nonneg", "user_id >= 0"),
-      ("props_present", "props IS NOT NULL AND props <> ''"),
-      ("ts_in_window",
-        "ts >= 1577836800000000000 AND ts < 1893456000000000000"))
-    val agg = streamEvents(s, dir).groupBy().agg(
-      count(lit(1)).as("n_rows"),
-      checks.map { case (nm, p) =>
-        sum(expr(s"CAST($p AS BIGINT)")).as(s"p_$nm")
-      }: _*)
-    runToTable(agg, "complete")
-      .select(col("n_rows"), explode(array(
-        checks.map { case (nm, _) =>
-          struct(lit(nm).as("check"), col(s"p_$nm").as("n_pass"))
-        }: _*)).as("c"))
-      .select(col("c.check").as("check"), col("n_rows"),
-        col("c.n_pass").as("n_pass"),
-        expr("c.n_pass * 1000000 div n_rows").as("pass_ppm"),
-        expr("CASE WHEN c.n_pass = n_rows THEN 'pass' ELSE 'fail' END")
-          .as("status"))
-  }
+    * version breaks its contract. The checks, sums and unpivot are
+    * q347's own (`AuditOps.contractSums`, `contractVerdicts`), so
+    * stream == batch against q347's statement. */
+  def streamContractConformance(s: SparkSession, dir: String): DataFrame =
+    AuditOps.contractVerdicts(
+      runToTable(AuditOps.contractSums(streamEvents(s, dir)), "complete"))
 
   val queries: Map[String, Q] = Map(
     "q360_stream_conformance" ->
@@ -646,37 +584,14 @@ object StreamingOps extends graft.operators.QueryModule {
     "q138_stream_state_profile" ->
       ((s, d) => StateProfile.streamStateProfile(s, d)))
 
+  /** Batch answer of both dedup twins, q53 and q174. */
+  private val distinctUserTypes =
+    "SELECT DISTINCT user_id, event_type FROM events"
+
   val oracle: Map[String, String] = Map(
-    // Identical statement as batch q347 — stream == batch.
+    // Batch q347's statement — stream == batch.
     "q360_stream_conformance" ->
-      """WITH agg AS (
-           SELECT count(*) AS n_rows,
-             sum(CASE WHEN value >= 0 THEN 1 ELSE 0 END) AS p1,
-             sum(CASE WHEN value < 1000 THEN 1 ELSE 0 END) AS p2,
-             sum(CASE WHEN event_type IN
-               ('click','error','purchase','signup','view')
-               THEN 1 ELSE 0 END) AS p3,
-             sum(CASE WHEN user_id >= 0 THEN 1 ELSE 0 END) AS p4,
-             sum(CASE WHEN props IS NOT NULL AND props <> ''
-               THEN 1 ELSE 0 END) AS p5,
-             sum(CASE WHEN epoch_ns(ts) >= 1577836800000000000
-               AND epoch_ns(ts) < 1893456000000000000
-               THEN 1 ELSE 0 END) AS p6
-           FROM events),
-         u AS (
-           SELECT 'value_nonneg' AS check_nm, n_rows, p1 AS n_pass
-             FROM agg
-           UNION ALL SELECT 'value_under_1k', n_rows, p2 FROM agg
-           UNION ALL SELECT 'type_in_enum', n_rows, p3 FROM agg
-           UNION ALL SELECT 'user_id_nonneg', n_rows, p4 FROM agg
-           UNION ALL SELECT 'props_present', n_rows, p5 FROM agg
-           UNION ALL SELECT 'ts_in_window', n_rows, p6 FROM agg)
-         SELECT check_nm AS "check", CAST(n_rows AS BIGINT) AS n_rows,
-           CAST(n_pass AS BIGINT) AS n_pass,
-           CAST(n_pass * 1000000 // n_rows AS BIGINT) AS pass_ppm,
-           CASE WHEN n_pass = n_rows THEN 'pass' ELSE 'fail' END
-             AS status
-         FROM u""",
+      AuditOps.oracle("q347_contract_conformance"),
     // Batch M4 per hour over the same events — stream == batch.
     "q340_stream_m4" ->
       """WITH x AS (
@@ -699,28 +614,12 @@ object StreamingOps extends graft.operators.QueryModule {
            CAST(max(CASE WHEN rn_d = 1 THEN c END) AS BIGINT)
              AS last_c
          FROM r GROUP BY hour_id""",
-    // Identical rule and output as batch q317 — stream == batch.
-    "q323_stream_burst" ->
-      """WITH hourly AS (
-           SELECT epoch_ns(ts) // 3600000000000 AS hour_id,
-             count(*) AS cnt
-           FROM events GROUP BY 1),
-         trail AS (
-           SELECT hour_id, cnt,
-             sum(cnt) OVER (ORDER BY hour_id
-               ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING) AS trail_sum,
-             count(*) OVER (ORDER BY hour_id
-               ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING) AS trail_n
-           FROM hourly)
-         SELECT hour_id, CAST(cnt AS BIGINT) AS cnt,
-           CAST(trail_sum AS BIGINT) AS trail_sum,
-           CAST((cnt * 24 * 1000000) // trail_sum AS BIGINT) AS ratio_ppm
-         FROM trail
-         WHERE trail_n = 24 AND cnt * 24 > trail_sum * 2""",
+    // Batch q317's statement: the same rule and output — stream == batch.
+    "q323_stream_burst" -> StatsOps.oracle("q317_burst_detection"),
     // Identical statement as batch q184 — the stream folds its state
     // through the same bottom-k kernel, so stream == batch.
     "q389_stream_quantile_sketch" ->
-      graft.operators.RelationalOps.oracle("q184_quantile_sketch"),
+      RelationalOps.oracle("q184_quantile_sketch"),
     // Batch gaps-and-islands compression of the same change stream:
     // version starts where the value differs from its predecessor
     // (event order = (ts, event_id)); valid_to = next start, -1 open.
@@ -801,32 +700,8 @@ object StreamingOps extends graft.operators.QueryModule {
               (CAST(floor(value * 100) AS BIGINT) + 10000000) // 5000 AS bin,
               count(*) AS n
          FROM events GROUP BY 1, 2""",
-    // Stream == batch: identical to q190's batch CDC apply.
-    "q195_stream_cdc_apply" ->
-      """WITH ch AS (
-           SELECT user_id AS key, epoch_ns(ts) AS t, event_id,
-                  CASE WHEN event_type = 'purchase' THEN 'D'
-                       ELSE 'U' END AS op,
-                  CAST(floor(value * 100) AS BIGINT) AS new_bal
-           FROM events WHERE event_type <> 'error'),
-         latest AS (
-           SELECT key, op, new_bal FROM (
-             SELECT key, op, new_bal,
-                    row_number() OVER (PARTITION BY key
-                                       ORDER BY t DESC, event_id DESC) AS rn
-             FROM ch)
-           WHERE rn = 1),
-         snap AS (
-           SELECT c_custkey AS key,
-                  CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents
-           FROM customer)
-         SELECT COALESCE(s.key, l.key) AS key,
-                CASE WHEN l.op IS NOT NULL THEN l.new_bal
-                     ELSE s.bal_cents END AS bal_cents,
-                CASE WHEN l.op IS NOT NULL THEN 'chg'
-                     ELSE 'snap' END AS src
-         FROM snap s FULL OUTER JOIN latest l ON s.key = l.key
-         WHERE l.op IS NULL OR l.op <> 'D'""",
+    // Batch q190's statement — stream == batch.
+    "q195_stream_cdc_apply" -> RelationalOps.oracle("q190_cdc_apply"),
     // Stream == batch: the transformWithState profile equals the plain
     // group-by over the same events.
     "q138_stream_state_profile" ->
@@ -834,13 +709,8 @@ object StreamingOps extends graft.operators.QueryModule {
          max(CAST(floor(value * 100) AS BIGINT)) AS max_cents,
          CAST(count(DISTINCT event_type) AS BIGINT) AS n_types
          FROM events GROUP BY user_id""",
-    // Identical to the q28 batch oracle — stream == batch equivalence.
-    "q52_stream_window" ->
-      """SELECT strftime(make_timestamp((epoch_ns(ts) // 3600000000000) * 3600000000),
-                         '%Y-%m-%d %H:%M:%S') AS hour,
-         event_type, count(*) AS n,
-         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1, 2""",
+    // Batch q28's statement — stream == batch.
+    "q52_stream_window" -> RelationalOps.oracle("q28_time_bucket"),
     // Each event contributes to exactly its 4 epoch-aligned sliding
     // windows: starts (sec div 900 − k)·900 for k = 0..3.
     "q219_stream_sliding" ->
@@ -855,12 +725,10 @@ object StreamingOps extends graft.operators.QueryModule {
                          '%Y-%m-%d %H:%M:%S') AS w_start,
                 count(*) AS n, CAST(sum(cents) AS BIGINT) AS cents
          FROM wins GROUP BY 1""",
-    "q53_stream_dedup" ->
-      "SELECT DISTINCT user_id, event_type FROM events",
+    "q53_stream_dedup" -> distinctUserTypes,
     // Same distinct: over an AvailableNow drain every duplicate lands in
     // one batch, so within-watermark dedup == global dedup (see scaladoc).
-    "q174_stream_dedup_bounded" ->
-      "SELECT DISTINCT user_id, event_type FROM events",
+    "q174_stream_dedup_bounded" -> distinctUserTypes,
     // Stream == batch: the enrichment join over a static stream input.
     "q91_stream_enrich" ->
       """SELECT c_mktsegment, count(*) AS n,
@@ -904,21 +772,9 @@ object StreamingOps extends graft.operators.QueryModule {
     // Stream == batch: the per-signature index over a static stream
     // input is exactly the batch MinHash band aggregation (q37's sigs).
     "q107_stream_neardup_index" ->
-      """SELECT band0, band1, min(doc_id) AS keeper, count(*) AS n_docs
+      s"""SELECT band0, band1, min(doc_id) AS keeper, count(*) AS n_docs
          FROM (
-           SELECT doc_id,
-             md5(min(substr(md5(shingle), 1, 8))
-                 || min(substr(md5(shingle), 9, 8))) AS band0,
-             md5(min(substr(md5(shingle), 17, 8))
-                 || min(substr(md5(shingle), 25, 8))) AS band1
-           FROM (
-             SELECT doc_id, unnest(list_transform(range(0, len(tokens) - 2),
-               i -> array_to_string(list_slice(tokens, i + 1, i + 3), ' '))) AS shingle
-             FROM (SELECT doc_id,
-                     list_filter(string_split(lower(text), ' '), w -> w <> '') AS tokens
-                   FROM documents)
-             WHERE len(tokens) >= 3)
-           GROUP BY doc_id)
+           ${TextOps.lshSigs("band0", "band1")})
          GROUP BY band0, band1""",
     // Gaps-and-islands on second-truncated times. session_window's gap
     // is boundary-INCLUSIVE: an event exactly 1800s after the previous

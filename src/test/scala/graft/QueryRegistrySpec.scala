@@ -1,11 +1,17 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{QueryModule, WikitextOps}
 
 /** The one registration point: every module's queries and oracle
-  * statements are reached through `SparkEntry`, each name once. */
+  * statements are reached through `SparkEntry`, each name once, and
+  * each multi-line statement is written once. */
 class QueryRegistrySpec extends AnyFunSuite {
 
   /** The statements that read the staged parquet; q74's oracle counts
@@ -48,5 +54,29 @@ class QueryRegistrySpec extends AnyFunSuite {
         before("q74_current_citations"))
     } finally WikitextOps.pointOracleAt(root)
     assert(SparkEntry.oracleSql == before)
+  }
+
+  test("no triple-quoted literal of 3 or more lines is written twice") {
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), root.toAbsolutePath)
+    val files = Using.resource(Files.walk(root))(_.iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq)
+    // Each literal is placed by the query name it is bound to, when
+    // it follows `"name" ->`, else by file and line.
+    val bound = "\"(\\w+)\"\\s*->\\s*\\w?$".r
+    val literals = for {
+      p <- files
+      text = Files.readString(p)
+      m <- "(?s)\"\"\"(.*?)\"\"\"".r.findAllMatchIn(text)
+      if m.group(1).count(_ == '\n') >= 2
+    } yield {
+      val before = text.substring(0, m.start)
+      val where = bound.findFirstMatchIn(before).fold(
+        s"${p.getFileName}:${before.count(_ == '\n') + 1}")(_.group(1))
+      m.group(1) -> where
+    }
+    val twice = literals.groupBy(_._1).values.filter(_.size > 1)
+      .map(_.map(_._2).sorted.mkString(" = ")).toSeq.sorted
+    assert(twice.isEmpty, twice.mkString("; "))
   }
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -82,11 +83,25 @@ class ArrayDotSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("imperative registration on a plain session") {
+    // newSession() carries the parent's extension functions, so drop
+    // them first: only `register` may bring each one back.
     val plain = spark.newSession()
+    val calls = Seq(
+      "array_dot" -> "array_dot(array(CAST(2 AS FLOAT)), array(CAST(8 AS FLOAT)))",
+      "nfc_normalize" -> "nfc_normalize('a')",
+      "aho_match" -> "aho_match('abc', array('b'))",
+      "simhash_planes" -> "simhash_planes(array('a', 'b'))",
+      "minhash_sigs" -> "minhash_sigs(array('a', 'b'))",
+      "cdc_chunks" -> "cdc_chunks('abc')")
+    val registry = plain.sessionState.functionRegistry
+    for ((name, _) <- calls) {
+      registry.dropFunction(FunctionIdentifier(name))
+      assert(!registry.functionExists(FunctionIdentifier(name)), name)
+    }
     GraftFunctions.register(plain)
-    assert(plain.sql(
-      "SELECT array_dot(array(CAST(2 AS FLOAT)), array(CAST(8 AS FLOAT)))")
-      .head().getDouble(0) == 16.0)
+    for ((name, call) <- calls)
+      withClue(name) { plain.sql(s"SELECT $call").queryExecution.assertAnalyzed() }
+    assert(plain.sql(s"SELECT ${calls.head._2}").head().getDouble(0) == 16.0)
   }
 
   test("optimizer rule rewrites the zip_with/aggregate idiom to array_dot") {

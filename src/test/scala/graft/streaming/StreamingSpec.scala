@@ -9,9 +9,10 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Streaming operators: stream-vs-batch equivalence for the windowed
-  * aggregation and dedup (same data, same answer), and
-  * flatMapGroupsWithState sessionization over controlled microbatches.
+/** Streaming operators: stream-vs-batch equivalence (same data, same
+  * answer; the twins that share their batch query's statement also
+  * share its oracle), and flatMapGroupsWithState sessionization over
+  * controlled microbatches.
   */
 class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -21,21 +22,27 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
 
-  test("stream windowed agg == batch windowed agg") {
-    val streamed = StreamingOps.windowedAgg(spark, sf)
-      .collect().map(_.toSeq).toSet
-    val nsPerHour = 3600L * 1000 * 1000 * 1000
-    val batch = graft.Tables.table(spark, sf, "events")
-      .withColumn("hour", date_format(
-        timestamp_seconds(expr(s"ts div $nsPerHour") * 3600L),
-        "yyyy-MM-dd HH:mm:ss"))
-      .groupBy("hour", "event_type")
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double")
-          .as("sum_value"))
-      .collect().map(_.toSeq).toSet
-    assert(streamed == batch)
+  /** Streaming twins and the batch queries whose statement they share,
+    * one test each: (test name, stream, batch). */
+  private val twins = Seq(
+    ("stream windowed agg == batch windowed agg",
+      "q52_stream_window", "q28_time_bucket"),
+    ("streaming contract conformance == batch conformance (q347)",
+      "q360_stream_conformance", "q347_contract_conformance"),
+    ("streaming burst detection == batch burst detection (q317)",
+      "q323_stream_burst", "q317_burst_detection"),
+    ("streaming CDC apply == batch CDC apply (q190)",
+      "q195_stream_cdc_apply", "q190_cdc_apply"))
+
+  private def rows(q: String) = graft.SparkEntry.queries(q)(spark, sf)
+    .collect().map(_.toSeq).toSet
+
+  for ((name, stream, batch) <- twins) test(name) {
+    val streamed = rows(stream)
+    assert(streamed == rows(batch))
     assert(streamed.nonEmpty)
+    assert(graft.SparkEntry.oracleSql(stream) ==
+      graft.SparkEntry.oracleSql(batch))
   }
 
   test("streaming SCD2 history == batch gaps-and-islands (q311)") {
@@ -122,15 +129,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("user_id", "event_type").distinct()
       .collect().map(_.toSeq).toSet
     assert(streamed == batch)
-  }
-
-  test("streaming CDC apply == batch CDC apply (q190)") {
-    val streamed = graft.SparkEntry.queries("q195_stream_cdc_apply")(
-      spark, sf).collect().map(_.toSeq).toSet
-    val batch = graft.SparkEntry.queries("q190_cdc_apply")(spark, sf)
-      .collect().map(_.toSeq).toSet
-    assert(streamed == batch)
-    assert(streamed.nonEmpty)
   }
 
   test("stream-stream left outer: matched rows == batch interval join, " +
