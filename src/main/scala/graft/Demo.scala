@@ -6,6 +6,7 @@ import java.nio.file.Files
 
 import com.github.luben.zstd.ZstdOutputStream
 
+import graft.io.Parquet
 import graft.pipeline.{CitationPipeline, Resolve}
 import graft.queries.CitationQueries
 
@@ -49,7 +50,7 @@ object Demo {
     CitationPipeline.build(
       spark, s"${dir.getAbsolutePath}/*.mwrev.zst", out)
     val t = CitationPipeline.dedupKeys.keys.map(n =>
-      n -> spark.read.parquet(s"$out/$n")).toMap
+      n -> Parquet.read(spark, s"$out/$n")).toMap
     t.toSeq.sortBy(_._1).foreach { case (n, df) =>
       println(f"   $n%-22s ${df.count()}%3d rows")
     }

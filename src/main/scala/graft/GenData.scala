@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Parquet
+
 /** Deterministic sf1 testdata derived from the driver's sf0.1 tables —
   * the scale-up corpus for the full-suite sf1 run (round-7 judge item:
   * "prove scale by measurement, not plan reading"). /root/testdata is
@@ -57,7 +59,7 @@ object GenData {
 
   def generate(spark: SparkSession, src: String, out: String): Unit = {
     import spark.implicits._
-    def rd(n: String) = spark.read.parquet(s"$src/$n.parquet")
+    def rd(n: String) = Parquet.read(spark, s"$src/$n.parquet")
 
     // region/nation: fixed dims at every sf (driver pattern).
     write(rd("region"), s"$out/region.parquet")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.io.Parquet
+
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   * One parquet file per table; schemas are carried by the files.
   */
@@ -22,7 +24,7 @@ object Tables {
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = Parquet.read(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeEventTs(df) else df
   }
 

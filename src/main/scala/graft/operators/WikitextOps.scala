@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.table
+import graft.io.Parquet
 import graft.pipeline.CitationPipeline
 import graft.queries.CitationQueries
 import graft.sources.Revision
@@ -81,7 +82,10 @@ object WikitextOps extends QueryModule {
   def pointOracleAt(d: String): Unit = { stagedRoot = stageRoot(d) }
   private var stagedDirs: Set[String] = Set.empty
 
-  private def staged(s: SparkSession, d: String): Map[String, DataFrame] =
+  /** Stages the tables under `stageRoot(d)` (once per JVM) and returns
+    * the reader of one staged table: a query opens only the tables it
+    * uses. */
+  private def staged(s: SparkSession, d: String): String => DataFrame =
     synchronized {
       val root = stageRoot(d)
       stagedRoot = root
@@ -98,8 +102,7 @@ object WikitextOps extends QueryModule {
           .parquet(s"$root/extracted_refs.parquet")
         stagedDirs += root
       }
-      ((stagedTableNames :+ "extracted_refs")
-        .map(n => n -> s.read.parquet(s"$root/$n.parquet"))).toMap
+      n => Parquet.read(s, s"$root/$n.parquet")
     }
 
   val queries: Map[String, Q] = Map(

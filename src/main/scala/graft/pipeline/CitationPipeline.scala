@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Parquet
 import graft.sources.{MwRevZst, Revision}
 import graft.wikitext.{ReferenceExtractor, WikitextNormalizer}
 
@@ -334,7 +335,7 @@ object CitationPipeline {
     if (bucketedTables(table) &&
       spark.catalog.tableExists(servingTableName(table)))
       spark.table(servingTableName(table))
-    else spark.read.parquet(s"$outDir/$table")
+    else Parquet.read(spark, s"$outDir/$table")
 
   /** Publish the deduped table set: bucketed catalog tables for the
     * big two, plain zstd parquet otherwise. */
@@ -381,7 +382,7 @@ object CitationPipeline {
       domain: String = "en.wikipedia.org",
       buckets: Int = 32): Map[String, DataFrame] = {
     import spark.implicits._
-    val staged = spark.read.parquet(s"$outDir/$StagedRefs").as[ExtractedRow]
+    val staged = Parquet.read(spark, s"$outDir/$StagedRefs").as[ExtractedRow]
     val tables = dedup(stagingFromRows(staged, domain))
     writeTables(tables, outDir, buckets)
     tables

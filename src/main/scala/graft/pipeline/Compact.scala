@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
+import graft.io.Parquet
+
 /** Small-file compaction for append-heavy table directories — the
   * engine's form of the reference's `compact_citation_histories.sh`
   * (zstd | jq | split | re-zstd over 2M-line shards): streaming
@@ -27,7 +29,7 @@ object Compact {
       fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
     val before = parquetCount(path)
 
-    val df = spark.read.parquet(dir)
+    val df = Parquet.read(spark, dir)
     val rows = df.count()
     val tmp = new Path(path.getParent,
       s".${path.getName}_compact_tmp")

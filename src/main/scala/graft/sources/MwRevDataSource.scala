@@ -4,7 +4,6 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.sql.catalyst.InternalRow
@@ -43,23 +42,6 @@ object MwRevDataSource {
     ExpressionEncoder[Revision]()
 
   val schema: StructType = encoder.schema
-
-  /** The bundle files `path` names, sorted: the files a glob matches,
-    * with each matched directory replaced by its `.mwrev.zst` files.
-    * Empty when nothing matches (a streaming source may start before
-    * its first bundle arrives). */
-  def bundleFiles(path: String, conf: Configuration): Seq[String] = {
-    val p = new Path(path)
-    val fs = FileSystem.get(p.toUri, conf)
-    val statuses = Option(fs.globStatus(p))
-      .map(_.toSeq).getOrElse(Seq.empty)
-    statuses.flatMap { st =>
-      if (st.isDirectory)
-        fs.listStatus(st.getPath).toSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".mwrev.zst"))
-      else Seq(st)
-    }.map(_.getPath.toString).sorted
-  }
 }
 
 private class MwRevTable(properties: Map[String, String])
@@ -94,7 +76,7 @@ private class MwRevScan(
   override def readSchema(): StructType = MwRevDataSource.schema
 
   private[sources] def listFiles(): Seq[String] =
-    MwRevDataSource.bundleFiles(path, conf.value)
+    MwRevZst.bundleFiles(path, conf.value)
 
   /** Streaming ingestion of a bundle directory — the Structured
     * Streaming replacement for the reference's DONE.txt bookkeeping

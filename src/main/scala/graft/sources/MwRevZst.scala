@@ -4,6 +4,8 @@ import java.io.{BufferedReader, InputStream, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
 import com.github.luben.zstd.ZstdInputStream
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** One MediaWiki revision from a `.mwrev.zst` bundle
@@ -58,13 +60,30 @@ object MwRevZst {
     * filled bundle path must not publish empty tables. */
   def read(spark: SparkSession, path: String): Dataset[Revision] = {
     import spark.implicits._
-    require(MwRevDataSource.bundleFiles(
+    require(bundleFiles(
       path, spark.sessionState.newHadoopConf()).nonEmpty,
       s"no .mwrev.zst bundle matches $path")
     spark.sparkContext
       .binaryFiles(path)
       .flatMap { case (file, pds) => parse(pds.open(), file) }
       .toDS()
+  }
+
+  /** The bundle files `path` names, sorted: the files a glob matches,
+    * with each matched directory replaced by its `.mwrev.zst` files.
+    * Empty when nothing matches (a streaming source may start before
+    * its first bundle arrives). */
+  def bundleFiles(path: String, conf: Configuration): Seq[String] = {
+    val p = new Path(path)
+    val fs = FileSystem.get(p.toUri, conf)
+    val statuses = Option(fs.globStatus(p))
+      .map(_.toSeq).getOrElse(Seq.empty)
+    statuses.flatMap { st =>
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).toSeq
+          .filter(s => s.isFile && s.getPath.getName.endsWith(".mwrev.zst"))
+      else Seq(st)
+    }.map(_.getPath.toString).sorted
   }
 
   /** Streaming parse of one zstd-compressed bundle. `source` labels

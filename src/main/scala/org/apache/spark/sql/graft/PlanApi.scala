@@ -63,6 +63,16 @@ object PlanApi {
     else Some(sizes.flatten.sum)
   }
 
+  /** Spark's rules for the paths a file-source read lists, for a reader
+    * that lists a table directory itself (`graft.io.Parquet`): whether
+    * `path` is a glob, and whether the listing skips an entry called
+    * `name` (hidden and `_`-prefixed names, except summary files). */
+  def isGlobPath(path: org.apache.hadoop.fs.Path): Boolean =
+    org.apache.spark.deploy.SparkHadoopUtil.get.isGlobPath(path)
+
+  def listingSkips(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** Release the cached blocks behind a `localCheckpoint(true)`-ed
     * frame. `Dataset.unpersist` only drains CacheManager entries
     * registered via `persist`, so superseded checkpoint rounds in an

@@ -21,18 +21,15 @@ import org.apache.spark.sql.SparkSession
   * snapshot taken when the session was built: keys a suite added are
   * unset and keys it changed or removed get their first value again, so
   * suite order cannot change results.
+  *
+  * The session is built by `GraftSession.builder`, so every suite runs
+  * with the engine's own configuration.
   */
 object SparkTestSession {
-  val defaultShufflePartitions = "4"
-
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.builder(Some(4))
       .master("local[4]")
-      .config("spark.sql.shuffle.partitions", defaultShufflePartitions)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Map(GraftSession.localFileSystem))
-      .withExtensions(new graft.functions.GraftExtensions)
       .appName("graft-test-shared")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -20,7 +20,8 @@ import graft.io.NioLocalFileSystem
   * MLlib family on the class path, and a `chmod` fork per file that
   * Hadoop's local filesystem writes. Also that every main builds its
   * session through `GraftSession`, the factory that sets the filesystem
-  * and the engine's other settings. */
+  * and the engine's other settings, and that every parquet read goes
+  * through `graft.io.Parquet`, which runs no schema-inference job. */
 class StartupFloorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkTestSession.spark
@@ -115,15 +116,25 @@ class StartupFloorSpec extends AnyFunSuite with BeforeAndAfterAll {
       intercept[ClassNotFoundException](Class.forName(c))
   }
 
+  /** File names of the main sources whose text contains `text`. */
+  private def mainSourcesWith(text: String): Set[String] = {
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), root.toAbsolutePath)
+    Using.resource(Files.walk(root))(_.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && Files.readString(p).contains(text))
+      .map(_.getFileName.toString).toSet)
+  }
+
   test("only GraftSession builds a SparkSession in the main sources") {
     // Every main opens its session through GraftSession.local, so the
     // engine's settings hold for every plan a main prints or runs.
-    val root = Paths.get("src/main")
-    assert(Files.isDirectory(root), root.toAbsolutePath)
-    val callers = Using.resource(Files.walk(root))(_.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        Files.readString(p).contains("SparkSession.builder()"))
-      .map(_.getFileName.toString).toSet)
-    assert(callers == Set("GraftSession.scala"))
+    assert(mainSourcesWith("SparkSession.builder()") == Set("GraftSession.scala"))
+  }
+
+  test("only graft.io.Parquet calls spark.read.parquet in the main sources") {
+    // Every other read goes through Parquet.read, which takes the
+    // schema from one footer on the driver instead of running a Spark
+    // job to infer it.
+    assert(mainSourcesWith(".read.parquet(") == Set("Parquet.scala"))
   }
 }
