@@ -1379,6 +1379,47 @@ object StatsOps extends QueryModule {
     .map { case (d0, p) => s"SELECT $d0 AS digit, ${p} AS exp_ppm" }
     .mkString(" UNION ALL ")
 
+  /** DuckDB CTEs that rebuild q288's 128 HLL registers per event type
+    * from the md5-derived 60-bit user hash and apply the pinned integer
+    * estimator; the last, `est`, holds (event_type, hll_est). q288's
+    * oracle audits it against the exact count, q297's returns it. */
+  val hllEstimateCtes: String =
+    """h AS (
+           SELECT event_type, user_id,
+             CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
+               AS BIGINT) AS h
+           FROM events),
+         b AS (
+           SELECT event_type, h // 9007199254740992 AS bucket,
+                  h % 9007199254740992 AS rest
+           FROM h),
+         r AS (
+           SELECT event_type, bucket,
+             CASE WHEN rest = 0 THEN 54
+                  ELSE 54 - length(format('{:b}', rest)) END AS rho
+           FROM b),
+         reg AS (SELECT event_type, bucket, max(rho) AS rr
+                 FROM r GROUP BY 1, 2),
+         grid AS (
+           SELECT g.event_type, t.bucket
+           FROM (SELECT DISTINCT event_type FROM h) g
+           CROSS JOIN (SELECT unnest(range(0, 128)) AS bucket) t),
+         full_reg AS (
+           SELECT grid.event_type, coalesce(reg.rr, 0) AS rr
+           FROM grid LEFT JOIN reg
+             ON grid.event_type = reg.event_type
+             AND grid.bucket = reg.bucket),
+         s AS (
+           SELECT event_type,
+             sum(CAST(1 AS BIGINT) << (48 - least(rr, 48))) AS sv
+           FROM full_reg GROUP BY 1),
+         est AS (
+           SELECT event_type,
+             CAST(CAST(715275 AS HUGEINT)
+                  * (4611686018427387904 // sv) // 1000000 AS BIGINT)
+               AS hll_est
+           FROM s)"""
+
   val oracle: Map[String, String] = Map(
     "q192_gap_fill" ->
       """WITH ev AS (
@@ -1766,41 +1807,7 @@ object StatsOps extends QueryModule {
          FROM g JOIN tot ON g.feature = tot.feature""",
 
     "q288_hll_distinct" ->
-      """WITH h AS (
-           SELECT event_type, user_id,
-             CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
-               AS BIGINT) AS h
-           FROM events),
-         b AS (
-           SELECT event_type, h // 9007199254740992 AS bucket,
-                  h % 9007199254740992 AS rest
-           FROM h),
-         r AS (
-           SELECT event_type, bucket,
-             CASE WHEN rest = 0 THEN 54
-                  ELSE 54 - length(format('{:b}', rest)) END AS rho
-           FROM b),
-         reg AS (SELECT event_type, bucket, max(rho) AS rr
-                 FROM r GROUP BY 1, 2),
-         grid AS (
-           SELECT g.event_type, t.bucket
-           FROM (SELECT DISTINCT event_type FROM h) g
-           CROSS JOIN (SELECT unnest(range(0, 128)) AS bucket) t),
-         full_reg AS (
-           SELECT grid.event_type, coalesce(reg.rr, 0) AS rr
-           FROM grid LEFT JOIN reg
-             ON grid.event_type = reg.event_type
-             AND grid.bucket = reg.bucket),
-         s AS (
-           SELECT event_type,
-             sum(CAST(1 AS BIGINT) << (48 - least(rr, 48))) AS sv
-           FROM full_reg GROUP BY 1),
-         est AS (
-           SELECT event_type,
-             CAST(CAST(715275 AS HUGEINT)
-                  * (4611686018427387904 // sv) // 1000000 AS BIGINT)
-               AS hll_est
-           FROM s),
+      s"""WITH $hllEstimateCtes,
          exact AS (
            SELECT event_type, count(DISTINCT user_id) AS n_exact
            FROM h GROUP BY 1)

@@ -1,7 +1,9 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.io.Parquet
 import graft.sources.{MwRevZst, Revision}
@@ -51,8 +53,9 @@ final case class ExtractedRow(
   *  - `build` is `stage`, which materializes the extracted rows ONCE as
   *    zstd parquet, then `publish`, which derives all 11 tables from
   *    that staging set with column-pruned scans — bundles are
-  *    decompressed exactly once. The streaming ingest runs the same two
-  *    steps;
+  *    decompressed exactly once. The streaming `ingest` runs `stage`
+  *    on each micro-batch of new bundles, and its caller then runs
+  *    `publish`;
   *  - sha1/parse_url run as codegen'd built-ins on the staged DataFrame,
   *    not inside the flatMap;
   *  - each table's dedup is a single hash shuffle on its natural key
@@ -285,7 +288,8 @@ object CitationPipeline {
   /** Admin: drop one table's output or the whole table set (the
     * Parquet-native form of the reference's purge.py — `--table` drops
     * one, no argument drops all; "truncate" has no separate meaning for
-    * immutable files). */
+    * immutable files). Dropping all also drops the staging set and the
+    * ingest checkpoint, so the next `ingest` reads every bundle again. */
   def purge(
       spark: SparkSession, outDir: String,
       table: Option[String] = None): Unit = {
@@ -294,7 +298,7 @@ object CitationPipeline {
         .mkString(", ")}"))
     val conf = spark.sparkContext.hadoopConfiguration
     val targets = table.map(Seq(_))
-      .getOrElse(dedupKeys.keys.toSeq :+ StagedRefs)
+      .getOrElse(dedupKeys.keys.toSeq :+ StagedRefs :+ Checkpoint)
     targets.foreach { t =>
       if (bucketedTables(t))
         spark.sql(s"DROP TABLE IF EXISTS ${servingTableName(t)}")
@@ -372,6 +376,44 @@ object CitationPipeline {
     extractRows(revs, domain, emitRefless = true)
       .write.mode(mode).option("compression", "zstd")
       .parquet(s"$outDir/$StagedRefs")
+
+  /** The streaming ingest's checkpoint under `outDir`. */
+  private val Checkpoint = "_checkpoint"
+
+  /** Spark's file source skips a file whose modification time is older
+    * than this before the newest file it has seen (7 days by default).
+    * A late bundle with an old mtime must still be ingested, so the age
+    * is larger than any corpus's time span. */
+  private val BundleMaxAge = "36500d"
+
+  /** Stage every bundle under `bundleGlob` that no earlier run staged,
+    * then return: Spark's file source lists the bundles and its log of
+    * seen files, in `outDir/_checkpoint`, replaces the reference's
+    * per-file DONE.txt markers (build_all.py:120-172), so a bundle is
+    * staged once whatever its name or age. Each micro-batch appends
+    * through the batch reader and `stage`; run `publish` afterwards. A
+    * retried micro-batch can append its rows twice, which `publish`'s
+    * dedup absorbs. The stream selects only `path`, so the file source
+    * never reads a bundle's bytes. */
+  def ingest(
+      spark: SparkSession,
+      bundleGlob: String,
+      outDir: String,
+      domain: String = "en.wikipedia.org"): Unit =
+    spark.readStream.schema(BinaryFileFormat.schema).format("binaryFile")
+      .option("pathGlobFilter", "*.mwrev.zst")
+      .option("maxFileAge", BundleMaxAge)
+      .load(bundleGlob).select("path")
+      .writeStream
+      .option("checkpointLocation", s"$outDir/$Checkpoint")
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        // the batch's files come from its rows: inputFiles is empty here
+        val files = batch.collect().map(_.getString(0)).toSeq
+        if (files.nonEmpty)
+          stage(MwRevZst.read(spark, files), outDir, SaveMode.Append, domain)
+      }
+      .start().awaitTermination()
 
   /** Derive, dedup and publish the 11 tables from the whole staging
     * set; returns the deduped tables. Dedup-on-read also absorbs rows

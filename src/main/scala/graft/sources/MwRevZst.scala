@@ -28,9 +28,10 @@ final case class Revision(
   * `timestamp`); lines starting with a single space are revision text
   * (the space is stripped); all other lines are ignored.
   *
-  * [[read]] is the one batch reader; the `mwrev` source
-  * ([[MwRevDataSource]]) is the streaming one, and both decode through
-  * [[parse]].
+  * [[read]] is the one bundle reader: a batch build reads a path
+  * through it, and the streaming ingest
+  * (`CitationPipeline.ingest`) reads each micro-batch's new files
+  * through it, so both decode through [[parse]] in the same task layout.
   *
   * Spark shape: one zstd stream is not splittable, so a bundle is never
   * split across tasks (matching the reference's process-per-file
@@ -59,20 +60,25 @@ object MwRevZst {
     * an error, not an empty corpus: a mistyped, unmounted or not yet
     * filled bundle path must not publish empty tables. */
   def read(spark: SparkSession, path: String): Dataset[Revision] = {
+    val files = bundleFiles(path, spark.sessionState.newHadoopConf())
+    require(files.nonEmpty, s"no .mwrev.zst bundle matches $path")
+    read(spark, files)
+  }
+
+  /** The revisions of the bundle `files`, which must not be empty.
+    * `binaryFiles` splits its path argument on commas, so a bundle whose
+    * name contains a comma fails the read. */
+  def read(spark: SparkSession, files: Seq[String]): Dataset[Revision] = {
     import spark.implicits._
-    require(bundleFiles(
-      path, spark.sessionState.newHadoopConf()).nonEmpty,
-      s"no .mwrev.zst bundle matches $path")
     spark.sparkContext
-      .binaryFiles(path)
+      .binaryFiles(files.mkString(","))
       .flatMap { case (file, pds) => parse(pds.open(), file) }
       .toDS()
   }
 
   /** The bundle files `path` names, sorted: the files a glob matches,
     * with each matched directory replaced by its `.mwrev.zst` files.
-    * Empty when nothing matches (a streaming source may start before
-    * its first bundle arrives). */
+    * Empty when nothing matches. */
   def bundleFiles(path: String, conf: Configuration): Seq[String] = {
     val p = new Path(path)
     val fs = FileSystem.get(p.toUri, conf)

@@ -1,6 +1,10 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -55,6 +59,14 @@ object StreamingOps extends graft.operators.QueryModule {
       .withColumn("etime", timestamp_seconds(expr("ts div 1000000000")))
       .withWatermark("etime", "1 hour")
 
+  /** Where each drain makes its own checkpoint directory: tmpfs when
+    * the machine has one (`/dev/shm`), else `java.io.tmpdir`. */
+  private[streaming] def checkpointBase: Path = {
+    val shm = Paths.get("/dev/shm")
+    if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
+    else Paths.get(sys.props("java.io.tmpdir"))
+  }
+
   /** Drain a streaming DataFrame into an in-memory table with
     * AvailableNow and return the final result.
     *
@@ -89,11 +101,11 @@ object StreamingOps extends graft.operators.QueryModule {
     * durability value — the query runs to completion and the result is
     * read from the sink, so the offset/commit/state files are pure
     * run-to-completion scaffolding. They go on tmpfs when the machine
-    * has one (/dev/shm; /tmp here is disk-backed) and are deleted
-    * after the drain. Measured honestly: at this corpus's state sizes
-    * the drain floor is micro-batch planning/scheduling CPU and the
-    * placement is a wash — it pays where state commits carry real
-    * bytes. A CONTINUOUS deployment must pass its own durable
+    * has one (/dev/shm; /tmp is often disk-backed), in a directory of
+    * the drain's own, which is deleted after the drain. Measured
+    * honestly: at this corpus's state sizes the drain floor is
+    * micro-batch planning/scheduling CPU and the placement is a wash —
+    * it pays where state commits carry real bytes. A CONTINUOUS deployment must pass its own durable
     * checkpointLocation — this helper is the drain harness, not the
     * deploy path.
     *
@@ -125,25 +137,16 @@ object StreamingOps extends graft.operators.QueryModule {
     child.conf.set(ndKey, noDataBatch.toString)
     extraConf.foreach { case (k, v) => child.conf.set(k, v) }
     val dfC = PlanApi.rebind(df, child)
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckBase =
-      if (java.nio.file.Files.isDirectory(shm) &&
-          java.nio.file.Files.isWritable(shm)) "/dev/shm/graft-ck"
-      else sys.props("java.io.tmpdir").stripSuffix("/") + "/graft-ck"
-    val ck = s"$ckBase/$name-${java.util.UUID.randomUUID()}"
+    val ck = Files.createTempDirectory(checkpointBase, s"$name-")
     try {
       val q = dfC.writeStream.outputMode(mode).format("memory")
-        .option("checkpointLocation", ck)
+        .option("checkpointLocation", ck.toString)
         .queryName(name).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     } finally {
       try {
-        val root = java.nio.file.Paths.get(ck)
-        if (java.nio.file.Files.exists(root)) {
-          java.nio.file.Files.walk(root)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+        Using.resource(Files.walk(ck))(_.sorted(Comparator.reverseOrder())
+          .forEach(p => Files.deleteIfExists(p)))
       } catch { case _: java.io.IOException => () }
     }
     // The memory sink registered `name` in the CHILD's catalog; hand
@@ -588,6 +591,22 @@ object StreamingOps extends graft.operators.QueryModule {
   private val distinctUserTypes =
     "SELECT DISTINCT user_id, event_type FROM events"
 
+  /** DuckDB CTEs `c` and `p`: the clicks and the purchases, each with
+    * its event time in whole seconds. */
+  private val clickPurchaseCtes =
+    """c AS (SELECT user_id, event_id, epoch_ns(ts) // 1000000000 AS sec
+                  FROM events WHERE event_type = 'click'),
+       p AS (SELECT user_id, event_id, epoch_ns(ts) // 1000000000 AS sec
+                  FROM events WHERE event_type = 'purchase')"""
+
+  /** q66's batch answer over [[clickPurchaseCtes]]: every click joined
+    * to each purchase of its user within the following hour. */
+  private val clickPurchaseMatches =
+    """SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id
+         FROM c JOIN p
+           ON c.user_id = p.user_id
+          AND p.sec >= c.sec AND p.sec <= c.sec + 3600"""
+
   val oracle: Map[String, String] = Map(
     // Batch q347's statement — stream == batch.
     "q360_stream_conformance" ->
@@ -644,43 +663,11 @@ object StreamingOps extends graft.operators.QueryModule {
          SELECT user_id, value, valid_from,
            coalesce(nxt, -1) AS valid_to, version
          FROM starts""",
-    // Identical register derivation and pinned estimator as q288's
-    // batch Aggregator oracle — stream == batch == sketch.
+    // q288's register CTEs and pinned estimator, without its audit
+    // columns — stream == batch == sketch.
     "q297_stream_hll" ->
-      """WITH h AS (
-           SELECT event_type,
-             CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
-               AS BIGINT) AS h
-           FROM events),
-         b AS (
-           SELECT event_type, h // 9007199254740992 AS bucket,
-                  h % 9007199254740992 AS rest
-           FROM h),
-         r AS (
-           SELECT event_type, bucket,
-             CASE WHEN rest = 0 THEN 54
-                  ELSE 54 - length(format('{:b}', rest)) END AS rho
-           FROM b),
-         reg AS (SELECT event_type, bucket, max(rho) AS rr
-                 FROM r GROUP BY 1, 2),
-         grid AS (
-           SELECT g.event_type, t.bucket
-           FROM (SELECT DISTINCT event_type FROM h) g
-           CROSS JOIN (SELECT unnest(range(0, 128)) AS bucket) t),
-         full_reg AS (
-           SELECT grid.event_type, coalesce(reg.rr, 0) AS rr
-           FROM grid LEFT JOIN reg
-             ON grid.event_type = reg.event_type
-             AND grid.bucket = reg.bucket),
-         s AS (
-           SELECT event_type,
-             sum(CAST(1 AS BIGINT) << (48 - least(rr, 48))) AS sv
-           FROM full_reg GROUP BY 1)
-         SELECT event_type,
-           CAST(CAST(715275 AS HUGEINT)
-                * (4611686018427387904 // sv) // 1000000 AS BIGINT)
-             AS hll_est
-         FROM s""",
+      s"""WITH ${StatsOps.hllEstimateCtes}
+         SELECT event_type, hll_est FROM est""",
     "q286_stream_topk" ->
       """WITH c AS (
            SELECT strftime(make_timestamp(
@@ -736,15 +723,8 @@ object StreamingOps extends graft.operators.QueryModule {
          FROM events e JOIN customer c ON e.user_id = c.c_custkey
          GROUP BY c_mktsegment""",
     // Batch interval join over the same second-truncated event times.
-    "q66_stream_stream_join" ->
-      """SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id
-         FROM (SELECT user_id, event_id, epoch_ns(ts) // 1000000000 AS sec
-               FROM events WHERE event_type = 'click') c
-         JOIN (SELECT user_id, event_id, epoch_ns(ts) // 1000000000 AS sec
-               FROM events WHERE event_type = 'purchase') p
-           ON c.user_id = p.user_id
-          AND p.sec >= c.sec AND p.sec <= c.sec + 3600""",
-    // Left-outer = the inner matches plus the watermark-evicted
+    "q66_stream_stream_join" -> s"WITH $clickPurchaseCtes\n$clickPurchaseMatches",
+    // Left-outer = q66's inner matches plus the watermark-evicted
     // unmatched clicks. A null row only emits once the global watermark
     // (min over both inputs of max event time − 1h delay) passes the
     // click's last matchable instant (click_time + 1h join range);
@@ -752,23 +732,18 @@ object StreamingOps extends graft.operators.QueryModule {
     // AvailableNow drain stops and are withheld — the oracle encodes
     // that cutoff rather than pretending stream == batch left join.
     "q167_stream_left_outer" ->
-      """WITH c AS (SELECT user_id, event_id, epoch_ns(ts) // 1000000000 AS sec
-                    FROM events WHERE event_type = 'click'),
-            p AS (SELECT user_id, event_id, epoch_ns(ts) // 1000000000 AS sec
-                    FROM events WHERE event_type = 'purchase'),
+      s"""WITH $clickPurchaseCtes,
+            m AS ($clickPurchaseMatches),
             wm AS (SELECT least((SELECT max(sec) FROM c),
                                 (SELECT max(sec) FROM p)) - 3600 AS w)
-         SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id
-         FROM c JOIN p
-           ON c.user_id = p.user_id
-          AND p.sec >= c.sec AND p.sec <= c.sec + 3600
+         SELECT * FROM m
          UNION ALL
          SELECT c.user_id, c.event_id AS click_id, NULL AS purchase_id
          FROM c, wm
          WHERE c.sec + 3600 < wm.w
-           AND NOT EXISTS (SELECT 1 FROM p
-                           WHERE p.user_id = c.user_id
-                             AND p.sec >= c.sec AND p.sec <= c.sec + 3600)""",
+           AND NOT EXISTS (SELECT 1 FROM m
+                           WHERE m.user_id = c.user_id
+                             AND m.click_id = c.event_id)""",
     // Stream == batch: the per-signature index over a static stream
     // input is exactly the batch MinHash band aggregation (q37's sigs).
     "q107_stream_neardup_index" ->

@@ -4,6 +4,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 
 /** The one `private[sql]` doorway the engine's custom logical plans
@@ -33,7 +34,10 @@ object PlanApi {
 
   /** Total bytes of the files feeding a streaming DataFrame's file
     * sources (glob-filtered, non-recursive — the layout the engine's
-    * single-directory corpus uses). The scale signal for sizing
+    * single-directory corpus uses). A source's paths are its `paths`
+    * plus its `path` option, which is where `readStream.parquet(dir)`
+    * and `load(dir)` put them; each is globbed, and a matched directory
+    * counts its files. The scale signal for sizing
     * state-store partitions to the DRAIN, not to a constant: listing is
     * one directory stat per source, which the stream's own start pays
     * anyway. None when the plan has no file source or listing fails,
@@ -46,14 +50,15 @@ object PlanApi {
     val sizes = df.queryExecution.analyzed.collect {
       case sr: StreamingRelation =>
         try {
-          val glob = sr.dataSource.options.get("pathGlobFilter")
-          val matcher = glob.map(g => java.nio.file.FileSystems.getDefault
-            .getPathMatcher("glob:" + g))
-          Some(sr.dataSource.paths.map { p =>
+          val options = CaseInsensitiveMap(sr.dataSource.options)
+          val matcher = options.get("pathGlobFilter").map(g =>
+            java.nio.file.FileSystems.getDefault.getPathMatcher("glob:" + g))
+          Some((sr.dataSource.paths ++ options.get("path")).distinct.map { p =>
             val path = new org.apache.hadoop.fs.Path(p)
             val fs = path.getFileSystem(hconf)
-            fs.listStatus(path).iterator
-              .filter(st => matcher.forall(m => m.matches(
+            Option(fs.globStatus(path)).toSeq.flatten
+              .flatMap(st => if (st.isDirectory) fs.listStatus(st.getPath).toSeq else Seq(st))
+              .filter(st => st.isFile && matcher.forall(m => m.matches(
                 java.nio.file.Paths.get(st.getPath.getName))))
               .map(_.getLen).sum
           }.sum)

@@ -20,8 +20,9 @@ import graft.io.NioLocalFileSystem
   * MLlib family on the class path, and a `chmod` fork per file that
   * Hadoop's local filesystem writes. Also that every main builds its
   * session through `GraftSession`, the factory that sets the filesystem
-  * and the engine's other settings, and that every parquet read goes
-  * through `graft.io.Parquet`, which runs no schema-inference job. */
+  * and the engine's other settings, that every parquet read goes
+  * through `graft.io.Parquet`, which runs no schema-inference job, and
+  * that bundles are decoded by `MwRevZst` alone. */
 class StartupFloorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkTestSession.spark
@@ -136,5 +137,17 @@ class StartupFloorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // schema from one footer on the driver instead of running a Spark
     // job to infer it.
     assert(mainSourcesWith(".read.parquet(") == Set("Parquet.scala"))
+  }
+
+  test("MwRevZst is the one bundle reader: no other decode, no registered data source") {
+    // The batch build and the streaming ingest both decode through
+    // MwRevZst.read; RefsExtractorCli decodes one local file without Spark.
+    assert(mainSourcesWith("MwRevZst.parse(")
+      .subsetOf(Set("MwRevZst.scala", "RefsExtractorCli.scala")))
+    assert(mainSourcesWith("DataSourceRegister").isEmpty)
+    val registries = Using.resource(Files.walk(Paths.get("src/main/resources")))(
+      _.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith("DataSourceRegister")).toList)
+    assert(registries.isEmpty)
   }
 }

@@ -10,7 +10,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.CitationQueries
-import graft.sources.{MwRevZst, Revision}
+import graft.sources.MwRevZst
 
 /** End-to-end slice (SURVEY.md §7.2): synthetic `.mwrev.zst` bundle →
   * source → extract → dedup → citationsAtRevision, asserted against the
@@ -347,13 +347,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // the published tables are the last good build's
     assert(spark.read.parquet(s"$out/revisions").count() == before)
-    // the streaming source may still start on an empty directory
-    val q = spark.readStream.format("mwrev").load(empty)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("mwrev_empty_stream")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    assert(spark.table("mwrev_empty_stream").count() == 0)
+    // the streaming ingest may still start on an empty directory
+    val ingested =
+      Files.createTempDirectory("graft-ingest").toFile.getAbsolutePath
+    CitationPipeline.ingest(spark, empty, ingested)
+    assert(!new java.io.File(s"$ingested/_staged_refs").exists())
   }
 
   /** The session settings the bucketed-layout tests change. */
@@ -451,40 +449,36 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("DataSource V2: format(\"mwrev\") reads bundles") {
+  /** The staged rows under `out`, in a fixed order. */
+  private def stagedRows(out: String): Seq[ExtractedRow] = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    // The one batch reader and the streaming source agree on every
-    // field of every revision.
-    val glob = s"$bundleDir/*.mwrev.zst"
-    val q = spark.readStream.format("mwrev").load(glob).as[Revision]
-      .writeStream.outputMode("append").format("memory")
-      .queryName("mwrev_parity").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table("mwrev_parity").as[Revision].collect()
-      .sortBy(_.revisionId).toSeq
-    val batch = MwRevZst.read(spark, glob).collect()
-      .sortBy(_.revisionId).toSeq
-    assert(streamed.size == 4)
-    assert(streamed == batch)
-    val r = streamed.head
-    assert(r.pageId == 100)
-    assert(r.revisionId == 1001L)
-    assert(r.revisionTimestamp == "2020-01-01 00:00:00")
-    assert(r.revisionText.contains("<ref name=a>"))
+    spark.read.parquet(s"$out/_staged_refs").as[ExtractedRow].collect()
+      .sortBy(r => (r.revisionId, r.offsetStart, r.rawReference)).toSeq
   }
 
-  test("DataSource V2: streaming ingestion of the bundle directory") {
-    import org.apache.spark.sql.streaming.Trigger
-    val streamed = spark.readStream.format("mwrev")
-      .load(s"$bundleDir/*.mwrev.zst")
-    val q = streamed.writeStream.outputMode("append").format("memory")
-      .queryName("mwrev_stream").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.table("mwrev_stream")
-    assert(rows.count() == 4)
-    assert(rows.select("revisionId").collect().map(_.getLong(0)).toSet ==
-      Set(1001L, 1002L, 1003L, 2001L))
+  test("ingest stages the rows a batch stage of the same bundles stages") {
+    val glob = s"$bundleDir/*.mwrev.zst"
+    val streamed =
+      Files.createTempDirectory("graft-ingest").toFile.getAbsolutePath
+    val batch = Files.createTempDirectory("graft-stage").toFile.getAbsolutePath
+    CitationPipeline.ingest(spark, glob, streamed)
+    CitationPipeline.stage(MwRevZst.read(spark, glob), batch,
+      org.apache.spark.sql.SaveMode.Overwrite)
+    assert(stagedRows(streamed).map(_.revisionId).distinct ==
+      Seq(1001L, 1002L, 1003L, 2001L))
+    assert(stagedRows(streamed) == stagedRows(batch))
+  }
+
+  test("ingest of a bundle directory never reads bundle bytes in the file source") {
+    // With at most 1 byte allowed per binary file, any read of a
+    // bundle's content by the stream's file source fails the query; the
+    // bundles are decoded by the batch reader alone.
+    onChildSession("spark.sql.sources.binaryFile.maxLength" -> "1") { s =>
+      val out = Files.createTempDirectory("graft-ingest").toFile.getAbsolutePath
+      CitationPipeline.ingest(s, bundleDir, out)
+      assert(stagedRows(out).map(_.revisionId).distinct ==
+        Seq(1001L, 1002L, 1003L, 2001L))
+    }
   }
 
   test("parse_url HOST pinned vs urlparse netloc (F3 caveat)") {

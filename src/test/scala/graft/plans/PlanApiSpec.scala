@@ -1,5 +1,7 @@
 package graft.plans
 
+import java.nio.file.Files
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.DataSource
@@ -29,5 +31,28 @@ class PlanApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       StreamingRelation(source, "parquet", DataTypeUtils.toAttributes(schema)), spark)
     assert(df.isStreaming)
     assert(PlanApi.streamingSourceBytes(df).isEmpty)
+  }
+
+  test("streamingSourceBytes counts the files a readStream.parquet(dir) source reads") {
+    // readStream.parquet(dir) keeps the directory in the `path` option,
+    // not in the source's paths. Sizing lists files and reads none, so
+    // their bytes need not be parquet.
+    val dir = Files.createTempDirectory("stream-bytes")
+    def put(name: String, bytes: Int): Unit = {
+      Files.createDirectories(dir.resolve(name).getParent)
+      Files.write(dir.resolve(name), new Array[Byte](bytes))
+    }
+    put("events.parquet", 1234)
+    put("other.parquet", 99)
+    put("sub/part-0.parquet", 77)
+    def bytes(glob: Option[String], path: String): Option[Long] = {
+      val reader = spark.readStream.schema(schema)
+      PlanApi.streamingSourceBytes(
+        glob.fold(reader)(reader.option("pathGlobFilter", _)).parquet(path))
+    }
+    assert(bytes(Some("events.parquet"), dir.toString).contains(1234L))
+    assert(bytes(None, dir.toString).contains(1234L + 99))
+    // a glob is expanded, and a directory it matches counts its files
+    assert(bytes(Some("*.parquet"), s"$dir/*").contains(1234L + 99 + 77))
   }
 }

@@ -9,6 +9,8 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.pipeline.CitationPipeline
+
 /** Streaming operators: stream-vs-batch equivalence (same data, same
   * answer; the twins that share their batch query's statement also
   * share its oracle), and flatMapGroupsWithState sessionization over
@@ -185,51 +187,101 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(streamed.nonEmpty)
   }
 
-  test("incremental pipeline: new bundles ingested exactly once") {
-    import java.nio.charset.StandardCharsets
-    import java.nio.file.Files
-    import com.github.luben.zstd.ZstdOutputStream
+  test("a drain leaves no new entry under the checkpoint base") {
+    import scala.jdk.CollectionConverters._
+    val base = StreamingOps.checkpointBase
+    def entries(): Set[String] = scala.util.Using.resource(
+      java.nio.file.Files.list(base))(_.iterator().asScala.map(_.toString).toSet)
+    val before = entries()
+    assert(StreamingOps.windowedAgg(spark, sf).count() > 0)
+    assert(entries() -- before == Set.empty)
+  }
 
-    val bundles = Files.createTempDirectory("inc-bundles").toFile
-    val out = Files.createTempDirectory("inc-out").toFile.getAbsolutePath
-    def writeBundle(name: String, pageId: Int, revId: Long): Unit = {
+  /** A fresh bundle directory, and a writer of one-revision bundles into
+    * it whose single reference cites `https://e.org/<pageId>`. */
+  private def bundleDir(): (String, (String, Int, Long) => java.io.File) = {
+    import java.nio.charset.StandardCharsets
+    import com.github.luben.zstd.ZstdOutputStream
+    val dir = java.nio.file.Files.createTempDirectory("inc-bundles").toFile
+    def write(name: String, pageId: Int, revId: Long): java.io.File = {
       val text =
         s"# page_id=$pageId ns=0 rev_id=$revId parent_rev_id= " +
           s"timestamp=2021-01-01T00:00:00Z\n" +
           s" X <ref name=n$pageId>{{Cite web |url=https://e.org/$pageId" +
           s" |title=T}}</ref>\n"
-      val z = new ZstdOutputStream(new java.io.FileOutputStream(
-        new java.io.File(bundles, name)))
+      val f = new java.io.File(dir, name)
+      val z = new ZstdOutputStream(new java.io.FileOutputStream(f))
       z.write(text.getBytes(StandardCharsets.UTF_8))
       z.close()
+      f
     }
+    (s"${dir.getAbsolutePath}/*.mwrev.zst", write)
+  }
 
-    val glob = s"${bundles.getAbsolutePath}/*.mwrev.zst"
+  private def newOut(): String =
+    java.nio.file.Files.createTempDirectory("inc-out").toFile.getAbsolutePath
+
+  private def staged(out: String): Long =
+    spark.read.parquet(s"$out/_staged_refs").count()
+
+  test("incremental pipeline: new bundles ingested exactly once") {
+    val (glob, writeBundle) = bundleDir()
+    val out = newOut()
     writeBundle("a.mwrev.zst", 1, 10L)
-    StreamingPipeline.ingestAvailable(spark, glob, out)
-    assert(spark.read.parquet(s"$out/_staged_refs").count() == 1)
+    CitationPipeline.ingest(spark, glob, out)
+    assert(staged(out) == 1)
 
     // Re-run with no new data: nothing re-ingested.
-    StreamingPipeline.ingestAvailable(spark, glob, out)
-    assert(spark.read.parquet(s"$out/_staged_refs").count() == 1)
+    CitationPipeline.ingest(spark, glob, out)
+    assert(staged(out) == 1)
 
     // A new bundle arrives: only its revisions are appended.
     writeBundle("b.mwrev.zst", 2, 20L)
-    StreamingPipeline.ingestAvailable(spark, glob, out)
-    assert(spark.read.parquet(s"$out/_staged_refs").count() == 2)
+    CitationPipeline.ingest(spark, glob, out)
+    assert(staged(out) == 2)
 
-    // A bundle whose name sorts BELOW the committed high-water mark is
-    // skipped by design: the filename-HWM offset can never re-shift
-    // already-committed work (a positional offset would re-read tail
-    // files and corrupt exactly-once); bundle producers emit
-    // monotonically increasing names, DONE.txt-style.
+    // A bundle whose name sorts below the ones already ingested is
+    // staged, once: the file source tracks each file it has seen, as
+    // the reference's per-file DONE.txt markers do.
     writeBundle("0-late.mwrev.zst", 3, 30L)
-    StreamingPipeline.ingestAvailable(spark, glob, out)
-    assert(spark.read.parquet(s"$out/_staged_refs").count() == 2)
+    CitationPipeline.ingest(spark, glob, out)
+    assert(staged(out) == 3)
+    CitationPipeline.ingest(spark, glob, out)
+    assert(staged(out) == 3)
 
-    val tables = StreamingPipeline.refreshTables(spark, out)
-    assert(tables("citation_instances").count() == 2)
-    assert(spark.read.parquet(s"$out/revisions").count() == 2)
+    val tables = CitationPipeline.publish(spark, out)
+    assert(tables("citation_instances").count() == 3)
+    assert(spark.read.parquet(s"$out/revisions").count() == 3)
+  }
+
+  test("incremental pipeline: a bundle with a 30-day-old mtime is ingested") {
+    val (glob, writeBundle) = bundleDir()
+    val out = newOut()
+    writeBundle("a.mwrev.zst", 1, 10L)
+    CitationPipeline.ingest(spark, glob, out)
+    assert(staged(out) == 1)
+    // Older than the newest seen file by more than the file source's
+    // default maxFileAge (7 days), which would skip it.
+    val late = writeBundle("b.mwrev.zst", 2, 20L)
+    assert(late.setLastModified(
+      System.currentTimeMillis() - 30L * 24 * 3600 * 1000))
+    CitationPipeline.ingest(spark, glob, out)
+    assert(staged(out) == 2)
+    CitationPipeline.ingest(spark, glob, out)
+    assert(staged(out) == 2)
+  }
+
+  test("purge resets the ingest: the next ingest stages every bundle again") {
+    val (glob, writeBundle) = bundleDir()
+    val out = newOut()
+    writeBundle("a.mwrev.zst", 1, 10L)
+    writeBundle("b.mwrev.zst", 2, 20L)
+    CitationPipeline.ingest(spark, glob, out)
+    assert(staged(out) == 2)
+    CitationPipeline.purge(spark, out)
+    assert(!new java.io.File(s"$out/_checkpoint").exists())
+    CitationPipeline.ingest(spark, glob, out)
+    assert(staged(out) == 2)
   }
 
   test("flatMapGroupsWithState sessionization across microbatches") {
