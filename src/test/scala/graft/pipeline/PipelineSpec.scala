@@ -469,7 +469,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stagedRows(streamed) == stagedRows(batch))
   }
 
-  test("ingest of a bundle directory never reads bundle bytes in the file source") {
+  test("ingest of a bundle directory reads no bundle bytes in the file source") {
     // With at most 1 byte allowed per binary file, any read of a
     // bundle's content by the stream's file source fails the query; the
     // bundles are decoded by the batch reader alone.
