@@ -52,49 +52,6 @@ object AnalyticsOps extends QueryModule {
     }
   }
 
-  /** STRICT running max of `valueCol` over `orderCol`-DESCENDING order
-    * (one input row per orderCol value): each output row's `out` is the
-    * max over all rows with strictly larger orderCol, null for the
-    * largest. Distributed with the two-phase pattern of
-    * [[TextOps.orderedCumsum]]: range-partition descending, partition-
-    * local inclusive running max shifted one row for strictness, plus
-    * each partition's offset = max of all earlier (larger-value)
-    * partitions' maxima, collected (one tiny row per partition) and
-    * broadcast back. No single-partition window at any size.
-    */
-  private[graft] def strictPrefixMaxDesc(df: DataFrame, orderCol: String,
-      valueCol: String, out: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ranged = df
-      .repartitionByRange(col(orderCol).desc)
-      .sortWithinPartitions(col(orderCol).desc)
-      .withColumn("_pid", spark_partition_id())
-    val w = Window.partitionBy("_pid").orderBy(col(orderCol).desc)
-    val withLocal = ranged
-      .withColumn("_incl", max(col(valueCol)).over(w))
-      .withColumn("_lag", lag(col("_incl"), 1).over(w))
-    val totals = withLocal.groupBy("_pid")
-      .agg(max(col(valueCol)).as("_total"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    // partition offset = running max of all EARLIER partitions' maxima
-    // (earlier pid = larger orderCol range); None for the first.
-    val offsets = totals.map(_._1).zip(
-      totals.map(_._2).scanLeft(Option.empty[Long]) {
-        (acc, t) => Some(acc.fold(t)(math.max(_, t)))
-      })
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offsetDf = broadcast(
-      offsets.toSeq.map { case (pid, o) => (pid, o) }
-        .toDF("_pid", "_offset"))
-    // greatest() ignores nulls: strict prefix = max(lagged local
-    // inclusive max, earlier partitions' offset), null only for the
-    // global first row.
-    withLocal.join(offsetDf, Seq("_pid"), "left_outer")
-      .withColumn(out, greatest(col("_lag"), col("_offset")))
-      .drop("_pid", "_incl", "_lag", "_offset")
-  }
-
   /** 7-day attribution window (ns). */
   private val AttrWindowNs = 604800000000000L
 
@@ -374,10 +331,9 @@ object AnalyticsOps extends QueryModule {
     // y>=y_p with one strict. The naive form is an O(n²) NOT EXISTS
     // self-join; the distributed form reduces per x-group first
     // (groupBy x -> max y, one shuffle), then takes a STRICT running
-    // max over x-descending groups with the two-phase prefix pattern
-    // (range partition + partition-local window + broadcast partition
-    // maxima — no single-partition window, same trick as
-    // TextOps.orderedCumsum), and joins the tiny frontier test back.
+    // max over x-descending groups with the ordered-scan kernel
+    // (OrderedScan — no single-partition window), and joins the tiny
+    // frontier test back.
     // A point survives iff y == its group max AND y > every group max
     // at strictly larger x. Work: one shuffle over points, one range
     // shuffle over DISTINCT x values, one join back on x.
@@ -388,7 +344,8 @@ object AnalyticsOps extends QueryModule {
           length(col("text")).cast("long").as("x"),
           size(array_distinct(col("tokens"))).cast("long").as("y"))
       val grp = pts.groupBy("x").agg(max("y").as("gy"))
-      val strictMax = strictPrefixMaxDesc(grp, "x", "gy", "sy")
+      val strictMax = OrderedScan.scan(grp, Seq(col("x").desc),
+        OrderedScan.StrictMax(col("gy")), "sy").df
       pts.join(broadcast(strictMax), "x")
         .filter(col("y") === col("gy") &&
           (col("sy").isNull || col("y") > col("sy")))

@@ -183,8 +183,8 @@ object EvalOps extends QueryModule {
     // Scale posture: the post-histogram ordered windows are
     // SinglePartition by design — domain-sized (bounded), never
     // corpus-sized. A score with an unbounded domain first buckets
-    // (q231's recipe) or swaps the window for the two-phase distributed
-    // prefix sum (q93's orderedCumsum); the metric formulas are unchanged.
+    // (q231's recipe) or swaps the window for the OrderedScan kernel's
+    // sum; the metric formulas are unchanged.
 
     // ---- q228: ROC AUC (tie-adjusted Mann–Whitney, integer 2U) ---------
     // q228 ROC AUC via the tie-adjusted Mann–Whitney U, carried as

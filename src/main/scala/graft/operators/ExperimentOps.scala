@@ -117,23 +117,22 @@ object ExperimentOps extends QueryModule {
     // replay the event stream in arrival order and find the first
     // moment the log-likelihood ratio for "purchase rate is 0.22"
     // vs "0.18" crosses the ±ln19 bounds — i.e. when the experiment
-    // COULD have stopped. The running LLR rides the two-phase
-    // distributed prefix sum (TextOps.orderedCumsum), never a
-    // single-partition window.
+    // COULD have stopped. The running LLR rides the ordered-scan
+    // kernel's sum (OrderedScan), never a single-partition window.
     // Each event contributes one of two constant micro-nat increments;
-    // the running sum in arrival order (dense event_id) uses the
-    // range-partitioned two-phase cumsum, so no corpus-sized sort ever
-    // lands on one reducer. First crossing of ±ln19 (α=β=0.05) gives
-    // the decision and the sample fraction it needed; 'continue' if
-    // the walk never leaves the bounds. Driver state: two scalar rows.
+    // the running sum in arrival order (dense event_id) is range-
+    // partitioned, so no corpus-sized sort ever lands on one reducer.
+    // First crossing of ±ln19 (α=β=0.05) gives the decision and the
+    // sample fraction it needed; 'continue' if the walk never leaves
+    // the bounds. Driver state: two scalar rows.
     "q304_sprt_audit" -> ((s, d) => {
       val ev = table(s, d, "events").select(col("event_id"),
         expr("CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END")
           .as("hit"))
         .withColumn("v",
           expr(s"CASE WHEN hit = 1 THEN $LnHit ELSE $LnMiss END"))
-      val cum = TextOps.orderedCumsum(ev, Seq("event_id"), "v",
-        "llr_micro")
+      val cum = OrderedScan.scan(ev, Seq(col("event_id")),
+          OrderedScan.Sum(col("v")), "llr_micro").df
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val tot = cum.agg(count(lit(1)).as("n_total"),
         max("event_id").as("last_id"))
@@ -425,19 +424,23 @@ object ExperimentOps extends QueryModule {
     // sorted-scan form of nearest-neighbor matching, O(n log n) not
     // O(n²). The closer side wins (tie → backward). ATT = mean
     // treated-minus-matched post spend; the mean match gap rides along
-    // as the match-quality readout. The neighbor reads run through
-    // [[OrderedScan.neighborScan]] — the two-phase range-partitioned
-    // scan (round-7's sf1 run measured the previous single global
-    // Window.orderBy at 24.4× for 10× data: the whole user frame
-    // funnelled through one task); now every stage is n/P-bounded and
-    // the hash is unchanged.
+    // as the match-quality readout. The neighbor reads are two
+    // OrderedScan last-non-null folds, the forward one over the
+    // reversed order (round-7's sf1 run measured the previous single
+    // global window at 24.4× for 10× data: the whole user frame
+    // funnelled through one task); every stage is n/P-bounded. A
+    // treated row never carries, so the inclusive folds read the
+    // strictly earlier / later control.
     "q342_matching_att" -> ((s, d) => {
       val u = userFrame(s, d)
         .select(col("user_id").as("uid"), col("x"), col("y"), col("t"))
       val control = when(col("t") === 0,
         struct(col("x").as("cx"), col("y").as("cy")))
-      val matched = OrderedScan
-        .neighborScan(u, Seq("x", "t", "uid"), control, "_b", "_f")
+      val ord = Seq(col("x"), col("t"), col("uid"))
+      val back = OrderedScan.scan(u, ord, OrderedScan.LastNonNull(control),
+        "_b").df
+      val matched = OrderedScan.scan(back, ord.map(_.desc),
+          OrderedScan.LastNonNull(control), "_f").df
         .withColumn("bx", col("_b.cx"))
         .withColumn("by", col("_b.cy"))
         .withColumn("fx", col("_f.cx"))

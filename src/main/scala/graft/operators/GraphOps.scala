@@ -752,7 +752,7 @@ object GraphOps extends QueryModule {
     // corpus into SGNS training pairs as a map-only job. Each pair
     // gets one negative drawn by hash over the INDEXED vocabulary
     // (row_number over node ids here; at corpus scale the index comes
-    // from the two-phase distributed rank — q93's orderedCumsum —
+    // from the OrderedScan kernel's sum of 1 — q116's row number —
     // with identical output, so the global window below is a
     // gate-scale convenience, not the plan). The negative join is a
     // broadcast at this vocab size, a plain hash join at billions of

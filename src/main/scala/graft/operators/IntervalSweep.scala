@@ -25,9 +25,9 @@ import org.apache.spark.sql.functions._
   * isNew only in its start range — in later ranges it is a CARRY: it
   * enters the active set (it can be the earlier side of a pair) but
   * never matches as the later side, so each pair is counted exactly
-  * once, in the later-starting island's range (the carry-join posture
-  * of OrderedScan.neighborScan, without a second pass: the carry set
-  * here is derivable per-row from the island's own span). Carries sort
+  * once, in the later-starting island's range (the carry-in posture
+  * of OrderedScan, without a summary pass: the carry set here is
+  * derivable per-row from the island's own span). Carries sort
   * before any new island of their range (their start precedes the range
   * boundary), so the active set is complete before the first match.
   *

@@ -128,14 +128,15 @@ object LayoutOps extends QueryModule {
     // doc = one file of n_chars bytes) in key order into ~4000-byte
     // output bins. A file's bin is where its FIRST byte lands in the
     // exclusive running total — next-fit packing, deterministic, and
-    // expressible as one distributed prefix sum (orderedCumsum: range
-    // partition + local window + broadcast offsets — no single-partition
-    // window over the file listing, which at 100 TB is itself millions
-    // of rows). Output is the per-bin manifest a rewrite job consumes.
+    // expressible as one distributed prefix sum (the OrderedScan
+    // kernel's sum — no single-partition window over the file listing,
+    // which at 100 TB is itself millions of rows). Output is the
+    // per-bin manifest a rewrite job consumes.
     "q213_compaction_plan" -> ((s, d) => {
       val files = table(s, d, "documents")
         .select(col("doc_id"), col("n_chars").as("bytes"))
-      TextOps.orderedCumsum(files, Seq("doc_id"), "bytes", "cum")
+      OrderedScan.scan(files, Seq(col("doc_id")),
+          OrderedScan.Sum(col("bytes")), "cum").df
         .withColumn("bin", expr("(cum - bytes) div 4000"))
         .groupBy("bin")
         .agg(count(lit(1)).as("n_files"), sum("bytes").as("bytes_total"),
@@ -607,7 +608,7 @@ object LayoutOps extends QueryModule {
     // range-partitioned write produces) — no global row_number sort, so
     // the simulation itself scales.
     // Coordinates: a = l_partkey % 256, b = l_suppkey % 256. Layouts
-    // assign each row to a "file" by VALUE (what repartitionByRange +
+    // assign each row to a "file" by VALUE (what a range-partitioned
     // write produces): zorder file = z div 256 (256 curve segments),
     // lex file = a (leading column ranges), round-robin file =
     // l_orderkey % 256 (ingestion order, no clustering). Per file the

@@ -1,96 +1,157 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Distributed global-order neighbor scans — the two-phase
-  * range-partitioned generalization of [[TextOps.orderedCumsum]] /
-  * `AnalyticsOps.strictPrefixMaxDesc` to arbitrary non-null "carrier"
-  * payloads. The round-7 sf1 scale-up measured the naive form of this
-  * shape — ONE `Window.orderBy` over the whole frame — at 24.4× for 10×
-  * data (q342: every row funnels through a single task); this helper is
-  * the replacement used wherever a query needs "nearest non-null row
-  * before/after me in a global sort order".
+/** The one ordered-scan kernel: a running fold over a GLOBAL sort order
+  * without a single-partition window. The naive form — one
+  * `Window.orderBy` over the whole frame — sends every row through one
+  * task; the round-7 sf1 scale-up measured it at 24.4× the time for 10×
+  * the data (q342). Prefix sums, strict prefix maxima, row numbers and
+  * "nearest non-null row before/after me" all run here instead.
   *
-  * Phase 1: `repartitionByRange(orderCols)` spreads the frame across
-  * range-contiguous partitions; a PER-PARTITION window (partitionBy the
-  * partition id) computes the local backward last-non-null and forward
-  * first-non-null carrier — n/P rows per task at any corpus size.
-  * Phase 2: a P-row per-partition summary (last/first non-null carrier
-  * of each partition) is self-joined (P² pairs, trivially small) to
-  * derive each partition's cross-partition carry-in from EARLIER
-  * (backward) / LATER (forward) partitions, broadcast back, and
-  * coalesced under the local result. No single-partition exchange over
-  * the data frame at any stage; correctness is independent of the
-  * sampled range boundaries (any split yields the same coalesce).
+  * Contract:
+  *  - `order` (after the fold's group columns, which lead) must be a
+  *    TOTAL order: unique per row. On ties the fold's order among the
+  *    tied rows is whatever the range partitioner and sort leave, so
+  *    the result is not deterministic.
+  *  - Null semantics are SQL's: a null value adds nothing. [[Sum]] and
+  *    [[StrictMax]] are null until the first non-null value of the
+  *    prefix (the group's prefix, for a grouped sum), and [[LastNonNull]]
+  *    is null until the first non-null value. [[Sum]] and [[StrictMax]]
+  *    take a LONG value.
+  *  - A reverse scan is the same fold over the reversed order: "first
+  *    non-null at or after me" is [[LastNonNull]] over `order` with
+  *    every column `.desc` (ascending nulls-first reverses to descending
+  *    nulls-last).
+  *
+  * Mechanism: range-partition and sort on the order, then PIN the sorted
+  * partitions with an eager `localCheckpoint`. Pass 1 folds each pinned
+  * partition into one summary row (its first and last group key and the
+  * fold of its last group), collected to the driver: O(P) rows for P
+  * partitions, grouped sums included, because only a partition's first
+  * and last group can span a boundary. The driver turns the summaries
+  * into each partition's carry-in. Pass 2 folds each pinned partition
+  * again, starting from its carry-in. Both passes are narrow maps over
+  * ONE materialization, so they read one partition assignment by
+  * construction: a live plan would re-run the range exchange per action
+  * with freshly sampled boundaries (RangePartitioner seeds by rdd.id),
+  * and a row near a boundary could then get another partition's carry.
+  * The sort is the checkpoint's ROOT: under an opaque map the
+  * optimizer's EliminateSorts drops a sort no parent requires (observed
+  * as a nondeterministic q304 walk). Every task holds n/P rows and O(1)
+  * fold state at any corpus size.
+  *
+  * The checkpoint's blocks belong to the query: Spark's ContextCleaner
+  * drops them once the result is unreachable, which
+  * `GraftSession.releaseQueryCaches` prompts with its collection.
   */
 object OrderedScan {
 
-  /** Adds `bwOut` = last non-null `carrier` over the inclusive prefix
-    * and `fwOut` = first non-null `carrier` over the strict suffix of
-    * the global (orderCols)-order, distributed as described above.
-    * `orderCols` must be a total order (unique per row); `carrier` is
-    * any expression that is null on rows that do not "emit" a neighbor
-    * value (e.g. `when(col("t") === 0, struct(x, y))` for control-row
-    * payloads).
-    */
-  def neighborScan(df: DataFrame, orderCols: Seq[String], carrier: Column,
-      bwOut: String, fwOut: String): DataFrame = {
-    // Internal working columns take collision-free names: withColumn on
-    // a name the caller already uses would silently REPLACE the caller's
-    // column (and the final drop would delete it) instead of failing.
-    def fresh(base: String): String = Iterator.iterate(base)(_ + "_")
-      .dropWhile(n => df.columns.contains(n) || n == bwOut || n == fwOut)
+  /** A running fold; `value` is evaluated once per input row. */
+  sealed trait Fold { def value: Column }
+
+  /** Inclusive running sum of a LONG `value`, restarting at each key of
+    * `groups`. The scan orders by `groups` before the order columns, so
+    * a group's rows are contiguous, and a large group still spreads
+    * over many partitions. */
+  final case class Sum(value: Column, groups: Seq[String] = Nil)
+    extends Fold
+
+  /** Strict running max of a LONG `value`: the max over every EARLIER
+    * row, null on the first row. */
+  final case class StrictMax(value: Column) extends Fold
+
+  /** Inclusive last non-null `value`: the latest non-null value at or
+    * before the row. Any type. */
+  final case class LastNonNull(value: Column) extends Fold
+
+  /** The scan's output: the input's columns in their order plus `out`
+    * (nullable), and `last`, the fold's value after the final row (the
+    * grand total of an ungrouped sum), read off the collected summaries
+    * at no extra job; null when the frame is empty. */
+  final case class Scanned(df: DataFrame, last: Any)
+
+  /** Per non-empty partition: its first and last group key and the
+    * fold of its last group. */
+  private final case class Summary(
+      pid: Int, first: Seq[Any], last: Seq[Any], fold: Any)
+
+  /** Adds `out` = `fold` over `order` to `df`, as described above. */
+  def scan(df: DataFrame, order: Seq[Column], fold: Fold,
+      out: String): Scanned = {
+    require(!df.columns.contains(out), s"column $out already exists")
+    // The fold value rides as one internal column, named so it cannot
+    // replace a caller's column.
+    val vN = Iterator.iterate("_v")(_ + "_").dropWhile(df.columns.contains)
       .next()
-    val (cN, pidN, lbN, lfN, cbN, cfN) = (fresh("_c"), fresh("_pid"),
-      fresh("_lb"), fresh("_lf"), fresh("_cb"), fresh("_cf"))
-    val oc = orderCols.map(col)
-    val ranged = df
-      .withColumn(cN, carrier)
-      .repartitionByRange(oc: _*)
-      .sortWithinPartitions(oc: _*)
-      .withColumn(pidN, spark_partition_id())
-    val w = Window.partitionBy(pidN).orderBy(oc: _*)
-    val bw = w.rowsBetween(Window.unboundedPreceding, 0)
-    val fw = w.rowsBetween(1, Window.unboundedFollowing)
-    val local0 = ranged
-      .withColumn(lbN, last(col(cN), ignoreNulls = true).over(bw))
-      .withColumn(lfN, first(col(cN), ignoreNulls = true).over(fw))
-    // Phase-2 correctness needs the summary subtree and the final join
-    // to observe ONE pid assignment. The range exchange appears in both
-    // subtrees; under the default exchange reuse (spark.sql.exchange
-    // .reuse; AQE's stage reuse likewise) it is planned and executed
-    // once, which pins the sampled range boundaries and hence every
-    // row's pid. A session that disables reuse would re-sample the
-    // boundaries per subtree and could assign pids divergently — pin
-    // the materialization explicitly with a localCheckpoint there.
-    val reuseOn = df.sparkSession.conf
-      .get("spark.sql.exchange.reuse", "true").toBoolean
-    val local = if (reuseOn) local0 else local0.localCheckpoint()
-    // Per-partition extremes among carrier rows: order cols lead the
-    // struct so lexicographic max/min = last/first in partition order.
-    val keyed = when(col(cN).isNotNull,
-      struct(oc :+ col(cN).as(cN): _*))
-    val summary = local.groupBy(pidN)
-      .agg(max(keyed).as("_mx"), min(keyed).as("_mn"))
-    // Carry-ins from a P² self-join (P = shuffle partition count): the
-    // backward carry of partition i is the latest carrier of any
-    // partition j < i; forward symmetric. Empty/carrier-free partitions
-    // contribute nulls, which max/min ignore.
-    val carryB = summary.as("s")
-      .join(summary.as("p"), col(s"p.$pidN") < col(s"s.$pidN"))
-      .groupBy(col(s"s.$pidN").as(pidN))
-      .agg(max(col("p._mx")).as(cbN))
-    val carryF = summary.as("s")
-      .join(summary.as("p"), col(s"p.$pidN") > col(s"s.$pidN"))
-      .groupBy(col(s"s.$pidN").as(pidN))
-      .agg(min(col("p._mn")).as(cfN))
-    local
-      .join(broadcast(carryB), Seq(pidN), "left_outer")
-      .join(broadcast(carryF), Seq(pidN), "left_outer")
-      .withColumn(bwOut, coalesce(col(lbN), col(cbN).getField(cN)))
-      .withColumn(fwOut, coalesce(col(lfN), col(cfN).getField(cN)))
-      .drop(cN, pidN, lbN, lfN, cbN, cfN)
+    val (groups, strict, op): (Seq[String], Boolean, (Any, Any) => Any) =
+      fold match {
+        case Sum(_, g) => (g, false,
+          (a, b) => a.asInstanceOf[Long] + b.asInstanceOf[Long])
+        case StrictMax(_) => (Nil, true,
+          (a, b) => math.max(a.asInstanceOf[Long], b.asInstanceOf[Long]))
+        case LastNonNull(_) => (Nil, false, (_, b) => b)
+      }
+    val keys = groups.map(col) ++ order
+    val ranged = df.withColumn(vN, fold.value)
+      .repartitionByRange(keys: _*)
+      .sortWithinPartitions(keys: _*)
+      .localCheckpoint(true)
+    val vIdx = ranged.schema.fieldIndex(vN)
+    val vType = ranged.schema(vIdx).dataType
+    require(fold.isInstanceOf[LastNonNull] || vType == LongType,
+      s"$fold needs a LONG value, got $vType")
+    val gIdx = groups.map(ranged.schema.fieldIndex)
+    val key: Row => Seq[Any] = r => gIdx.map(r.get)
+    // null is the fold's identity: a null value adds nothing
+    val add: (Any, Any) => Any =
+      (a, b) => if (a == null) b else if (b == null) a else op(a, b)
+
+    // pass 1: one summary row per non-empty partition
+    val summaries = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
+      if (!it.hasNext) Iterator.empty
+      else {
+        val r0 = it.next()
+        val first = key(r0)
+        var k = first
+        var acc = r0.get(vIdx)
+        it.foreach { r =>
+          val kr = key(r)
+          if (kr != k) { k = kr; acc = null }
+          acc = add(acc, r.get(vIdx))
+        }
+        Iterator(Summary(pid, first, k, acc))
+      }
+    }.collect().sortBy(_.pid)
+    // carry-in of each partition: the fold of its first group over all
+    // earlier partitions (several, when a group spans them)
+    var lastKey: Seq[Any] = null
+    var carry: Any = null
+    val carryIn = summaries.map { s =>
+      val in = if (s.first == lastKey) carry else null
+      carry = if (s.first == s.last) add(in, s.fold) else s.fold
+      lastKey = s.last
+      s.pid -> in
+    }.toMap
+
+    // pass 2: re-fold each partition from its carry-in; the row's value
+    // slot (the last field) becomes `out`
+    val rows = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
+      var acc = carryIn.getOrElse(pid, null)
+      var k: Seq[Any] = null
+      it.map { r =>
+        val kr = key(r)
+        if (k != null && kr != k) acc = null
+        k = kr
+        val before = acc
+        acc = add(acc, r.get(vIdx))
+        Row.fromSeq(r.toSeq.updated(vIdx, if (strict) before else acc))
+      }
+    }
+    val schema = StructType(df.schema.fields :+
+      StructField(out, vType, nullable = true))
+    Scanned(df.sparkSession.createDataFrame(rows, schema), carry)
   }
 }

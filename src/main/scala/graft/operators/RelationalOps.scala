@@ -1442,8 +1442,7 @@ object RelationalOps extends QueryModule {
     // Maximum simultaneous open intervals per day (each event held open
     // 600 s) — the classic sweep line: +1/−1 boundary points, running
     // sum over the GLOBAL time order, max per day. The global running
-    // sum is the distributed two-phase prefix sum (range partition →
-    // partition-local window → broadcast per-partition offsets), so no
+    // sum is the ordered-scan kernel's sum (OrderedScan), so no
     // single-partition window ever sees the corpus — the same
     // machinery as q93/q113/q116. Ends sort before starts at the same
     // second (delta −1 < +1), giving half-open [s, e) semantics.
@@ -1454,7 +1453,8 @@ object RelationalOps extends QueryModule {
       val pts = ev.select(col("sec").as("t"), lit(1L).as("delta"), col("eid"))
         .unionByName(ev.select((col("sec") + 600).as("t"),
           lit(-1L).as("delta"), col("eid")))
-      TextOps.orderedCumsum(pts, Seq("t", "delta", "eid"), "delta", "conc")
+      OrderedScan.scan(pts, Seq(col("t"), col("delta"), col("eid")),
+          OrderedScan.Sum(col("delta")), "conc").df
         .groupBy(expr("t div 86400").as("day"))
         .agg(max("conc").as("peak"), count(lit(1)).as("n_points"))
     }),

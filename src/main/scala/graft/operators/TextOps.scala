@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.TimestampNTZType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables.table
+import graft.operators.OrderedScan.{Sum, scan}
 import graft.operators.TextKernel.{
   adjacentPairs, bands, bucketPairs, ngrams, segments, shingles, signatures,
   words}
@@ -416,9 +417,8 @@ object TextOps extends QueryModule {
     // ---- token-budget training shards ----------------------------------
     // Pack documents into ~fixed-token-budget shards in a deterministic
     // hash order — what a training data loader consumes. Needs a GLOBAL
-    // running token total; computed with the two-phase orderedCumsum
-    // (range partition + local window + broadcast offsets), never a
-    // single-partition window.
+    // running token total; computed with the ordered-scan kernel's sum
+    // (OrderedScan), never a single-partition window.
     "q93_token_shards" -> ((s, d) => {
       val budget = 2000L
       val docs = table(s, d, "documents")
@@ -426,7 +426,8 @@ object TextOps extends QueryModule {
           size(words(col("text"))).cast("long").as("n_tokens"))
         .withColumn("ord",
           md5(concat(lit("seed42:"), col("doc_id").cast("string"))))
-      orderedCumsum(docs, Seq("ord", "doc_id"), "n_tokens", "cum")
+      scan(docs, Seq(col("ord"), col("doc_id")), Sum(col("n_tokens")), "cum")
+        .df
         .withColumn("shard",
           floor((col("cum") - col("n_tokens"))
             .cast("double") / budget).cast("long"))
@@ -685,9 +686,9 @@ object TextOps extends QueryModule {
     // Data-mixture construction: each source contributes documents in a
     // deterministic hash order until its token budget fills (greedy
     // prefix — the last doc may straddle the boundary). The running
-    // per-source total uses groupedOrderedCumsum: the grouped variant
-    // of the q93 two-phase prefix sum, so no source ever funnels
-    // through a single-partition window regardless of its size.
+    // per-source total is the ordered-scan kernel's sum grouped by
+    // source, so no source ever funnels through a single-partition
+    // window regardless of its size.
     "q103_source_mixture" -> ((s, d) => {
       val budget = 3000L
       val docs = table(s, d, "documents")
@@ -695,8 +696,8 @@ object TextOps extends QueryModule {
           size(words(col("text"))).cast("long").as("n_tokens"))
         .withColumn("ord",
           md5(concat(lit("mix:"), col("doc_id").cast("string"))))
-      groupedOrderedCumsum(docs, Seq("source"), Seq("ord", "doc_id"),
-          "n_tokens", "cum")
+      scan(docs, Seq(col("ord"), col("doc_id")),
+          Sum(col("n_tokens"), Seq("source")), "cum").df
         .filter(col("cum") - col("n_tokens") < budget)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
@@ -849,18 +850,16 @@ object TextOps extends QueryModule {
     // ---- deterministic global shuffle (epoch permutation) --------------
     // The "shuffle the corpus once per epoch, reproducibly" loader
     // contract: a stable global position for every doc under a seeded
-    // md5 order. The position is the distributed orderedCumsum of 1
-    // (range partition + local prefix sums + broadcast offsets) — a
-    // total-order row_number with NO single-partition window, so the
-    // permutation costs one range shuffle at any corpus size and is
-    // identical however the input was partitioned.
+    // md5 order. The position is the ordered-scan kernel's sum of 1
+    // (OrderedScan) — a total-order row_number with NO single-partition
+    // window, so the permutation costs one range shuffle at any corpus
+    // size and is identical however the input was partitioned.
     "q116_epoch_shuffle" -> ((s, d) => {
       val docs = table(s, d, "documents")
         .select(col("doc_id"), col("source"))
         .withColumn("ord",
           md5(concat(lit("epoch7:"), col("doc_id").cast("string"))))
-        .withColumn("one", lit(1L))
-      orderedCumsum(docs, Seq("ord", "doc_id"), "one", "pos")
+      scan(docs, Seq(col("ord"), col("doc_id")), Sum(lit(1L)), "pos").df
         .select(col("doc_id"), col("source"), (col("pos") - 1).as("pos"))
     }),
 
@@ -907,10 +906,9 @@ object TextOps extends QueryModule {
     // deterministic shuffled order and cut into fixed 512-token
     // sequences; each doc's manifest row says which sequences it lands
     // in (docs straddle cut points — that's the point of packing). The
-    // global offset is the distributed orderedCumsum (range-partition +
-    // partition-local prefix sums + tiny offset broadcast), so there is
-    // no single-partition window anywhere and the manifest is a pure
-    // map over the cumsum output at any corpus size.
+    // global offset is the ordered-scan kernel's sum (OrderedScan), so
+    // there is no single-partition window anywhere and the manifest is
+    // a pure map over the running total at any corpus size.
     "q113_pack_manifest" -> ((s, d) => {
       val seqLen = 512L
       val docs = table(s, d, "documents")
@@ -919,7 +917,8 @@ object TextOps extends QueryModule {
         .filter(col("n_tokens") > 0)
         .withColumn("ord",
           md5(concat(lit("pack:"), col("doc_id").cast("string"))))
-      orderedCumsum(docs, Seq("ord", "doc_id"), "n_tokens", "cum")
+      scan(docs, Seq(col("ord"), col("doc_id")), Sum(col("n_tokens")), "cum")
+        .df
         .select(col("doc_id"), col("n_tokens"),
           floor((col("cum") - col("n_tokens")).cast("double") / seqLen)
             .cast("long").as("start_seq"),
@@ -2129,21 +2128,21 @@ object TextOps extends QueryModule {
       // k >= max length: ranks now order by the FULL suffix; identical
       // suffixes from different docs tie — break by (doc_id, pos) for the
       // total suffix-array order, again with the distributed rank
-      orderedCumsum(cur.withColumn("one", lit(1L)),
-        Seq("r", "doc_id", "pos"), "one", "sa")
+      scan(cur, Seq(col("r"), col("doc_id"), col("pos")), Sum(lit(1L)), "sa")
+        .df
         .select(col("doc_id"), col("pos"), (col("sa") - 1L).as("rank"))
   }
 
   /** Distributed dense rank of `df` by `keys`, plus the DISTINCT-KEY
-    * COUNT for free: rank the DISTINCT key tuples with the two-phase
-    * range-partitioned prefix sum (the key set is at most the row count
-    * and usually far smaller — small enough that AQE turns the
-    * join-back into a broadcast, so the full table pays only the
-    * distinct's map-side-combined exchange), then join the ranks back.
-    * The count comes from the cumsum's own per-partition totals, which
-    * [[orderedCumsum]] already collects driver-side to build offsets —
-    * iterative callers (suffix-array convergence) previously ran a
-    * whole distinct().count() job per round just to observe it.
+    * COUNT for free: rank the DISTINCT key tuples with the ordered-scan
+    * kernel's sum of 1 (the key set is at most the row count and usually
+    * far smaller — small enough that AQE turns the join-back into a
+    * broadcast, so the full table pays only the distinct's
+    * map-side-combined exchange), then join the ranks back. The count
+    * is the scan's grand total, read off the per-partition summaries it
+    * collects anyway — iterative callers (suffix-array convergence)
+    * previously ran a whole distinct().count() job per round just to
+    * observe it.
     *
     * (r11 note: a "fused" single-range-pass dense rank over the full
     * table was tried and MEASURED SLOWER — it forces a range exchange +
@@ -2152,149 +2151,10 @@ object TextOps extends QueryModule {
     * a broadcast join-back.) */
   private def denseRankBy(
       df: DataFrame, keys: Seq[String], out: String): (DataFrame, Long) = {
-    val (ranked0, nDistinct) = orderedCumsumWithTotal(
-      df.select(keys.map(col): _*).distinct().withColumn("_one", lit(1L)),
-      keys, "_one", out)
-    val ranked = ranked0.select((keys.map(col) :+ col(out)): _*)
-    (df.join(ranked, keys), nDistinct)
-  }
-
-  /** Global running total over a total order WITHOUT a single-partition
-    * window (the thing Resolve's id assignment also avoids): range-
-    * partition on the order key, partition-LOCAL prefix sums, then add
-    * each partition's starting offset (one tiny row per partition,
-    * collected into the driver and shipped back in the task closure —
-    * same O(#partitions) driver footprint as zipWithIndex). Result
-    * values depend only on the total order, not on where the sampled
-    * range boundaries land. */
-  def orderedCumsum(
-      df: DataFrame, orderCols: Seq[String], valueCol: String,
-      out: String): DataFrame =
-    orderedCumsumWithTotal(df, orderCols, valueCol, out)._1
-
-  /** [[orderedCumsum]] plus the GRAND TOTAL of `valueCol`, read off the
-    * per-partition totals the two-phase scheme collects driver-side
-    * anyway — callers that need the sum (e.g. the dense-rank key count
-    * driving suffix-array convergence) get it with zero extra jobs.
-    *
-    * Both passes are NARROW maps over ONE materialized range exchange
-    * (the local prefix sum is a sorted-iterator fold, the offset
-    * lookup a closure map) — the r10 shape ran a window partitioned by
-    * spark_partition_id(), whose hash exchange re-shuffled the entire
-    * table a second time, plus a broadcast join to attach offsets; per
-    * call that was 4 exchange executions and 2 window sorts.
-    *
-    * The eager localCheckpoint between the sort and the two passes is
-    * LOAD-BEARING, twice over: (1) without a parent that requires the
-    * ordering (the old window did; an opaque mapPartitions does not),
-    * the optimizer's EliminateSorts DROPS the sortWithinPartitions and
-    * the fold runs over unsorted rows — observed as a nondeterministic
-    * q304 llr walk; as the checkpoint execution's ROOT the sort cannot
-    * be elided. (2) The totals pass and the output pass are separate
-    * actions; on a live plan each would re-run the range exchange with
-    * freshly-sampled boundaries (RangePartitioner seeds by rdd.id), so
-    * a row near a boundary could land in different partitions in the
-    * two passes and be double-counted against the offsets. Reading
-    * both passes from the same materialized blocks makes the
-    * boundary-consistency guarantee structural instead of assumed.
-    * The fold adds value rows in ascending key order, so emitted
-    * values are bit-identical to the window sum (valueCol is non-null
-    * at every call site; the window form was null-propagating where
-    * this treats null as 0 — no caller passes nulls). */
-  def orderedCumsumWithTotal(
-      df: DataFrame, orderCols: Seq[String], valueCol: String,
-      out: String): (DataFrame, Long) = {
-    val ranged = df
-      .repartitionByRange(orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-      .localCheckpoint(true)
-    val vIdx = ranged.schema.fieldIndex(valueCol)
-    val spark = df.sparkSession
-    import spark.implicits._
-    // pass 1: one (pid, total) row per partition, collected
-    val totals = ranged.mapPartitions { it =>
-      var s = 0L
-      var any = false
-      it.foreach { r => any = true; if (!r.isNullAt(vIdx)) s += r.getLong(vIdx) }
-      if (any) Iterator((org.apache.spark.TaskContext.getPartitionId(), s))
-      else Iterator.empty
-    }.collect().sortBy(_._1)
-    // pid -> sum of all earlier partitions' totals (robust to gaps
-    // from empty partitions)
-    val offsets = totals.map(_._1)
-      .zip(totals.map(_._2).scanLeft(0L)(_ + _)).toMap
-    // pass 2: emit rows with the running total (offset + local fold)
-    val outSchema = org.apache.spark.sql.types.StructType(
-      ranged.schema.fields :+ org.apache.spark.sql.types.StructField(
-        out, org.apache.spark.sql.types.LongType, nullable = true))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val result = ranged.mapPartitions({ it =>
-      var acc = offsets.getOrElse(
-        org.apache.spark.TaskContext.getPartitionId(), 0L)
-      it.map { r =>
-        if (!r.isNullAt(vIdx)) acc += r.getLong(vIdx)
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ acc)
-      }
-    })(enc)
-    (result, totals.map(_._2).sum)
-  }
-
-  /** Per-GROUP running total over a per-group total order — the grouped
-    * generalization of [[orderedCumsum]]. Range-partition on (group,
-    * order) so each group's rows are contiguous across partitions,
-    * prefix-sum LOCALLY per (partition, group), then add the group's
-    * running offset from earlier partitions (one tiny row per
-    * (partition, group) collected and broadcast back). No group is ever
-    * confined to one partition, so a skewed giant source still spreads
-    * across the cluster. */
-  def groupedOrderedCumsum(
-      df: DataFrame, groupCols: Seq[String], orderCols: Seq[String],
-      valueCol: String, out: String): DataFrame = {
-    val rangeCols = (groupCols ++ orderCols).map(col)
-    val ranged = df
-      .repartitionByRange(rangeCols: _*)
-      .sortWithinPartitions(rangeCols: _*)
-      .withColumn("_pid", spark_partition_id())
-    val localW = Window
-      .partitionBy((col("_pid") +: groupCols.map(col)): _*)
-      .orderBy(orderCols.map(col): _*)
-    val withLocal = ranged
-      .withColumn("_local", sum(col(valueCol)).over(localW))
-    // one row per (partition, group): that partition's total for the
-    // group. Collected driver-side (O(partitions × groups-per-boundary),
-    // tiny) to build each group's cross-partition prefix offsets.
-    val totals = withLocal
-      .groupBy(("_pid" +: groupCols).map(col): _*)
-      .agg(max("_local").as("_total"))
-      .collect()
-      .map(r => (r.getInt(0),
-        groupCols.indices.map(i => r.get(i + 1)).toList,
-        r.getLong(groupCols.size + 1)))
-    val offsets = totals
-      .groupBy(_._2)
-      .toSeq
-      .flatMap { case (g, rows) =>
-        val sorted = rows.sortBy(_._1)
-        sorted.map(_._1)
-          .zip(sorted.map(_._3).scanLeft(0L)(_ + _))
-          .map { case (pid, off) => (pid, g) -> off }
-      }
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offsetRows = offsets.toSeq.map { case ((pid, g), off) =>
-      org.apache.spark.sql.Row.fromSeq(pid +: g :+ off)
-    }
-    val offsetSchema = org.apache.spark.sql.types.StructType(
-      withLocal.schema("_pid") +:
-        groupCols.map(c => df.schema(c)) :+
-        org.apache.spark.sql.types.StructField("_offset",
-          org.apache.spark.sql.types.LongType, nullable = false))
-    val offsetDf = broadcast(spark.createDataFrame(
-      spark.sparkContext.parallelize(offsetRows, 1), offsetSchema))
-    withLocal.join(offsetDf, "_pid" +: groupCols, "left_outer")
-      .withColumn(out,
-        col("_local") + coalesce(col("_offset"), lit(0L)))
-      .drop("_pid", "_local", "_offset")
+    val ranked = scan(df.select(keys.map(col): _*).distinct(),
+      keys.map(col), Sum(lit(1L)), out)
+    val nDistinct = ranked.last match { case n: Long => n; case _ => 0L }
+    (df.join(ranked.df, keys), nDistinct)
   }
 
   /** DuckDB reference for the LSH signatures: one row per document,

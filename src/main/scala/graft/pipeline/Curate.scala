@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{GraphOps, TextOps}
+import graft.operators.{GraphOps, OrderedScan, TextOps}
 import graft.operators.TextKernel.{shingles, signatures, words}
 
 /** End-to-end training-data curation: the individual operators
@@ -88,10 +88,11 @@ object Curate {
     // 5) token-budget shards over a deterministic hash order (two-phase
     //    distributed prefix sum — no single-partition window), then one
     //    sharded write
-    val sharded = TextOps.orderedCumsum(
+    val sharded = OrderedScan.scan(
       clean.withColumn("ord",
         md5(concat(lit("curate:"), col("doc_id").cast("string")))),
-      Seq("ord", "doc_id"), "n_tokens", "cum")
+      Seq(col("ord"), col("doc_id")), OrderedScan.Sum(col("n_tokens")), "cum")
+      .df
       .withColumn("shard",
         floor((col("cum") - col("n_tokens")).cast("double") / shardTokens)
           .cast("long"))

@@ -82,15 +82,16 @@ class DedupOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("groupedOrderedCumsum equals a single-window per-group prefix sum") {
-    val docs = graft.Tables.table(spark, sf, "documents")
+    // the session's range exchange keeps 7 coarsely sampled partitions,
+    // so cross-partition offsets and groups that straddle partition
+    // boundaries are actually exercised
+    val ranged = OrderedScanSpec.boundarySession(spark)
+    val docs = graft.Tables.table(ranged, sf, "documents")
       .select(col("doc_id"), col("source"),
         col("n_chars").cast("long").as("v"))
       .withColumn("ord", md5(col("doc_id").cast("string")))
-      // force several range partitions so cross-partition offsets and
-      // groups that straddle partition boundaries are actually exercised
-      .repartition(7)
-    val two = TextOps.groupedOrderedCumsum(
-      docs, Seq("source"), Seq("ord", "doc_id"), "v", "cum")
+    val two = OrderedScan.scan(docs, Seq(col("ord"), col("doc_id")),
+        OrderedScan.Sum(col("v"), Seq("source")), "cum").df
       .select("doc_id", "cum").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val w = org.apache.spark.sql.expressions.Window

@@ -31,12 +31,15 @@ class HotBucketSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("orderedCumsum is exact and independent of input partitioning") {
-    import spark.implicits._
+    // on a session whose range exchange cuts the 500 rows into several
+    // partitions, so the carried offsets are exercised
+    val ranged = OrderedScanSpec.boundarySession(spark)
+    import ranged.implicits._
     import org.apache.spark.sql.functions._
     val base = (1L to 500L).map(i => (i, i % 7 + 1)).toDF("k", "v")
     def run(df: org.apache.spark.sql.DataFrame) =
-      TextOps.orderedCumsum(df, Seq("k"), "v", "cum")
-        .select("k", "cum").collect()
+      OrderedScan.scan(df, Seq(col("k")), OrderedScan.Sum(col("v")), "cum")
+        .df.select("k", "cum").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expected = (1L to 500L)
       .scanLeft((0L, 0L)) { case ((_, acc), k) => (k, acc + k % 7 + 1) }
