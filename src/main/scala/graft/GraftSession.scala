@@ -2,11 +2,22 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, classic}
 
-/** One-stop session factory for the engine: registers the native
-  * functions/optimizer rule and applies the configuration the engine's
-  * layouts rely on, so a user switching from the reference gets the
-  * intended plans without hunting for conf flags.
+/** One-stop session factory for the engine: installs the engine's
+  * extensions and applies the configuration the engine's layouts rely
+  * on, so a user switching from the reference gets the intended plans
+  * without hunting for conf flags.
   *
+  * `GraftExtensions` installs, in every session the builder makes:
+  * - the native functions `array_dot`, `nfc_normalize`, `aho_match`,
+  *   `simhash_planes`, `minhash_sigs` and `cdc_chunks`;
+  * - the optimizer rule `DotProductRewrite` (the `aggregate(zip_with)`
+  *   dot product becomes `array_dot`);
+  * - the optimizer rule `graft.io.Parquet.CountFromFooters`: a
+  *   whole-table count over a bare parquet table is answered from the
+  *   files' footers on the driver, with no Spark job;
+  * - the planner strategy `AsOfJoinStrategy`.
+  *
+  * The configuration:
   * - `spark.sql.requireAllClusterKeysForCoPartition=false`: the big
   *   serving tables are bucketed by `page_id` alone while the hot joins
   *   key on (page_id, raw_sha1); subset-key bucket reuse needs this off

@@ -136,6 +136,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.injections.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => DotProductRewrite)
+    ext.injectOptimizerRule(_ => graft.io.Parquet.CountFromFooters)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
 }

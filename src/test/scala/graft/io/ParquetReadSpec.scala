@@ -4,23 +4,18 @@ import java.io.FileOutputStream
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
-import scala.collection.mutable
-
 import com.github.luben.zstd.ZstdOutputStream
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.scalatest.BeforeAndAfterAll
-import org.scalatest.concurrent.Eventually
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.time.{Seconds, Span}
 
-import graft.{SparkTestSession, Tables}
+import graft.{JobDescriptions, SparkTestSession, Tables}
 import graft.pipeline.CitationPipeline
 
 /** `Parquet.read` gives the schema Spark's inference gives, without
   * the inference job, and leaves every case it does not cover to
   * Spark. */
-class ParquetReadSpec extends AnyFunSuite with BeforeAndAfterAll with Eventually {
+class ParquetReadSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -73,30 +68,10 @@ class ParquetReadSpec extends AnyFunSuite with BeforeAndAfterAll with Eventually
 
   test("opening a table through the helper runs no Spark job; spark.read.parquet runs one") {
     val path = s"$sf/lineitem.parquet"
-    val jobs = mutable.Buffer.empty[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        jobs += e.properties.getProperty("spark.job.description", "")
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobDescription("helper")
-      Parquet.read(spark, path)
-      sc.setJobDescription("spark")
-      spark.read.parquet(path)
-      // The bus delivers events in order, so once the second read's job
-      // has arrived, any job of the first read would have arrived too.
-      eventually(timeout(Span(30, Seconds))) {
-        assert(jobs.synchronized(jobs.contains("spark")))
-      }
-      // Jobs other threads start carry neither description.
-      assert(jobs.synchronized(jobs.filter(Set("helper", "spark")).toList) == List("spark"))
-    } finally {
-      sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
-    }
+    val jobs = JobDescriptions.of(spark)(
+      "helper" -> (() => Parquet.read(spark, path)),
+      "spark" -> (() => spark.read.parquet(path)))
+    assert(jobs == List("spark"))
   }
 
   /** A table directory of two files with different schemas. */
